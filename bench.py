@@ -23,12 +23,14 @@ sweeps on this VM disagree with best-of-N by up to ~3x (BENCH_NOTES
 round-5 reconciliation), so only artifacts produced under this
 protocol are comparable round-over-round.
 
-The sf10 point is expensive and therefore a committed SNAPSHOT: run
-``SPARK_GRAFT_HUGE=1 python bench.py`` to (re)measure it — the result
-is written to bench_huge.json (with the protocol and source commit
-recorded) and attached to bench_full.json as ``huge``. Ordinary runs
-re-attach the existing snapshot so the committed artifact stays
-machine-diffable round-over-round.
+The rungs above sf1 (LADDER: sf10, sf30, sf100) are expensive and
+therefore a committed SNAPSHOT: ``SPARK_GRAFT_HUGE=1 python bench.py``
+(re)measures sf10 and rewrites bench_huge.json (with the protocol and
+source commit recorded); ``SPARK_GRAFT_GIANT=1`` / ``SPARK_GRAFT_
+COLOSSAL=1`` measure sf30 / sf100 into its ``giant`` / ``colossal``
+sections. The snapshot is attached to bench_full.json as ``huge``;
+ordinary runs re-attach the existing one so the committed artifact
+stays machine-diffable round-over-round.
 """
 
 from __future__ import annotations
@@ -157,24 +159,24 @@ GIANT_SEL = [
     "q10_returned_revenue",
 ]
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
+# the snapshot rungs above sf1: (env flag, generated point, replication
+# factor of sf0.1, queries besides BUCKETED, bench_huge.json section —
+# None is the file's top level). sf30 adds a third point to the
+# "ratio falls with scale" trend, sf100 a fourth decade that catches
+# layout pathologies invisible below it (the sf30 small-file explosion
+# was invisible at sf10).
+LADDER = (
+    ("SPARK_GRAFT_HUGE", "sf10", 100, HUGE_SEL, None),
+    ("SPARK_GRAFT_GIANT", "sf30", 300, GIANT_SEL, "giant"),
+    ("SPARK_GRAFT_COLOSSAL", "sf100", 1000, GIANT_SEL, "colossal"),
 )
 
 
 def _shuffle_width(point_bytes: int) -> int:
-    """~1 shuffle partition per 8 MB of input, clamped to [8, 2048],
-    FLOORED at the declared core count (round 12, VERDICT r11 task 2):
-    the r11 scaling probe read ≈1 for every 8-vs-32-core ratio because
+    """~1 shuffle partition per 8 MB of input, FLOORED at the declared
+    core count (round 12, VERDICT r11 task 2) and at 8, then clamped
+    to 2048 last so no core count can push the width past the cap.
+    The r11 scaling probe read ≈1 for every 8-vs-32-core ratio because
     sf0.1 sizes to 8 partitions — 8 and 32 cores then run the same
     8-wide stages and the probe cannot distinguish a serial engine
     from an overhead-bound scale point. Flooring at $SPARK_GRAFT_CPUS
@@ -182,7 +184,7 @@ def _shuffle_width(point_bytes: int) -> int:
     comparison measures parallelism. (Measurement change declared in
     OPTIMIZATION_r12.md with before/after headline numbers.)"""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 0) or 0)
-    return max(8, cpus, min(2048, point_bytes // (8 * 1024 * 1024)))
+    return min(2048, max(8, cpus, point_bytes // (8 * 1024 * 1024)))
 
 
 def _dir_bytes(sf_dir: str) -> int:
@@ -219,7 +221,11 @@ def _prepare_point(spark, sf_dir: str) -> None:
 
 
 def _duck_con(sf_dir: str):
+    """In-process DuckDB with one view per table parquet in sf_dir —
+    the oracle side of the bench and of tools/check_oracle.py."""
     import duckdb
+
+    from data_pipeline_001_spark.session import TABLES
 
     con = duckdb.connect()
     for t in TABLES:
@@ -299,6 +305,28 @@ def _git_commit(repo_root: str) -> str | None:
         return None
 
 
+def _rung(spark, qs, oracles, repo_root: str, name: str, factor: int, names):
+    """Generate (once) and measure one scale-ladder rung: ``names``
+    plus the BUCKETED twins under the one protocol. None when the
+    point cannot be generated."""
+    gen_dir = _ensure_generated(repo_root, name, factor)
+    if not gen_dir:
+        return None
+    _prepare_point(spark, gen_dir)
+    con = _duck_con(gen_dir)
+    t, duck = _interleaved_point(spark, con, qs, oracles, gen_dir, names)
+    bkt_t, bkt_duck = _interleaved_point(spark, con, qs, oracles, gen_dir, BUCKETED)
+    con.close()
+    return {
+        "sf": f"{name[2:]}({factor}x-replicated-sf0.1)",
+        "measured_at_commit": _git_commit(repo_root),
+        "protocol": PROTOCOL,
+        "total_s": round(sum(t.values()), 3),
+        "per_query": _per_query(t, duck),
+        "bucketed": _per_query(bkt_t, bkt_duck),
+    }
+
+
 def main() -> None:
     repo_root = os.path.dirname(os.path.abspath(__file__))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -342,168 +370,50 @@ def main() -> None:
     con.close()
 
     if os.environ.get("SPARK_GRAFT_BIG", "1") != "0":
-        big_dir = _ensure_generated(repo_root, "sf1", 10)
-        if big_dir:
-            _prepare_point(spark, big_dir)
-            bcon = _duck_con(big_dir)
-            big_t, big_duck = _interleaved_point(
-                spark, bcon, qs, oracles, big_dir, HEADLINE
-            )
-            # bucketed twins at the big point: same oracle rows, fact
-            # join + per-order agg on the bucket layout (no shuffle)
-            bkt_t, bkt_duck = _interleaved_point(
-                spark, bcon, qs, oracles, big_dir, BUCKETED
-            )
-            bcon.close()
+        big = _rung(spark, qs, oracles, repo_root, "sf1", 10, HEADLINE)
+        if big:
             result["big"] = {
-                "sf": "1(10x-replicated-sf0.1)",
-                "total_s": round(sum(big_t.values()), 3),
-                "per_query": _per_query(big_t, big_duck),
-                "bucketed": _per_query(bkt_t, bkt_duck),
+                k: big[k] for k in ("sf", "total_s", "per_query", "bucketed")
             }
 
-    # the 100x point (sf10, ~1.7 GB): where the data, not the
-    # scheduler, is the workload. Expensive, so it is a committed
-    # SNAPSHOT: SPARK_GRAFT_HUGE=1 re-measures and rewrites
-    # bench_huge.json; otherwise the existing snapshot is re-attached
-    # so bench_full.json stays machine-diffable round-over-round.
+    # sf10 and up are expensive, so they are committed SNAPSHOTS in
+    # bench_huge.json: ``huge`` is the file's top level, ``giant`` and
+    # ``colossal`` are sections merged into it. Each env flag =1
+    # re-measures its rung; otherwise the existing snapshot is
+    # re-attached so bench_full.json stays machine-diffable
+    # round-over-round.
     huge_path = os.path.join(repo_root, "bench_huge.json")
-    if os.environ.get("SPARK_GRAFT_HUGE", "0") == "1":
-        huge_dir = _ensure_generated(repo_root, "sf10", 100)
-        if huge_dir:
-            _prepare_point(spark, huge_dir)
-            hcon = _duck_con(huge_dir)
-            huge_t, huge_duck = _interleaved_point(
-                spark, hcon, qs, oracles, huge_dir, HUGE_SEL
-            )
-            hbkt_t, hbkt_duck = _interleaved_point(
-                spark, hcon, qs, oracles, huge_dir, BUCKETED
-            )
-            hcon.close()
-            snapshot = {
-                "sf": "10(100x-replicated-sf0.1)",
-                "measured_at_commit": _git_commit(repo_root),
-                "protocol": PROTOCOL,
-                "total_s": round(sum(huge_t.values()), 3),
-                "per_query": _per_query(huge_t, huge_duck),
-                "bucketed": _per_query(hbkt_t, hbkt_duck),
-            }
-            with open(huge_path, "w") as fh:
-                json.dump(snapshot, fh, indent=1)
-            result["huge"] = snapshot
-    elif os.path.exists(huge_path):
+    if os.environ.get("SPARK_GRAFT_HUGE", "0") != "1" and os.path.exists(
+        huge_path
+    ):
         try:
             with open(huge_path) as fh:
                 result["huge"] = json.load(fh)
         except (OSError, ValueError) as exc:
             print(f"bench_huge.json unreadable: {exc}", file=sys.stderr)
-
-    # the 300x point (sf30, ~5 GB): a THIRD scale point for the four
-    # >2x-vs-DuckDB headliners, turning the "ratio falls with scale"
-    # claim from one data point (sf1→sf10) into a trend. Also a
-    # committed snapshot: SPARK_GRAFT_GIANT=1 re-measures and writes
-    # the ``giant`` section INTO bench_huge.json so the whole scale
-    # ladder lives in one machine-readable artifact.
-    if os.environ.get("SPARK_GRAFT_GIANT", "0") == "1":
-        # fail FAST on a missing huge snapshot — the section merges
-        # into bench_huge.json, so generating + measuring for hours
-        # before discovering there is nothing to merge into is the
-        # round-10 advice's ordering flaw
-        if not result.get("huge"):
+    for env, name, factor, names, section in LADDER:
+        if os.environ.get(env, "0") != "1":
+            continue
+        if section and not result.get("huge"):
+            # fail FAST: a section merges into bench_huge.json, so
+            # generating + measuring for hours before discovering
+            # there is nothing to merge into is wasted work
             print(
-                "bench_huge.json missing/unreadable — giant section "
+                f"bench_huge.json missing/unreadable — {section} section "
                 "would have nowhere to merge (run SPARK_GRAFT_HUGE=1 "
-                "first); skipping giant measurement",
+                f"first); skipping {section} measurement",
                 file=sys.stderr,
             )
-            giant_dir = None
+            continue
+        snapshot = _rung(spark, qs, oracles, repo_root, name, factor, names)
+        if not snapshot:
+            continue
+        if section:
+            result["huge"][section] = snapshot
         else:
-            giant_dir = _ensure_generated(repo_root, "sf30", 300)
-        if giant_dir:
-            _prepare_point(spark, giant_dir)
-            gcon = _duck_con(giant_dir)
-            g_t, g_duck = _interleaved_point(
-                spark, gcon, qs, oracles, giant_dir, GIANT_SEL
-            )
-            gbkt_t, gbkt_duck = _interleaved_point(
-                spark, gcon, qs, oracles, giant_dir, BUCKETED
-            )
-            gcon.close()
-            giant = {
-                "sf": "30(300x-replicated-sf0.1)",
-                "measured_at_commit": _git_commit(repo_root),
-                "protocol": PROTOCOL,
-                "total_s": round(sum(g_t.values()), 3),
-                "per_query": _per_query(g_t, g_duck),
-                "bucketed": _per_query(gbkt_t, gbkt_duck),
-            }
-            snap = result.get("huge") or {}
-            if not snap:
-                # never rewrite bench_huge.json down to only a "giant"
-                # key: losing the huge snapshot's top-level schema
-                # (sf/per_query/protocol) would break round-over-round
-                # diffing. Re-measure the huge point first.
-                print(
-                    "bench_huge.json missing/unreadable — giant section "
-                    "NOT merged (run SPARK_GRAFT_HUGE=1 first)",
-                    file=sys.stderr,
-                )
-            else:
-                snap["giant"] = giant
-                with open(huge_path, "w") as fh:
-                    json.dump(snap, fh, indent=1)
-                result["huge"] = snap
-
-    # the 1000x point (sf100, ~17 GB): a FOURTH decade for the same
-    # four headliners. Round-8's "every bucketed ratio falls" claim
-    # rested on single-day sf30 runs with a documented ±40% cross-day
-    # spread; sf100 either confirms the bucket-merge floor stays flat
-    # for another decade or catches the next layout pathology (the
-    # sf30 small-file explosion was invisible at sf10). Committed
-    # snapshot like the others: SPARK_GRAFT_COLOSSAL=1 measures and
-    # writes the ``colossal`` section into bench_huge.json.
-    if os.environ.get("SPARK_GRAFT_COLOSSAL", "0") == "1":
-        # same fail-fast ordering as the giant block above
-        if not result.get("huge"):
-            print(
-                "bench_huge.json missing/unreadable — colossal section "
-                "would have nowhere to merge (run SPARK_GRAFT_HUGE=1 "
-                "first); skipping colossal measurement",
-                file=sys.stderr,
-            )
-            col_dir = None
-        else:
-            col_dir = _ensure_generated(repo_root, "sf100", 1000)
-        if col_dir:
-            _prepare_point(spark, col_dir)
-            ccon = _duck_con(col_dir)
-            c_t, c_duck = _interleaved_point(
-                spark, ccon, qs, oracles, col_dir, GIANT_SEL
-            )
-            cbkt_t, cbkt_duck = _interleaved_point(
-                spark, ccon, qs, oracles, col_dir, BUCKETED
-            )
-            ccon.close()
-            colossal = {
-                "sf": "100(1000x-replicated-sf0.1)",
-                "measured_at_commit": _git_commit(repo_root),
-                "protocol": PROTOCOL,
-                "total_s": round(sum(c_t.values()), 3),
-                "per_query": _per_query(c_t, c_duck),
-                "bucketed": _per_query(cbkt_t, cbkt_duck),
-            }
-            snap = result.get("huge") or {}
-            if not snap:
-                print(
-                    "bench_huge.json missing/unreadable — colossal section "
-                    "NOT merged (run SPARK_GRAFT_HUGE=1 first)",
-                    file=sys.stderr,
-                )
-            else:
-                snap["colossal"] = colossal
-                with open(huge_path, "w") as fh:
-                    json.dump(snap, fh, indent=1)
-                result["huge"] = snap
+            result["huge"] = snapshot
+        with open(huge_path, "w") as fh:
+            json.dump(result["huge"], fh, indent=1)
 
     # Full rich result goes to a sidecar (the driver captures only a
     # ~2000-char stdout tail, so a fat JSON line gets truncated and

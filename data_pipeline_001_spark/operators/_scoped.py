@@ -1,89 +1,30 @@
-"""Bounded-intermediate materialization with a QUERY-bounded
-lifetime (guide §5 "unpersist when done").
+"""The one persist policy for bounded operator intermediates.
 
-Round-11's aged-session finding: operator-level ``persist()`` entries
-accumulate in the CacheManager for the SESSION lifetime — a 308-query
-sweep measured up to 3.5x degradation on late queries purely from
-cache pressure. The operators return lazy frames, so no operator can
-unpersist after "its" action (the action belongs to the caller).
+Several operators reference one intermediate from more than one plan
+branch (per-doc signature tables, gram tables, oriented edge lists,
+covariance partials). Re-derived lazily, every branch would re-run
+the whole build, so the intermediate is persisted once at
+``MEMORY_AND_DISK`` (spills rather than OOMs at corpus scale) and
+every branch reads the cached columnar relation.
 
-Two designs were measured this round (tools/ab_cache2_r12.py):
+The persist lasts for the session. The operators return lazy frames
+and the action belongs to the caller, so no operator can unpersist
+after "its" action. The CacheManager still stays bounded: re-running a
+query re-persists an identical plan, which Spark recognises as already
+cached, so a long-lived session holds one entry per distinct
+intermediate, not one per run (``tests/test_scoped_cache.py``).
 
-- ``localCheckpoint``: blocks are GC-released, but (a) the row-RDD
-  scan loses the columnar InMemoryRelation re-read speed (+7% on
-  dedup_substring_spans, +12% on graph_triangle_stats), and (b) under
-  AQE, ``Dataset.localCheckpoint`` — eager OR lazy — materializes
-  every upstream query stage at CONSTRUCTION time
-  (``AdaptiveSparkPlanExec.execute`` computes the final plan), which
-  turns ten registry queries into construction-job builders and
-  breaks the static sf1 plan gate (the round-8 70-CPU-minute explain
-  pathology). Rejected.
-
-- ``persist`` + RELEASE AT THE NEXT QUERY BOUNDARY (this module):
-  every ``bounded_intermediate`` persist is registered here, and the
-  ``@query`` registry wrapper calls ``release_stale()`` before
-  constructing the next query — by which point every sequential
-  caller (driver, bench, sweep, oracle gate) has finished the prior
-  query's actions. Within one query, any number of operators can
-  materialize intermediates; they all stay live until the next query
-  is constructed. The CacheManager therefore holds at most ONE
-  query's bounded intermediates instead of the whole session's.
-
-Callers that bypass the registry (unit tests driving operators
-directly, streaming sinks maintaining their own state) keep the
-round-11 behavior: the persist lives until they release it or the
-session ends — bounded by their own short lifetimes.
-
-``RELEASE`` exists for the round-12 aged-session canary
-(tools/aged_canary_r12.py) to reproduce the round-11 leak through the
-same code path; ``USE_CHECKPOINT`` keeps the measured-and-rejected
-variant reachable for the A/B harness.
+A lazy ``localCheckpoint`` and a per-query release were both measured
+and not adopted (``OPTIMIZATION_r12.md`` §2 has the numbers).
 """
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
-
-USE_CHECKPOINT = False
-RELEASE = True
-
-_LIVE: list[DataFrame] = []
-_PENDING: list[DataFrame] = []
-_LOCK = threading.Lock()
 
 
 def bounded_intermediate(df: DataFrame) -> DataFrame:
     """Materialize-once semantics for a bounded operator intermediate
-    that several plan branches reference (per-doc signature tables,
-    gram tables, oriented edge lists). See module docstring."""
-    if USE_CHECKPOINT:
-        return df.localCheckpoint(eager=False)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    with _LOCK:
-        _PENDING.append(df)
-    return df
-
-
-def release_stale() -> None:
-    """Unpersist intermediates registered before the previous query
-    boundary and promote the current batch. Called by the ``@query``
-    wrapper at query-construction time — two boundaries after a
-    persist is registered, every sequential caller has consumed it.
-    (One boundary is not enough: the bench constructs query N+1's
-    frame while query N's frame may still be re-executed in its
-    best-of-3 loop only in pathological callers; the two-phase hand-
-    off costs one extra query's worth of cache residency, nothing
-    else.)"""
-    if not RELEASE:
-        return
-    with _LOCK:
-        stale, _LIVE[:] = _LIVE[:], _PENDING[:]
-        _PENDING.clear()
-    for df in stale:
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — a dead session is not an error
-            pass
+    that several plan branches reference. See module docstring."""
+    return df.persist(StorageLevel.MEMORY_AND_DISK)

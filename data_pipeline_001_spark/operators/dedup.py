@@ -177,12 +177,8 @@ def minhash_lsh_pairs(
     per_doc = _minhash_per_doc(
         docs, text_col, id_col, num_hashes, shingle_words, seed
     )
-    # round-12 cache hygiene (guide §5): bounded_intermediate is a
-    # lazy localCheckpoint, not a persist — same one-materialization
-    # semantics, but the blocks are released when the caller drops the
-    # frame instead of living in the CacheManager for the session
-    # lifetime (the round-11 aged-session finding: up to 3.5x
-    # late-session degradation from accumulated operator persists)
+    # bounded_intermediate: a MEMORY_AND_DISK persist that lasts for
+    # the session (one entry per distinct plan; see operators/_scoped)
     from data_pipeline_001_spark.operators._scoped import (
         bounded_intermediate,
     )
@@ -503,10 +499,8 @@ def ngram_jaccard_pairs(
     # 2k slice) on exactly the quadratic stage. With the per-doc
     # table materialized and its stats known, the small side
     # broadcasts and the pairwise stage stays scan-parallel. Measured
-    # at the 2k slice: 30.0 → 7.6 s best-of-3. Round-12: persist →
-    # bounded_intermediate (localCheckpoint keeps the origin stats,
-    # so the broadcast decision survives; blocks are GC-released
-    # instead of accumulating in the CacheManager — guide §5).
+    # at the 2k slice: 30.0 → 7.6 s best-of-3. The persist lives in
+    # operators/_scoped.bounded_intermediate.
     from data_pipeline_001_spark.operators._scoped import (
         bounded_intermediate,
     )

@@ -111,8 +111,6 @@ def triangle_stats(edges: DataFrame, materialize: bool = True) -> DataFrame:
     # referenced twice below (adjacency build + probe side), and each
     # lazy re-derivation would re-run the degree aggregation (a full
     # union+groupBy over 2m rows) as well as the orientation joins.
-    # Round-12: persist → bounded_intermediate (GC-released blocks
-    # instead of a session-lifetime CacheManager entry — guide §5).
     from data_pipeline_001_spark.operators._scoped import (
         bounded_intermediate,
     )

@@ -707,7 +707,6 @@ def duplicated_substring_spans(
     # per-side column sets differ so ReusedExchange can't kick in —
     # materialize the (id, pos, hk) triples (longs only, never the
     # text) rather than re-running the Arrow hash pass per branch.
-    # Round-12: persist → bounded_intermediate (guide §5).
     from data_pipeline_001_spark.operators._scoped import (
         bounded_intermediate,
     )

@@ -81,8 +81,7 @@ def covariance_matrix(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     # the Gram/sum/count branches below would each re-derive this agg
     # — and Catalyst does NOT reuse the exchange across them (measured:
     # 4 full corpus scans in the executed plan). Materializing the tiny
-    # (d²+d+1)-row result pins the corpus scan to exactly one pass
-    # (round-12: localCheckpoint, not persist — guide §5).
+    # (d²+d+1)-row result pins the corpus scan to exactly one pass.
     agg = bounded_intermediate(
         _gram_partials(df, vec_col)
         .groupBy("i", "j")

@@ -190,8 +190,8 @@ def q05(spark, sf_dir):
     (5.46 s) — with no lineitem filter the pre-agg shuffles the whole
     fact for a 4× group reduction the map-side partial already gets.
 
-    Round-8 sf30 decomposition (tools/decompose_q05.py; full table in
-    BENCH_NOTES "Round 8"): scan floor 0.6 s, dim chain 0.5 s, orders
+    Round-8 sf30 decomposition (full table in BENCH_NOTES "Round
+    8"): scan floor 0.6 s, dim chain 0.5 s, orders
     join +1.9 s, lineitem join + rollup +15.7 s — and of that, the
     bare exchange of the projected fact (repartition-only twin) is
     9.9 s, i.e. ~60% of the query is shuffle materialization that any

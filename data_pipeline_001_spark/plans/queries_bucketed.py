@@ -485,7 +485,7 @@ def q05_bucketed(spark, sf_dir):
 # on orderkey but every customer-facing consumer (q03's customer
 # filter join, q05's nation rollup, q10's per-customer ranking) needs
 # o_custkey clustering — an irreducible ~1-row-per-order exchange that
-# three measured rewrites (r9-r10, tools/ab_sf100_dim.py) could not
+# three measured rewrites (r9-r10, BENCH_NOTES rounds 9-10) could not
 # remove. The structural fix is the storage-for-shuffle trade a 100 TB
 # deployment makes for its hottest join: carry o_custkey (plus
 # o_orderdate/o_orderpriority) ON the lineitem row at write time and

@@ -4,36 +4,36 @@ session factory's configs), every oracle key has a query, and a
 sample of queries runs at a different sf than the oracle gate uses."""
 
 import importlib.util
-import sys
+import os
 
 
-def _load_entry():
+def _load_entry(repo_root):
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry_test__", "/root/repo/__spark_entry__.py"
+        "__spark_entry_test__", os.path.join(repo_root, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
-def test_entry_runs_on_vanilla_session(spark):
-    mod = _load_entry()
+def test_entry_runs_on_vanilla_session(spark, repo_root):
+    mod = _load_entry(repo_root)
     df = mod.entry(spark)
     rows = df.collect()
     assert len(rows) > 0
     assert "sum_qty" in df.columns
 
 
-def test_oracle_keys_subset_of_queries():
-    mod = _load_entry()
+def test_oracle_keys_subset_of_queries(repo_root):
+    mod = _load_entry(repo_root)
     qs, oracles = mod.queries(), mod.oracle_sql()
     assert set(oracles) <= set(qs)
     assert len(qs) >= 80
     assert len(oracles) >= 70
 
 
-def test_queries_run_at_other_sf(spark):
-    mod = _load_entry()
+def test_queries_run_at_other_sf(spark, repo_root):
+    mod = _load_entry(repo_root)
     qs = mod.queries()
     for name in ["q01_pricing_summary", "dedup_exact_fingerprint", "time_spine_hourly"]:
         assert qs[name](spark, "/root/testdata/sf0.001").count() > 0

@@ -12,7 +12,7 @@ smaller than the probe), demoting honestly to SortMergeJoin when it
 can't. AQE re-plans joins from true runtime sizes, so only the
 AQE-final executed plan proves either claim — these tests execute the
 plans at the replicated sf1 point (~170 MB; sf10 via
-SPARK_GRAFT_EXECPLAN_SF=/root/repo/.benchdata/sf10) and assert on
+SPARK_GRAFT_EXECPLAN_SF=.benchdata/sf10) and assert on
 `queryExecution().executedPlan()` AFTER the run, making a silent
 strategy flip a suite failure instead of a bench regression.
 
@@ -29,11 +29,6 @@ import pytest
 
 pytestmark = pytest.mark.slow  # lane 2
 
-SF_EXEC = os.environ.get(
-    "SPARK_GRAFT_EXECPLAN_SF", "/root/repo/.benchdata/sf1"
-)
-_AT_SF1 = SF_EXEC.rstrip("/").endswith("sf1")
-
 
 @pytest.fixture(scope="module")
 def registry():
@@ -42,13 +37,27 @@ def registry():
     return entrymod.queries()
 
 
+@pytest.fixture(scope="module")
+def sf_exec(request):
+    """The point the pins execute at: the generated sf1 (built on
+    first use by the sf1_dir fixture), or $SPARK_GRAFT_EXECPLAN_SF."""
+    override = os.environ.get("SPARK_GRAFT_EXECPLAN_SF")
+    if not override:
+        return request.getfixturevalue("sf1_dir")
+    if not os.path.isdir(override):
+        pytest.skip(f"{override} not generated (run tools/make_benchdata.py)")
+    return override
+
+
+def _at_sf1(sf_exec: str) -> bool:
+    return sf_exec.rstrip("/").endswith("sf1")
+
+
 @pytest.fixture()
 def aqe_spark(spark):
     """The shared session with AQE forced on (the bench harness
     disables it below 1 GB input; these tests pin AQE-time behavior)
     and conf restored afterwards."""
-    if not os.path.isdir(SF_EXEC):
-        pytest.skip(f"{SF_EXEC} not generated (run tools/make_benchdata.py)")
     keys = (
         "spark.sql.adaptive.enabled",
         "spark.sql.autoBroadcastJoinThreshold",
@@ -73,13 +82,13 @@ def _final_plan(df) -> str:
     return s.split("== Initial Plan ==")[0]
 
 
-def _run(registry, spark, name):
-    df = registry[name](spark, SF_EXEC)
+def _run(registry, spark, name, sf_exec):
+    df = registry[name](spark, sf_exec)
     df.collect()  # headliners return <= 25 rows
     return _final_plan(df)
 
 
-def test_bucketed_headliners_execute_shuffle_free(aqe_spark, registry):
+def test_bucketed_headliners_execute_shuffle_free(aqe_spark, registry, sf_exec):
     """The orderkey-bucketed twins at execution time: q03's whole plan
     has ZERO shuffle exchanges; q05/q10 keep only their documented
     irreducible one (the 25-group n_name rollup / the per-custkey
@@ -93,7 +102,7 @@ def test_bucketed_headliners_execute_shuffle_free(aqe_spark, registry):
     # ceiling and the stats gate correctly demotes the dim join to a
     # shuffled hash join, adding the one custkey exchange q10's plan
     # always pays — measured and attributed in BENCH_NOTES round 9.
-    plan = _run(registry, aqe_spark, "q03_shipping_priority_bucketed")
+    plan = _run(registry, aqe_spark, "q03_shipping_priority_bucketed", sf_exec)
     assert "Exchange hashpartitioning" not in plan, plan
 
     # round-12: q05_bucketed pre-aggregates per customer before the
@@ -106,7 +115,7 @@ def test_bucketed_headliners_execute_shuffle_free(aqe_spark, registry):
         ("q05_nation_revenue_bucketed", ("o_custkey", "n_name")),
         ("q10_returned_revenue_bucketed", ("o_custkey",)),
     ):
-        plan = _run(registry, aqe_spark, name)
+        plan = _run(registry, aqe_spark, name, sf_exec)
         exchanges = [
             ln
             for ln in plan.splitlines()
@@ -122,13 +131,13 @@ def test_bucketed_headliners_execute_shuffle_free(aqe_spark, registry):
         for ln in exchanges:
             for key in ("l_orderkey", "o_orderkey"):
                 assert key not in ln, f"{name} shuffles bucket key: {ln}"
-        if _AT_SF1:
+        if _at_sf1(sf_exec):
             assert len(exchanges) == len(allowed_keys), f"{name}: {exchanges}"
             for ln in exchanges:
                 assert any(k in ln for k in allowed_keys), f"{name}: {ln}"
 
 
-def test_customer_join_above_ceiling_executes_scan_local(aqe_spark, registry):
+def test_customer_join_above_ceiling_executes_scan_local(aqe_spark, registry, sf_exec):
     """Round-10 (verdict task 1/5): when the customer dimension
     crosses the broadcast ceiling (the sf100 regime — planted here by
     a threshold below customer's sf1 size), the demoted partitioned
@@ -146,7 +155,7 @@ def test_customer_join_above_ceiling_executes_scan_local(aqe_spark, registry):
         "q05_nation_revenue_bucketed",
         "q10_returned_revenue_bucketed",
     ):
-        plan = _run(registry, aqe_spark, name)
+        plan = _run(registry, aqe_spark, name, sf_exec)
         exchanges = [
             ln
             for ln in plan.splitlines()
@@ -164,7 +173,7 @@ def test_customer_join_above_ceiling_executes_scan_local(aqe_spark, registry):
             )
 
 
-def test_plain_q05_fact_join_executes_as_shuffled_hash(aqe_spark, registry):
+def test_plain_q05_fact_join_executes_as_shuffled_hash(aqe_spark, registry, sf_exec):
     """The stats-gated SHJ default must actually bind at runtime: with
     a broadcast threshold the orders side exceeds (4 MB at sf1 — the
     sf10+ run keeps the 24 MB production value) but a per-partition
@@ -172,12 +181,12 @@ def test_plain_q05_fact_join_executes_as_shuffled_hash(aqe_spark, registry):
     the lineitem join executes as ShuffledHashJoin building the
     orders side, not SortMergeJoin — the round-8 lever that skips
     sorting the exchanged fact rows (-20% on q05 at sf30)."""
-    if _AT_SF1:
+    if _at_sf1(sf_exec):
         aqe_spark.conf.set(
             "spark.sql.autoBroadcastJoinThreshold", str(4 * 1024 * 1024)
         )
     aqe_spark.conf.set("spark.sql.shuffle.partitions", "32")
-    plan = _run(registry, aqe_spark, "q05_nation_revenue")
+    plan = _run(registry, aqe_spark, "q05_nation_revenue", sf_exec)
     shj = [
         ln for ln in plan.splitlines() if "ShuffledHashJoin" in ln
     ]
@@ -187,7 +196,7 @@ def test_plain_q05_fact_join_executes_as_shuffled_hash(aqe_spark, registry):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_oversized_build_side_demotes_to_sort_merge(aqe_spark, registry):
+def test_oversized_build_side_demotes_to_sort_merge(aqe_spark, registry, sf_exec):
     """The honest half of the SHJ gate: when canBuildLocalHashMap
     CANNOT prove the build side fits (threshold x partitions below the
     orders size — the planted stand-in for a 100 TB build side), the
@@ -197,6 +206,6 @@ def test_oversized_build_side_demotes_to_sort_merge(aqe_spark, registry):
         "spark.sql.autoBroadcastJoinThreshold", str(128 * 1024)
     )
     aqe_spark.conf.set("spark.sql.shuffle.partitions", "4")
-    plan = _run(registry, aqe_spark, "q05_nation_revenue")
+    plan = _run(registry, aqe_spark, "q05_nation_revenue", sf_exec)
     assert "SortMergeJoin" in plan, plan
     assert "ShuffledHashJoin" not in plan, plan

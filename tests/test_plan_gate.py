@@ -95,7 +95,7 @@ def test_no_scale_killers_in_any_registered_plan(spark, registry):
 
 
 @pytest.mark.slow
-def test_gate_holds_at_replicated_sf1(spark, registry):
+def test_gate_holds_at_replicated_sf1(spark, registry, sf1_dir):
     """Round-9 (verdict task 5): the sf1 gate now covers the WHOLE
     registry except the justified construction-job builders
     (pg.DRIVER_JOB_BUILDERS — explaining those at sf1 executes their
@@ -105,21 +105,15 @@ def test_gate_holds_at_replicated_sf1(spark, registry):
     names, each justified, with membership enforced mechanically by
     the fast gate above. File-size statistics at ~170 MB differ
     enough from sf0.001 to flip broadcast decisions — a strategy
-    that only looks safe at toy scale is caught here. Skips loudly
-    when the generated benchdata is absent
-    (``tools/make_benchdata.py`` creates it)."""
-    import os
-
-    sf1 = "/root/repo/.benchdata/sf1"
-    if not os.path.isdir(sf1):
-        pytest.skip(f"{sf1} not generated (run tools/make_benchdata.py)")
+    that only looks safe at toy scale is caught here. The sf1_dir
+    fixture generates the point when it is missing."""
     sub = {
         n: fn
         for n, fn in registry.items()
         if n not in pg.DRIVER_JOB_BUILDERS
     }
     assert len(sub) >= 260, f"gated subset shrank unexpectedly: {len(sub)}"
-    violations, _, _ = _gate_all(spark, sub, sf1)
+    violations, _, _ = _gate_all(spark, sub, sf1_dir)
     assert not violations, "\n".join(
         f"{n}: {'; '.join(b)}" for n, b in sorted(violations.items())
     )

@@ -138,10 +138,10 @@ def test_ngram_novelty_distinct_grams(spark):
 
 def test_covariance_plan_no_python_row_udf(tables):
     """mapInPandas (Arrow-batched) is the only Python boundary — no
-    row-at-a-time BatchEvalPython anywhere. Round-12: the partial-agg
-    is materialized behind a local checkpoint, so the Arrow node is
-    asserted on the partials subtree (the final plan reads the
-    checkpoint) and the row-UDF absence on both."""
+    row-at-a-time BatchEvalPython anywhere. The partial-agg is
+    materialized behind a persist, so the Arrow node is asserted on
+    the partials subtree (the final plan reads the cached relation)
+    and the row-UDF absence on both."""
     from data_pipeline_001_spark.operators.vector_stats import (
         _gram_partials,
     )
@@ -154,23 +154,44 @@ def test_covariance_plan_no_python_row_udf(tables):
     assert "BatchEvalPython" not in plan
 
 
+def _ancestors(lines: list[str], i: int):
+    """The lines of line i's ancestors in a Spark tree string: each
+    nearer ancestor starts its node text further left."""
+    def col(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    depth = col(lines[i])
+    for j in range(i - 1, -1, -1):
+        if col(lines[j]) < depth:
+            depth = col(lines[j])
+            yield lines[j]
+
+
 def test_covariance_single_corpus_scan(tables):
-    """The n/s/G branches share one MATERIALIZED partial-agg (round-12:
-    a GC-scoped local checkpoint, previously a persist), so the corpus
-    parquet is computed once and every branch reads the checkpoint
-    boundary (4 independent corpus scans before the fix)."""
+    """The n/s/G branches share one MATERIALIZED partial-agg (a
+    persisted bounded intermediate), so the corpus parquet is computed
+    once and every branch reads the cache boundary (4 independent
+    corpus scans before the fix)."""
     df = covariance_matrix(tables["embeddings"])
     df.write.mode("overwrite").format("noop").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     # all three branches (Gram entries, per-dim sums, count) hit the
-    # materialized boundary, never the raw parquet directly
+    # materialized boundary ...
     cached_reads = (
         plan.count("InMemoryTableScan")
         + plan.count("TableCacheQueryStage")
         + plan.count("Scan ExistingRDD")
     )
     assert cached_reads >= 3, plan
-    assert "Scan parquet" not in plan, plan
+    # ... and the corpus scan appears only inside the cached
+    # relation's own plan, never on a branch that reads the parquet
+    lines = plan.splitlines()
+    scans = [i for i, ln in enumerate(lines) if "Scan parquet" in ln]
+    assert scans, plan
+    for i in scans:
+        assert any(
+            "InMemoryRelation" in a for a in _ancestors(lines, i)
+        ), f"corpus scan outside the cache boundary: {lines[i]}\n{plan}"
 
 
 def test_ngram_novelty_exchange_count(tables):

@@ -10,10 +10,11 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import traceback
 
-import duckdb
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def canon(df_pandas) -> tuple[int, list[str], str]:
@@ -50,8 +51,9 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
+    from bench import _duck_con
 
     if vanilla:
         # mimic the correctness driver EXACTLY: a bare session with
@@ -72,13 +74,7 @@ def main() -> int:
         spark = get_spark(shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = _duck_con(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -12,6 +12,7 @@ Usage: python tools/explain_audit.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
 
@@ -45,7 +46,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from data_pipeline_001_spark.session import get_spark
 

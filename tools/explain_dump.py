@@ -19,7 +19,7 @@ def main() -> int:
     sf_dir = rest[0] if rest and os.path.isdir(rest[0]) else "/root/testdata/sf0.1"
     names = rest[1:] if rest and os.path.isdir(rest[0]) else rest
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from data_pipeline_001_spark.session import get_spark
 

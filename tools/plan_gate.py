@@ -353,10 +353,11 @@ def existing_rdd_violations(df, bound: int = _MAX_BOUNDED_ROWS) -> list[str]:
 
 def gate_registry(sf_dir: str, only=None, verbose=True):
     """(violations, n_checked, n_bnlj_allowed) across the registry."""
+    import os
     import sys
     import time
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from data_pipeline_001_spark.session import get_spark
 

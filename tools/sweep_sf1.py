@@ -24,10 +24,12 @@ resume/twins/tail logic.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as mod
 from data_pipeline_001_spark.session import get_spark, load_tables
@@ -68,7 +70,7 @@ def main() -> None:
     for f in flags:
         if f.startswith("--only="):
             only = f.split("=", 1)[1].split(",")
-    sf_dir = args[0] if args else "/root/repo/.benchdata/sf1"
+    sf_dir = args[0] if args else os.path.join(REPO, ".benchdata", "sf1")
     out = args[1] if len(args) > 1 else "/tmp/sweep_sf1.json"
     if only is not None:
         _run_only(sf_dir, out, only)
