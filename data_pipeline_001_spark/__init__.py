@@ -12,8 +12,9 @@ Architecture stance (SURVEY.md §7):
 - Everything is a DataFrame transform; Catalyst/Tungsten pick the
   physical strategy.
 - The reference's 65-column Snowflake "drive table" becomes a
-  Parquet-backed control table with a read-modify-overwrite MERGE
-  layer (``plans.control_table``).
+  Parquet-backed control table whose state transitions are keyed
+  Arrow rewrites on the driver with an atomic directory swap
+  (``plans.control_table``); planners read it as a DataFrame.
 - Pipeline stages (source discovery → stage → target → audit) become
   DataFrame transforms behind a connector protocol (``sources``).
 - Custom code concentrates in the window planner, control-table

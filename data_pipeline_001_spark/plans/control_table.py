@@ -1,18 +1,33 @@
 """Control table — the reference's 65-column Snowflake "drive table"
-(core/state_manager.py:87-162) as a Parquet-backed Spark table with a
-read-modify-overwrite MERGE layer.
+(core/state_manager.py:87-162) as a Parquet directory whose mutations
+run on the driver through Arrow.
 
 One row per processing window; simultaneously work queue, lock, audit
 ledger, and backfill planner. Mutations M1..M7 (SURVEY.md §2.9) are
-conditional column rewrites — ``when(key∈ids, new).otherwise(old)`` —
-followed by an atomic directory swap (write-temp + rename), the lake
-equivalent of the reference's row-level ``UPDATE``.
+keyed column rewrites — ``if_else(key ∈ ids, new, old)`` over a
+``pyarrow.Table`` — followed by an atomic directory swap (write temp +
+rename), the lake equivalent of the reference's row-level ``UPDATE``.
+
+Storage contract: a flat, unpartitioned directory of Parquet files
+holding ``CONTROL_SCHEMA``. Timestamps are INT96 holding naive UTC
+values — what Spark writes by default — so Spark reads them as
+TIMESTAMP and DuckDB as a naive TIMESTAMP. Every mutation writes one
+``part-00000.parquet`` into a temp directory and renames it over the
+live one. A table Spark wrote (several part files, ``_SUCCESS``,
+``.crc``) is read as it is and becomes one file at its first mutation.
+``read()`` hands Spark a DataFrame for the planners (populate, pending
+selection, gap and duplicate detection); a state transition (claim,
+stage completion, failure, reset, delete) starts no Spark job. Only
+``append_records`` (the F9 md5 ids) and ``merge_audit_results`` (the
+batch-path join) compute in Spark, and both collect their result (one
+row per window) with ``toArrow()`` for the same writer.
 
 Scale posture: the control table holds one row per *window*, not per
-record — a year of hourly windows across 1000 pipelines is ~9M rows,
-trivially a single-digit-GB Parquet table. Reads are partition-pruned
-by ``query_window_start_day``; the full-rewrite MERGE stays cheap
-because the table is small relative to the data plane.
+record — a year of hourly windows across 1000 pipelines is ~9M rows.
+Every mutation reads and rewrites the whole table on the driver; one
+``complete_stage`` measured ~12 ms at 10 rows and ~0.26 s at 100k
+rows (4 cores), so a very large shared table wants one table per
+pipeline or per period.
 """
 
 from __future__ import annotations
@@ -22,6 +37,9 @@ import shutil
 import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -91,6 +109,27 @@ CONTROL_SCHEMA = T.StructType(
         T.StructField("count_difference_percentage", T.DoubleType()),
         T.StructField("accepted_tolerance_percentage", T.DoubleType()),
         T.StructField("count_match_status", T.StringType()),
+    ]
+)
+
+
+#: the Arrow form of CONTROL_SCHEMA that every write conforms to
+ARROW_SCHEMA = pa.schema(
+    [
+        pa.field(
+            f.name,
+            {
+                T.StringType: pa.string(),
+                T.BooleanType: pa.bool_(),
+                T.IntegerType: pa.int32(),
+                T.LongType: pa.int64(),
+                T.DoubleType: pa.float64(),
+                T.DateType: pa.date32(),
+                T.TimestampType: pa.timestamp("us"),
+            }[type(f.dataType)],
+            f.nullable,
+        )
+        for f in CONTROL_SCHEMA.fields
     ]
 )
 
@@ -165,23 +204,35 @@ class ControlTable:
     def create_if_not_exists(self) -> None:
         """S9: CREATE TABLE IF NOT EXISTS (state_manager.py:56-81)."""
         if not self.exists():
-            empty = self.spark.createDataFrame([], CONTROL_SCHEMA)
-            empty.write.mode("overwrite").parquet(self.path)
+            self._overwrite(ARROW_SCHEMA.empty_table())
 
     def read(self) -> DataFrame:
         self.create_if_not_exists()
         return self.spark.read.schema(CONTROL_SCHEMA).parquet(self.path)
 
-    def _overwrite(self, df: DataFrame) -> None:
+    def _table(self) -> pa.Table:
+        """The current state on the driver (files whose names start
+        with ``_`` or ``.`` — Spark's ``_SUCCESS`` and ``.crc`` — are
+        skipped)."""
+        if not self.exists():
+            return ARROW_SCHEMA.empty_table()
+        return pq.read_table(
+            self.path, schema=ARROW_SCHEMA, coerce_int96_timestamp_unit="us"
+        )
+
+    def _overwrite(self, table: pa.Table) -> None:
         """Atomic swap: write temp dir, rename over the live one.
 
         The lake replacement for the reference's transactional UPDATE;
         single-writer per the reference's concurrency model (R5).
         """
         tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        df.select([f.name for f in CONTROL_SCHEMA.fields]).write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        os.makedirs(tmp)
+        pq.write_table(
+            table.select(ARROW_SCHEMA.names).cast(ARROW_SCHEMA),
+            os.path.join(tmp, "part-00000.parquet"),
+            use_deprecated_int96_timestamps=True,
+        )
         old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
         if os.path.isdir(self.path):
             os.rename(self.path, old)
@@ -215,43 +266,38 @@ class ControlTable:
                 }
             ),
         )
-        self.create_if_not_exists()
-        # append as a second write then compact via overwrite keeps the
-        # swap atomic even on append
-        merged = self.read().unionByName(df)
-        self._overwrite(merged)
+        new = df.toArrow().select(ARROW_SCHEMA.names).cast(ARROW_SCHEMA)
+        self._overwrite(pa.concat_tables([self._table(), new]))
         return len(rows)
 
-    # -- generic conditional update (the MERGE kernel for M1..M5) ----------
+    # -- keyed conditional update (the MERGE kernel for M1..M4) ------------
 
-    def update_where(self, predicate, assignments: dict[str, object]) -> None:
-        """Rewrite columns for rows matching ``predicate``.
+    def update_where(
+        self,
+        ids: list[str],
+        assignments: dict[str, object],
+        key_col: str = "unique_source_id",
+    ) -> None:
+        """Rewrite columns on the rows whose ``key_col`` is in ``ids``.
 
-        ``assignments`` values are Columns or literals; every update
+        ``assignments`` values are literals or functions of the old
+        column (``_incremented`` for ``retry_count + 1``); every update
         also bumps ``record_last_updated_time`` (reference behavior —
         every UPDATE sets it).
         """
-        df = self.read()
-        assignments = dict(assignments)
-        assignments.setdefault("record_last_updated_time", F.lit(_utcnow()))
-        for col_name, value in assignments.items():
-            val = value if hasattr(value, "_jc") or hasattr(value, "_expr") else F.lit(value)
-            field_type = CONTROL_SCHEMA[col_name].dataType
-            df = df.withColumn(
-                col_name,
-                F.when(predicate, val.cast(field_type)).otherwise(F.col(col_name)),
-            )
-        self._overwrite(df)
+        table = self._table()
+        assignments = {"record_last_updated_time": _utcnow(), **assignments}
+        self._overwrite(_assign(table, _keyed(table, key_col, ids), assignments))
 
     # -- M1..M6 ------------------------------------------------------------
 
     def claim(self, unique_source_id: str, run_id: str | None = None) -> None:
         """M1: claim/lock — pending → in_progress (record_status_updater.py:12-31)."""
         self.update_where(
-            F.col("unique_source_id") == unique_source_id,
+            [unique_source_id],
             {
                 "pipeline_status": "in_progress",
-                "pipeline_start_time": F.lit(_utcnow()),
+                "pipeline_start_time": _utcnow(),
                 "unique_run_id": run_id or uuid.uuid4().hex,
             },
         )
@@ -279,20 +325,20 @@ class ControlTable:
             assign["pipeline_status"] = "completed"
             assign["pipeline_end_time"] = now
         assign.update(extra or {})
-        self.update_where(F.col("unique_source_id") == unique_source_id, assign)
+        self.update_where([unique_source_id], assign)
 
     def fail_stage(self, unique_source_id: str, stage: str, error: str) -> None:
         """M3: fail/reset one stage, retry_count+1
         (source_discovery_manager.py:154-175; record_status_updater.py:102-123)."""
         self.update_where(
-            F.col("unique_source_id") == unique_source_id,
+            [unique_source_id],
             {
                 f"{stage}_status": "pending",
                 f"{stage}_start_time": None,
                 f"{stage}_end_time": None,
                 "pipeline_status": "failed",
                 "pipeline_error_details": error[:4096],
-                "pipeline_retry_count": F.col("pipeline_retry_count") + 1,
+                "pipeline_retry_count": _incremented,
             },
         )
 
@@ -304,7 +350,7 @@ class ControlTable:
             "pipeline_start_time": None,
             "pipeline_end_time": None,
             "completed_stage_number": 0,
-            "pipeline_retry_count": F.col("pipeline_retry_count") + 1,
+            "pipeline_retry_count": _incremented,
             "count_match_status": "not_matched",
             "source_count": None,
             "target_count": None,
@@ -316,54 +362,28 @@ class ControlTable:
             assign[f"{s}_start_time"] = None
             assign[f"{s}_end_time"] = None
             assign[f"{s}_actual_duration_minutes"] = None
-        self.update_where(F.col("unique_source_id") == unique_source_id, assign)
+        self.update_where([unique_source_id], assign)
 
     def reset_stale_in_progress(self, unique_source_ids: list[str]) -> None:
         """M5: selective reset — only non-completed stages
         (invalid_progress_handler.py:106-167)."""
         if not unique_source_ids:
             return
-        pred = F.col("unique_source_id").isin(unique_source_ids)
-        df = self.read()
+        table = self._table()
+        picked = _keyed(table, "unique_source_id", unique_source_ids)
         for s in STAGES:
-            not_done = pred & (F.col(f"{s}_status") != "completed")
-            df = (
-                df.withColumn(
-                    f"{s}_status",
-                    F.when(not_done, F.lit("pending")).otherwise(F.col(f"{s}_status")),
-                )
-                .withColumn(
-                    f"{s}_start_time",
-                    F.when(not_done, F.lit(None).cast("timestamp")).otherwise(
-                        F.col(f"{s}_start_time")
-                    ),
-                )
-                .withColumn(
-                    f"{s}_end_time",
-                    F.when(not_done, F.lit(None).cast("timestamp")).otherwise(
-                        F.col(f"{s}_end_time")
-                    ),
-                )
+            not_done = pc.and_(picked, pc.not_equal(table[f"{s}_status"], "completed"))
+            table = _assign(
+                table,
+                not_done,
+                {f"{s}_status": "pending", f"{s}_start_time": None, f"{s}_end_time": None},
             )
-        df = (
-            df.withColumn(
-                "pipeline_status",
-                F.when(pred, F.lit("pending")).otherwise(F.col("pipeline_status")),
-            )
-            .withColumn(
-                "pipeline_retry_count",
-                F.when(pred, F.col("pipeline_retry_count") + 1).otherwise(
-                    F.col("pipeline_retry_count")
-                ),
-            )
-            .withColumn(
-                "record_last_updated_time",
-                F.when(pred, F.lit(_utcnow())).otherwise(
-                    F.col("record_last_updated_time")
-                ),
-            )
-        )
-        self._overwrite(df)
+        assignments = {
+            "pipeline_status": "pending",
+            "pipeline_retry_count": _incremented,
+            "record_last_updated_time": _utcnow(),
+        }
+        self._overwrite(_assign(table, picked, assignments))
 
     def delete_records(
         self, ids: list[str], key_col: str = "unique_source_id"
@@ -377,7 +397,8 @@ class ControlTable:
         """
         if not ids:
             return
-        self._overwrite(self.read().where(~F.col(key_col).isin(ids)))
+        table = self._table()
+        self._overwrite(table.filter(pc.invert(_keyed(table, key_col, ids))))
 
     def merge_audit_results(
         self, results: DataFrame, pipeline_name: str | None = None
@@ -459,4 +480,30 @@ class ControlTable:
             df = df.withColumn(
                 col_name, expr.cast(CONTROL_SCHEMA[col_name].dataType)
             )
-        self._overwrite(df.drop("_ws", "_sc", "_tc"))
+        self._overwrite(df.drop("_ws", "_sc", "_tc").toArrow())
+
+
+def _keyed(table: pa.Table, key_col: str, ids: list[str]) -> pa.ChunkedArray:
+    """Row mask: ``key_col`` is one of ``ids`` (a null key never matches)."""
+    return pc.is_in(table[key_col], value_set=pa.array(list(ids), pa.string()))
+
+
+def _incremented(col: pa.ChunkedArray) -> pa.ChunkedArray:
+    return pc.add(col, 1)
+
+
+def _assign(table: pa.Table, mask, assignments: dict[str, object]) -> pa.Table:
+    """Set each assigned column to its new value where ``mask`` holds
+    and keep the old value elsewhere (a null mask entry keeps it too,
+    like SQL ``CASE WHEN``)."""
+    mask = pc.fill_null(mask, False)
+    for name, value in assignments.items():
+        if isinstance(value, datetime):
+            # Spark takes a naive datetime as the process's local time
+            # on the way in and out; store the same UTC instant it would
+            value = value.astimezone(timezone.utc).replace(tzinfo=None)
+        i = table.schema.get_field_index(name)
+        old = table.column(i)
+        new = pc.cast(value(old), old.type) if callable(value) else pa.scalar(value, old.type)
+        table = table.set_column(i, ARROW_SCHEMA.field(name), pc.if_else(mask, new, old))
+    return table

@@ -668,17 +668,28 @@ class WindowPipeline:
             F.lit(1).alias("is_src"),
             F.lit(0).alias("is_tgt"),
         )
-        tgt = self.target_sink.read_all()
-        tgt_side = tgt.select(
-            F.to_timestamp(
-                F.concat_ws(
-                    " ",
-                    F.col("window_day").cast("string"),
-                    F.regexp_replace("window_start", "-", ":"),
-                )
-            ).alias("window_start"),
-            F.lit(0).alias("is_src"),
-            F.lit(1).alias("is_tgt"),
+        # the target side holds every day loaded so far; audit only the
+        # plan's windows (partition-pruned to the plan's days), or each
+        # earlier day would read as source_count = 0 and be cleaned and
+        # reset by the retry envelope below
+        tgt_side = (
+            self.target_sink.read_all()
+            .where(F.col("window_day").between(plan_start.date(), plan_end.date()))
+            .select(
+                F.to_timestamp(
+                    F.concat_ws(
+                        " ",
+                        F.col("window_day").cast("string"),
+                        F.regexp_replace("window_start", "-", ":"),
+                    )
+                ).alias("window_start"),
+                F.lit(0).alias("is_src"),
+                F.lit(1).alias("is_tgt"),
+            )
+            .where(
+                (F.col("window_start") >= F.lit(plan_start))
+                & (F.col("window_start") < F.lit(plan_end))
+            )
         )
         audit = (
             src_side.unionByName(tgt_side)
@@ -727,7 +738,7 @@ class WindowPipeline:
                 # the columnar write DID run the earlier stages; mirror
                 # the merge ok-path's stage bookkeeping for this row
                 self.control.update_where(
-                    F.col("unique_source_id") == row["unique_source_id"],
+                    [row["unique_source_id"]],
                     {f"{s}_status": "completed" for s in STAGES},
                 )
         # audit rows with no control row would otherwise vanish silently

@@ -25,6 +25,8 @@ from pyspark.sql import SparkSession
 #: partitions). Above it, skew splits and partition coalescing pay.
 AQE_MIN_INPUT_BYTES = 1 << 30
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def size_adaptive_execution(spark: SparkSession, input_bytes: int) -> None:
     """Set AQE to fit the workload's input size — the same
@@ -96,6 +98,10 @@ def get_spark(
         # nanosecond timestamp type — read as long and convert in
         # load_tables (µs truncation matches DuckDB's read of the file)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python workers unpickle UDFs that reference this package; put
+        # its parent directory on their path so they import it from any
+        # working directory, not only from the repository root
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,13 +1,20 @@
 """Control-table state machine tests (M1..M7, SURVEY.md §2.9):
 claim → complete ×4 → completed; fail; audit reset; selective stale
-reset; duplicate delete."""
+reset; duplicate delete; the storage contract (Spark and DuckDB read
+what the driver-side writer wrote, a Spark-written table is read and
+mutated, no swap directory is left) and the driver-only transitions."""
 
+import os
+import uuid
 from datetime import datetime, timedelta
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_pipeline_001_spark.plans.control_table import (
+    CONTROL_SCHEMA,
     STAGES,
     ControlTable,
     default_record,
@@ -108,3 +115,161 @@ def test_delete_records(ct, spark):
     sid = _row(ct)["unique_source_id"]
     ct.delete_records([sid])
     assert ct.read().count() == 0
+
+
+# -- storage contract: what Spark, DuckDB and the next mutation see --------
+
+
+def _record(hour: int, sid: str | None = None) -> dict:
+    rec = default_record(
+        "p1",
+        ("events", "file", "parquet"),
+        ("target", "file", "parquet"),
+        datetime(2024, 1, 2, hour), datetime(2024, 1, 2, hour + 1),
+        stage_path=f"2024-01-02/{hour:02d}-00",
+    )
+    if sid is not None:
+        rec["unique_source_id"] = sid
+        rec["unique_run_id"] = f"run-{sid}"
+    return rec
+
+
+def _by_id(rows) -> dict:
+    return {r["unique_source_id"]: r.asDict() for r in rows}
+
+
+def test_storage_contract_after_m1_to_m7(spark, tmp_path):
+    import duckdb
+
+    table = ControlTable(spark, str(tmp_path / "control"))
+    table.append_records([_record(h) for h in range(4)])  # M7
+    a, b, c, d = sorted(
+        table.read().collect(), key=lambda r: r["source_query_window_start_time"]
+    )
+    started = datetime(2024, 1, 2, 5, 6, 7, 890123)
+    table.claim(a["unique_source_id"], run_id="run-a")  # M1
+    table.complete_stage(  # M2
+        a["unique_source_id"], "source_discovery", started,
+        extra={"source_count": 42, "source_to_stage_expected_duration_minutes": 15},
+    )
+    table.claim(b["unique_source_id"])
+    table.fail_stage(b["unique_source_id"], "source_discovery", "boom")  # M3
+    table.claim(c["unique_source_id"])
+    table.complete_stage(c["unique_source_id"], "source_discovery", started)
+    table.reset_after_audit_mismatch(c["unique_source_id"])  # M4
+    table.claim(d["unique_source_id"])
+    table.complete_stage(d["unique_source_id"], "source_discovery", started)
+    table.reset_stale_in_progress([d["unique_source_id"]])  # M5
+    table.delete_records([b["unique_source_id"]])  # M6
+
+    df = table.read()
+    assert [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in CONTROL_SCHEMA.fields
+    ]
+    rows = _by_id(df.collect())
+    assert set(rows) == {a["unique_source_id"], c["unique_source_id"], d["unique_source_id"]}
+    ra, rc, rd = (rows[x["unique_source_id"]] for x in (a, c, d))
+    assert ra["unique_run_id"] == "run-a"
+    assert ra["pipeline_status"] == "in_progress"
+    assert ra["source_discovery_status"] == "completed"
+    assert ra["source_discovery_start_time"] == started
+    assert ra["source_count"] == 42
+    assert ra["source_to_stage_expected_duration_minutes"] == 15
+    assert ra["completed_stage_number"] == 1
+    assert ra["source_query_window_start_time"] == datetime(2024, 1, 2, 0)
+    assert ra["query_window_start_day"].isoformat() == "2024-01-02"
+    assert ra["record_last_updated_time"] >= ra["record_first_inserted_time"]
+    assert rc["count_match_status"] == "not_matched"
+    assert rc["pipeline_retry_count"] == 1
+    assert rc["source_discovery_start_time"] is None
+    assert rd["source_discovery_status"] == "completed"  # M5 keeps it
+    assert rd["source_discovery_start_time"] == started
+    assert rd["pipeline_status"] == "pending"
+    assert rd["pipeline_retry_count"] == 1
+
+    # DuckDB reads the same values, timestamps as naive TIMESTAMP
+    con = duckdb.connect()
+    rel = con.sql(f"SELECT * FROM read_parquet('{table.path}/*.parquet')")
+    types = dict(zip(rel.columns, (str(t) for t in rel.types)))
+    for f in CONTROL_SCHEMA.fields:
+        if isinstance(f.dataType, T.TimestampType):
+            assert types[f.name] == "TIMESTAMP", f.name
+    duck = {r[0]: dict(zip(rel.columns, r)) for r in rel.fetchall()}
+    assert duck == rows
+
+    # no swap directory is left next to the table; timestamps are INT96
+    assert os.listdir(tmp_path) == ["control"]
+    assert os.listdir(table.path) == ["part-00000.parquet"]
+    layout = pq.ParquetFile(os.path.join(table.path, "part-00000.parquet")).schema
+    for i, name in enumerate(layout.names):
+        if isinstance(CONTROL_SCHEMA[name].dataType, T.TimestampType):
+            assert layout.column(i).physical_type == "INT96", name
+
+
+def test_legacy_spark_written_table_is_read_and_mutated(spark, tmp_path):
+    path = str(tmp_path / "control")
+    rows = [_record(h, sid=f"id{h}") for h in range(6)]
+    spark.createDataFrame(rows, CONTROL_SCHEMA).repartition(3).write.parquet(path)
+    names = os.listdir(path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    assert sum(n.endswith(".parquet") for n in names) > 1
+
+    table = ControlTable(spark, path)
+    started = datetime(2024, 1, 2, 9, 30)
+    table.claim("id1", run_id="run-claimed")
+    table.complete_stage("id1", "source_discovery", started)
+    table.fail_stage("id2", "source_to_stage", "boom")
+    table.delete_records(["run-id3"], key_col="unique_run_id")
+
+    got = _by_id(table.read().collect())
+    assert sorted(got) == ["id0", "id1", "id2", "id4", "id5"]
+    assert got["id1"]["unique_run_id"] == "run-claimed"
+    assert got["id1"]["source_discovery_status"] == "completed"
+    assert got["id1"]["source_discovery_start_time"] == started
+    assert got["id2"]["pipeline_status"] == "failed"
+    assert got["id2"]["pipeline_retry_count"] == 1
+    # untouched rows keep every value Spark wrote
+    for sid in ("id0", "id4", "id5"):
+        want = rows[int(sid[2:])]
+        for k in ("pipeline_status", "source_query_window_start_time",
+                  "record_first_inserted_time", "query_window_start_day",
+                  "accepted_tolerance_percentage", "source_discovery_is_enabled"):
+            assert got[sid][k] == want[k], (sid, k)
+    assert os.listdir(path) == ["part-00000.parquet"]
+    assert os.listdir(tmp_path) == ["control"]
+
+
+def test_state_transitions_launch_no_spark_job(ct, spark):
+    """claim + the four stage completions run on the driver alone."""
+    sc = spark.sparkContext
+    sid = _row(ct)["unique_source_id"]
+    group = f"ct-transitions-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "control-table state transitions")
+    try:
+        ct.claim(sid)
+        started = datetime.utcnow()
+        for stage in STAGES:
+            ct.complete_stage(sid, stage, started)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _row(ct)["pipeline_status"] == "completed"
+
+
+def test_naive_datetimes_round_trip_in_any_local_timezone(ct, monkeypatch):
+    """Spark reads and returns a naive datetime as the process's local
+    time; the driver-side writer stores the same instant, so a value
+    written by a transition reads back unchanged outside UTC too."""
+    import time
+
+    sid = _row(ct)["unique_source_id"]
+    started = datetime(2024, 1, 2, 9, 30)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        ct.complete_stage(sid, "source_discovery", started)
+        assert _row(ct)["source_discovery_start_time"] == started
+    finally:
+        monkeypatch.undo()
+        time.tzset()

@@ -235,3 +235,21 @@ def test_target_partition_pruning(batch_pipe, spark):
     n = tgt.count()
     assert n == batch_pipe.target_sink.count(datetime(2024, 1, 2, 6), datetime(2024, 1, 2, 12))
     assert n > 0
+
+
+def test_consecutive_run_batch_days_keep_earlier_days(batch_pipe):
+    """Incremental backfill: the second day's audit covers only its own
+    windows, so the first day's load is neither re-audited as
+    source_count = 0 nor cleaned and reset."""
+    mid = datetime(2024, 1, 3)
+    batch_pipe.run_batch(DAY, mid)
+    batch_pipe.run_batch(mid, DAY_END)
+    ct = batch_pipe.control.read().collect()
+    assert len(ct) == 8
+    for r in ct:
+        assert (r["pipeline_status"], r["count_match_status"]) == (
+            "completed",
+            "matched",
+        ), r["source_query_window_start_time"]
+    total_target = batch_pipe.target_sink.read_all().count()
+    assert total_target == batch_pipe.source.count(DAY, DAY_END) > 0

@@ -4,9 +4,8 @@ The suite is split into two independent lanes (pytest.ini / README
 TESTLANES): lane 1 (`-m "not slow"`, unit/operator) and lane 2
 (`-m slow`, e2e/streaming). They share no state — different test
 modules, per-process SparkSessions, per-process pytest tmp dirs — so
-running them as two processes overlaps lane 2's control-table
-mutation floor (~0.6 s per read-modify-overwrite Spark round-trip,
-measured in BENCH_NOTES) with lane 1's CPU-bound operator tests.
+running them as two processes overlaps lane 2's Spark-job-bound
+pipeline tests with lane 1's CPU-bound operator tests.
 
 Usage: python tools/run_suite.py [extra pytest args for both lanes]
 Exit code is non-zero if either lane fails. Prints per-lane status
