@@ -738,7 +738,7 @@ class WindowPipeline:
                 # the columnar write DID run the earlier stages; mirror
                 # the merge ok-path's stage bookkeeping for this row
                 self.control.update_where(
-                    [row["unique_source_id"]],
+                    row["unique_source_id"],
                     {f"{s}_status": "completed" for s in STAGES},
                 )
         # audit rows with no control row would otherwise vanish silently

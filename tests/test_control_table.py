@@ -2,17 +2,21 @@
 claim → complete ×4 → completed; fail; audit reset; selective stale
 reset; duplicate delete; the storage contract (Spark and DuckDB read
 what the driver-side writer wrote, a Spark-written table is read and
-mutated, no swap directory is left) and the driver-only transitions."""
+mutated, no swap directory is left, a table larger than one batch is
+rewritten batch by batch, a failed mutation changes nothing) and the
+driver-only transitions."""
 
 import os
 import uuid
 from datetime import datetime, timedelta
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_pipeline_001_spark.plans import control_table
 from data_pipeline_001_spark.plans.control_table import (
     CONTROL_SCHEMA,
     STAGES,
@@ -273,3 +277,57 @@ def test_naive_datetimes_round_trip_in_any_local_timezone(ct, monkeypatch):
     finally:
         monkeypatch.undo()
         time.tzset()
+
+
+def test_mutations_stream_across_batches(spark, tmp_path, monkeypatch):
+    """Every mutation rewrites the table one bounded batch at a time;
+    with two rows per batch, rows in every batch get the same result a
+    whole-table rewrite would give."""
+    table = ControlTable(spark, str(tmp_path / "control"))
+    table.append_records([_record(h) for h in range(7)])
+    ids = [
+        r["unique_source_id"]
+        for r in sorted(
+            table.read().collect(), key=lambda r: r["source_query_window_start_time"]
+        )
+    ]
+    monkeypatch.setattr(control_table, "_BATCH_ROWS", 2)
+    started = datetime(2024, 1, 2, 9, 30)
+    table.claim(ids[1], run_id="run-1")
+    table.complete_stage(ids[5], "source_discovery", started)
+    table.fail_stage(ids[3], "source_to_stage", "boom")
+    table.reset_stale_in_progress([ids[2], ids[6]])
+    table.delete_records([ids[4]])
+    audit = spark.createDataFrame(
+        [(datetime(2024, 1, 2, 0), 5, 5), (datetime(2024, 1, 2, 6), 10, 5)],
+        "window_start timestamp, source_count long, target_count long",
+    )
+    table.merge_audit_results(audit, "p1")
+
+    rows = table.read().collect()
+    assert sorted(r["unique_source_id"] for r in rows) == sorted(ids[:4] + ids[5:])
+    got = _by_id(rows)
+    assert got[ids[0]]["pipeline_status"] == "completed"
+    assert got[ids[0]]["count_match_status"] == "matched"
+    assert got[ids[0]]["source_count"] == 5
+    assert got[ids[1]]["unique_run_id"] == "run-1"
+    assert got[ids[1]]["pipeline_status"] == "in_progress"
+    assert got[ids[2]]["pipeline_retry_count"] == 1
+    assert got[ids[3]]["pipeline_status"] == "failed"
+    assert got[ids[3]]["pipeline_error_details"] == "boom"
+    assert got[ids[5]]["source_discovery_start_time"] == started
+    assert got[ids[5]]["pipeline_status"] == "pending"
+    assert got[ids[6]]["count_match_status"] == "not_matched"
+    assert got[ids[6]]["pipeline_retry_count"] == 1
+    assert got[ids[6]]["count_difference"] == -5
+    layout = pq.ParquetFile(os.path.join(table.path, "part-00000.parquet"))
+    assert layout.num_row_groups > 1
+
+
+def test_failed_mutation_leaves_the_table_unchanged(ct, tmp_path):
+    before = _by_id(ct.read().collect())
+    sid = next(iter(before))
+    with pytest.raises(pa.ArrowException):
+        ct.update_where(sid, {"pipeline_retry_count": "not-a-number"})
+    assert _by_id(ct.read().collect()) == before
+    assert os.listdir(tmp_path) == ["control"]
