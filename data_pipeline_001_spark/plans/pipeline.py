@@ -13,9 +13,14 @@ Lifecycle per run (reference step numbers preserved):
 
 Stage work is DataFrame transforms against pluggable Source/Sink
 connectors; control state lives in the ControlTable. The per-window
-loop is driver-side (as in the reference) but each window's work is a
-distributed Spark job; at very large window counts the same stages
-compose into one job via ``groupBy(window)`` — see ``extract_all_windows``.
+loop is driver-side (as in the reference); once the source's schema is
+resolved, a window launches four distributed Spark jobs: the source
+count (two, because adaptive execution runs its shuffle stage as a job
+of its own), the stage write and the target write. The stage read-back
+infers nothing, the audit counts the target from its Parquet footers,
+and the control table moves on the driver, all with no job. At
+very large window counts the same stages compose into one job via
+``groupBy(window)`` — see ``extract_all_windows``.
 """
 
 from __future__ import annotations
@@ -339,12 +344,13 @@ class WindowPipeline:
             t0 = datetime.utcnow()
             if self.stage_sink.exists(start, end):
                 self.stage_sink.clean(start, end)
-            self.stage_sink.load(self.source.extract(start, end), start, end)
+            extracted = self.source.extract(start, end)
+            self.stage_sink.load(extracted, start, end)
             # free write-path loss check: the stage write's Observation
             # metrics (captured inside the write job, no extra scan)
             # must already match the plan-time source count — catching
             # an extract-side filter/shape bug here is one window-write
-            # earlier (and one target-recount job cheaper) than audit
+            # earlier than the audit
             written = getattr(self.stage_sink, "last_write_metrics", None)
             if written is not None and written["rows"] != src_count:
                 from data_pipeline_001_spark.utils import pipeline_log
@@ -360,12 +366,14 @@ class WindowPipeline:
             self.control.complete_stage(sid, "source_to_stage", t0)
 
             # Stage 3 — stage → target (S6/S7/S5): read back the staged
-            # window (one pruned directory) and load it into the target
+            # window (one pruned directory) with the schema it was
+            # written with, so nothing is inferred, and load it into
+            # the target
             stage = "stage_to_target"
             t0 = datetime.utcnow()
             if self.target_sink.exists(start, end):
                 self.target_sink.clean(start, end)
-            staged_df = self.spark.read.parquet(
+            staged_df = self.spark.read.schema(extracted.schema).parquet(
                 self.stage_sink._window_path(start)  # type: ignore[attr-defined]
             )
             self.target_sink.load(staged_df, start, end)
@@ -642,7 +650,7 @@ class WindowPipeline:
         """Whole-plan batch execution — N windows, THREE Spark jobs
         total (extract+stage write, target write, audit aggregation)
         plus one columnar control MERGE, instead of the per-window
-        loop's ~5 jobs × N windows. Requires the target sink to
+        loop's 4 jobs × N windows. Requires the target sink to
         support ``load_all`` (DayPartitionedTableSink).
 
         Returns the per-window audit DataFrame
@@ -710,7 +718,7 @@ class WindowPipeline:
         # envelope as the per-window loop — phase-1 tiered recount,
         # phase-2 improvement-driven waits, exhaustion → clean+reset.
         # Bounded driver work: one row per MISMATCHED window only,
-        # each recount a partition-pruned count job on the sink.
+        # each recount the sink's count of one window.
         mismatched = (
             self._scoped(self.control.read())
             .where(

@@ -7,6 +7,8 @@
   Idempotence = deterministic window path + overwrite, replacing the
   reference's head_object-check → delete → rewrite dance
   (stage/data_checker.py:6-60, stage/stage_cleaner.py:6-59).
+  Both parquet sinks count a window from its file footers on the
+  driver, with no Spark job.
 - ``MockAsyncSink``: wraps a sink and makes ``load`` lag behind
   (visible counts converge over successive ``count`` calls) to
   exercise the audit adaptive-retry semantics (R3) that exist in the
@@ -20,8 +22,10 @@ import os
 import shutil
 from datetime import datetime
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_pipeline_001_spark.sources.base import Sink, Source
 
@@ -30,6 +34,14 @@ def window_predicate(ts_col: str, start: datetime, end: datetime):
     """P1: half-open timestamp range ``ts >= start AND ts < end``
     (elasticsearch_counter.py:110-118)."""
     return (F.col(ts_col) >= F.lit(start)) & (F.col(ts_col) < F.lit(end))
+
+
+def footer_row_count(path: str) -> int:
+    """Rows in a directory of Parquet files, summed from the file
+    footers on the driver: the number Spark's ``count()`` reads, with
+    no job. Like Spark, it skips ``_SUCCESS`` and hidden ``.crc``
+    files."""
+    return ds.dataset(path, format="parquet").count_rows()
 
 
 def window_dir_name(start: datetime) -> str:
@@ -45,13 +57,20 @@ class FileSource(Source):
     query options (elasticsearch_counter.py:124-131) — both collapse
     to ``isNotNull`` in a relational engine (P2/P3).
 
+    Schema resolution: an explicit ``schema`` is used as given.
+    Without one, the first read infers it and every later read passes
+    it to the reader, so only the first read launches an inference
+    job. Files are listed on every read, so files added later are
+    read, but a column they add is not seen unless
+    ``merge_schema=True``, which merges the footers on every read.
+
     ``quarantine_path`` (text formats only): malformed records are
     read PERMISSIVE into ``_corrupt_record``, appended to the
-    quarantine directory as JSON, and EXCLUDED from extract/count —
-    one bad line degrades to a quarantined row instead of failing the
-    window or silently nulling fields. The declared ``schema`` is
-    required for quarantine (Spark only populates the corrupt column
-    with an explicit schema).
+    quarantine directory as JSON by the first read that lists their
+    file, and EXCLUDED from extract/count — one bad line degrades to a
+    quarantined row instead of failing the window or silently nulling
+    fields. The declared ``schema`` is required for quarantine (Spark
+    only populates the corrupt column with an explicit schema).
     """
 
     def __init__(
@@ -75,6 +94,7 @@ class FileSource(Source):
         self.exclude_null = exclude_null
         self.schema = schema
         self.quarantine_path = quarantine_path
+        self._quarantined: set[str] = set()
         # schema evolution across file generations: older parquet
         # files simply lack newly-added columns; mergeSchema unions
         # the footers (one-time listing cost) and fills the gaps with
@@ -100,9 +120,7 @@ class FileSource(Source):
                     "PERMISSIVE/_corrupt_record reader contract"
                 )
 
-    def _read(self) -> DataFrame:
-        from pyspark.sql import types as T
-
+    def _reader(self):
         reader = self.spark.read
         schema = self.schema
         if self.quarantine_path is not None:
@@ -119,19 +137,16 @@ class FileSource(Source):
         if self.options:
             reader = reader.options(**self.options)
         self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = reader.format(self.fmt).load(self.path)
+        return reader.format(self.fmt)
+
+    def _read(self) -> DataFrame:
+        df = self._reader().load(self.path)
+        if self.schema is None and not self.merge_schema:
+            # resolved once: later reads list the files again but pass
+            # this schema, so they launch no inference job
+            self.schema = df.schema
         if self.quarantine_path is not None:
-            # cache so the split doesn't parse the files twice; keep
-            # every column in the quarantine write — Spark forbids
-            # queries whose only referenced column is _corrupt_record
-            # (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and JSON output drops
-            # the all-null data fields of corrupt rows anyway
-            df = df.cache()
-            # rename on write: a JSON file whose only field is the
-            # reserved _corrupt_record name can't itself be read back
-            df.where(F.col("_corrupt_record").isNotNull()).withColumnRenamed(
-                "_corrupt_record", "corrupt_record"
-            ).write.mode("append").json(self.quarantine_path)
+            self._quarantine_new_files(df)
             df = df.where(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
         # TIMESTAMP(NANOS) parquet columns arrive as long under
         # nanosAsLong — convert to µs timestamps (integer division)
@@ -142,6 +157,25 @@ class FileSource(Source):
         for f in (*self.must_exist, *self.exclude_null):
             df = df.where(F.col(f).isNotNull())
         return df
+
+    def _quarantine_new_files(self, df: DataFrame) -> None:
+        """Append the malformed lines of files no earlier read has seen
+        to the quarantine, so each line lands there once."""
+        new = sorted(set(df.inputFiles()) - self._quarantined)
+        if not new:
+            return
+        # keep every column in the write — Spark forbids queries whose
+        # only referenced column is _corrupt_record
+        # (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and JSON output drops the
+        # all-null data fields of corrupt rows anyway; rename on write:
+        # a JSON file whose only field is the reserved _corrupt_record
+        # name can't itself be read back
+        self._reader().load(new).where(
+            F.col("_corrupt_record").isNotNull()
+        ).withColumnRenamed("_corrupt_record", "corrupt_record").write.mode(
+            "append"
+        ).json(self.quarantine_path)
+        self._quarantined.update(new)
 
     def count(self, start: datetime, end: datetime) -> int:
         return self._read().where(window_predicate(self.ts_col, start, end)).count()
@@ -181,7 +215,7 @@ class PartitionedParquetSink(Sink):
         ``last_write_metrics`` then holds rows / min_ts / max_ts of
         what was actually written. At 100 TB this is the free half of
         the audit — a source-vs-written mismatch surfaces before the
-        target recount job is even scheduled."""
+        target is even written."""
         from pyspark.sql import Observation
 
         obs = Observation()
@@ -207,7 +241,7 @@ class PartitionedParquetSink(Sink):
     def count(self, start: datetime, end: datetime) -> int:
         if not self.exists(start, end):
             return 0
-        return self.spark.read.parquet(self._window_path(start)).count()
+        return footer_row_count(self._window_path(start))
 
     def clean(self, start: datetime, end: datetime) -> None:
         shutil.rmtree(self._window_path(start), ignore_errors=True)
@@ -259,36 +293,25 @@ class DayPartitionedTableSink(Sink):
             .parquet(self.root)
         )
 
-    def exists(self, start: datetime, end: datetime) -> bool:
-        p = os.path.join(
+    def _partition_path(self, start: datetime) -> str:
+        return os.path.join(
             self.root,
             f"window_day={start.date()}",
             f"window_start={start.strftime('%H-%M')}",
         )
+
+    def exists(self, start: datetime, end: datetime) -> bool:
+        p = self._partition_path(start)
         return os.path.isdir(p) and any(f.endswith(".parquet") for f in os.listdir(p))
 
     def count(self, start: datetime, end: datetime) -> int:
         if not self.exists(start, end):
             return 0
-        # partition-pruned read: only this window's directory scans
-        return (
-            self.spark.read.parquet(self.root)
-            .where(
-                (F.col("window_day") == F.lit(start.date()).cast("date"))
-                & (F.col("window_start") == start.strftime("%H-%M"))
-            )
-            .count()
-        )
+        # only this window's partition directory is read
+        return footer_row_count(self._partition_path(start))
 
     def clean(self, start: datetime, end: datetime) -> None:
-        shutil.rmtree(
-            os.path.join(
-                self.root,
-                f"window_day={start.date()}",
-                f"window_start={start.strftime('%H-%M')}",
-            ),
-            ignore_errors=True,
-        )
+        shutil.rmtree(self._partition_path(start), ignore_errors=True)
 
     def read_all(self) -> DataFrame:
         return self.spark.read.parquet(self.root)

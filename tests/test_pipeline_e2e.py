@@ -3,6 +3,7 @@
 verify drive-table transitions + idempotence + backfill + stale reset
 + the mock-async audit retry (R3)."""
 
+import uuid
 from datetime import datetime
 
 import pytest
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 from data_pipeline_001_spark.plans.control_table import ControlTable
 from data_pipeline_001_spark.plans.pipeline import PipelineConfig, WindowPipeline
 from data_pipeline_001_spark.sources.file_connectors import (
+    DayPartitionedTableSink,
     FileSource,
     MockAsyncSink,
     PartitionedParquetSink,
@@ -323,6 +325,51 @@ def test_audit_mismatch_resets_pipeline(spark, tmp_path):
     assert r["pipeline_retry_count"] == 1
     # stage output cleaned
     assert not stage.exists(DAY, datetime(2024, 1, 2, 6))
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return the number of Spark
+    jobs it launched."""
+    sc = spark.sparkContext
+    group = f"pipeline-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pipeline job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_window_launches_only_count_and_write_jobs(spark, tmp_path):
+    """Once the first window has resolved the source schema, a window's
+    only Spark jobs are the source count and the stage and target
+    writes: extract and the stage read-back infer no schema, and both
+    sinks count from Parquet footers."""
+    source = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts")
+    stage = PartitionedParquetSink(spark, str(tmp_path / "stage"))
+    target = DayPartitionedTableSink(spark, str(tmp_path / "target"))
+    control = ControlTable(spark, str(tmp_path / "control"))
+    cfg = PipelineConfig(pipeline_name="jobs", granularity="6h", max_pipeline_runs=4)
+    pipe = WindowPipeline(spark, cfg, source, stage, target, control)
+    pipe.populate(DAY, DAY_END)
+    first, second = pipe.pending_records()[:2]
+    assert pipe.run_window(first) == "completed"
+    s, e = first["source_query_window_start_time"], first["source_query_window_end_time"]
+
+    assert _spark_jobs(spark, lambda: source.extract(s, e).schema) == 0
+    assert _spark_jobs(spark, lambda: stage.count(s, e)) == 0
+    assert _spark_jobs(spark, lambda: target.count(s, e)) == 0
+    count_jobs = _spark_jobs(spark, lambda: source.count(s, e))
+    assert count_jobs >= 1
+    assert _spark_jobs(spark, lambda: pipe.run_window(second)) == count_jobs + 2
+    r = [
+        x
+        for x in control.read().collect()
+        if x["unique_source_id"] == second["unique_source_id"]
+    ][0]
+    assert r["pipeline_status"] == "completed"
+    assert r["source_count"] == r["target_count"] > 0
 
 
 def _write_window_events(spark, path, counts, start=DAY, hours=3):

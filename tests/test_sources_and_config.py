@@ -1,7 +1,7 @@
 """Connector format coverage (S2: parquet/JSON/CSV sources) and the
 layered-config merge (hanlder_script.py:117-194 semantics)."""
 
-from datetime import datetime
+from datetime import datetime, timezone
 
 import os
 
@@ -87,25 +87,40 @@ def test_config_merge_later_layers_win():
 def test_sink_file_sizing(spark, tables, tmp_path):
     """File-size discipline (the reference's 250 MB split,
     stage/ingestion_engine.py:174): maxRecordsPerFile bounds output
-    file row counts so downstream scans parallelize."""
-    import os
-
-    from datetime import datetime
-
+    file row counts so downstream scans parallelize. Both parquet
+    sinks count such a window from its footers, matching Spark's
+    count; a missing window counts 0."""
     from data_pipeline_001_spark.sources.file_connectors import (
+        DayPartitionedTableSink,
         PartitionedParquetSink,
     )
+
+    w = (datetime(2024, 1, 2), datetime(2024, 1, 3))
+    absent = (datetime(2024, 1, 5), datetime(2024, 1, 6))
+    df = tables["events"].limit(450).coalesce(1)
 
     sink = PartitionedParquetSink(
         spark, str(tmp_path / "sized"), max_records_per_file=100
     )
-    w = (datetime(2024, 1, 2), datetime(2024, 1, 3))
-    df = tables["events"].limit(450).coalesce(1)
     sink.load(df, *w)
     out_dir = sink._window_path(w[0])
-    files = [f for f in os.listdir(out_dir) if f.endswith(".parquet")]
-    assert len(files) >= 5  # 450 rows / 100-row cap
-    assert sink.count(*w) == 450
+    assert "_SUCCESS" in os.listdir(out_dir)
+
+    table_sink = DayPartitionedTableSink(spark, str(tmp_path / "table"))
+    key = "spark.sql.files.maxRecordsPerFile"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    try:
+        table_sink.load(df, *w)
+    finally:
+        spark.conf.set(key, prev)
+
+    for s, path in ((sink, out_dir), (table_sink, table_sink._partition_path(w[0]))):
+        names = os.listdir(path)
+        assert sum(n.endswith(".parquet") for n in names) >= 5  # 450 rows / 100-row cap
+        assert any(n.endswith(".crc") for n in names)
+        assert s.count(*w) == spark.read.parquet(path).count() == 450
+        assert s.count(*absent) == 0
 
 
 def test_ivf_recall(tables):
@@ -130,13 +145,17 @@ def test_ivf_recall(tables):
     assert recall >= 0.5, f"IVF recall too low: {recall}"
 
 
+def _cached_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
 def test_json_source_quarantines_malformed_records(spark, tables, tmp_path):
-    """A malformed line must land in the quarantine dir and be excluded
-    from count/extract; valid rows are unaffected."""
+    """A malformed line must land in the quarantine dir once and be
+    excluded from count/extract; valid rows are unaffected. Repeated
+    reads keep nothing cached and read files added later."""
     from pyspark.sql import types as T
 
     import json as jsonlib
-    import os
 
     d = str(tmp_path / "dirty_json")
     os.makedirs(d)
@@ -153,9 +172,9 @@ def test_json_source_quarantines_malformed_records(spark, tables, tmp_path):
     schema = T.StructType(
         [f for f in tables["events"].schema.fields if f.name != "props"]
     )
-    clean_src = FileSource(
-        spark, d, fmt="json", schema=schema, quarantine_path=str(tmp_path / "quar")
-    )
+    quar = str(tmp_path / "quar")
+    clean_src = FileSource(spark, d, fmt="json", schema=schema, quarantine_path=quar)
+    cached_before = _cached_entries(spark)
     n_valid = clean_src.count(*WINDOW)
     expected = (
         tables["events"]
@@ -164,9 +183,60 @@ def test_json_source_quarantines_malformed_records(spark, tables, tmp_path):
         .count()
     )
     assert n_valid == expected
-    quarantined = spark.read.json(str(tmp_path / "quar")).collect()
+    quarantined = spark.read.json(quar).collect()
     assert len(quarantined) == 2
     assert any("BROKEN" in r["corrupt_record"] for r in quarantined)
+
+    assert clean_src.extract(*WINDOW).count() == expected
+    assert clean_src.count(*WINDOW) == expected
+    assert len(spark.read.json(quar).collect()) == 2
+
+    with open(os.path.join(d, "more.json"), "w") as fh:
+        for i in range(5):
+            ts = datetime(2024, 1, 2, 1, i).isoformat()
+            fh.write(jsonlib.dumps({"event_id": 1_000_000 + i, "ts": ts}) + "\n")
+        fh.write("{still broken\n")
+    assert clean_src.count(*WINDOW) == expected + 5
+    assert clean_src.extract(*WINDOW).where(F.col("event_id") >= 1_000_000).count() == 5
+    assert sorted(r["corrupt_record"] for r in spark.read.json(quar).collect()) == [
+        '{"event_id": 999999, "ts": BROKEN',
+        "{not json at all}",
+        "{still broken",
+    ]
+    assert _cached_entries(spark) == cached_before
+
+
+def test_resolved_schema_reads_later_files_with_the_same_micros(spark, tmp_path):
+    """The schema resolved on the first read is reused, but every read
+    lists the files again: a file added later is counted and extracted,
+    and TIMESTAMP(NANOS) values read with the resolved (long) schema
+    convert to the same µs instants as on the first, inferring read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "ev"
+    root.mkdir()
+    base = int(WINDOW[0].replace(tzinfo=timezone.utc).timestamp()) * 10**9
+    nanos = [base + k * 3_600_000_000_123 + 789 for k in range(3)]
+
+    def write(name, ks):
+        ts = pa.array([nanos[k] for k in ks], pa.timestamp("ns"))
+        pq.write_table(pa.table({"ts": ts, "v": ks}), str(root / name))
+
+    def micros():
+        out = src.extract(*WINDOW).orderBy("v").select(F.unix_micros("ts"))
+        return [r[0] for r in out.collect()]
+
+    write("a.parquet", [0, 1])
+    src = FileSource(spark, str(root))
+    first = micros()
+    assert first == [n // 1000 for n in nanos[:2]]
+    assert src.schema is not None
+    assert micros() == first
+
+    write("b.parquet", [2])
+    assert src.count(*WINDOW) == 3
+    assert micros() == [n // 1000 for n in nanos]
 
 
 def test_quarantine_rejects_conflicting_reader_options(spark, tmp_path):
@@ -294,6 +364,22 @@ def test_source_schema_evolution(spark, tmp_path):
     out = merged.extract(datetime(2024, 1, 1), datetime(2024, 1, 2)).orderBy("ts")
     rows = out.collect()
     assert [r["tag"] for r in rows] == [None, "new"]
+    # a generation written after the first read adds a column: the
+    # merged schema is resolved again on every read, so it is seen
+    spark.createDataFrame(
+        [(datetime(2024, 1, 1, 2, 30), 3.0, "later", 7)],
+        "ts timestamp, v double, tag string, n int",
+    ).write.parquet(f"{root}/gen3")
+    rows3 = (
+        merged.extract(datetime(2024, 1, 1), datetime(2024, 1, 2))
+        .orderBy("ts")
+        .collect()
+    )
+    assert [(r["tag"], r["n"]) for r in rows3] == [
+        (None, None),
+        ("new", None),
+        ("later", 7),
+    ]
 
     explicit = FileSource(
         spark,
@@ -309,7 +395,7 @@ def test_source_schema_evolution(spark, tmp_path):
     rows2 = explicit.extract(
         datetime(2024, 1, 1), datetime(2024, 1, 2)
     ).orderBy("ts").collect()
-    assert [r["tag"] for r in rows2] == [None, "new"]
+    assert [r["tag"] for r in rows2] == [None, "new", "later"]
 
 
 def test_python_datasource_generates_on_executors(spark):
