@@ -7,10 +7,14 @@
                               (reference: core/source_discovery_manager.py:186-271)
 - F13 guarded percentage difference (reference: core/audit_manager.py:385-392)
 
-All JVM-side column expressions — no Python UDFs in the hot path.
+JVM-side column expressions — no Python UDFs in the hot path —
+except ``composite_md5_hex``, F9's driver form for rows held in Python.
 """
 
 from __future__ import annotations
+
+import hashlib
+from datetime import datetime, tzinfo
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -28,6 +32,29 @@ def composite_md5_id(parts: dict[str, Column | str]) -> Column:
         for k, v in sorted(parts.items())
     ]
     return F.md5(F.concat_ws("_", *rendered))
+
+
+def composite_md5_hex(parts: dict[str, str | datetime | None], tz: tzinfo) -> str:
+    """F9 on the driver: the id ``composite_md5_id`` gives for the same
+    parts in a session whose time zone is ``tz``.
+
+    Each part renders as Spark casts it to a string: a datetime as
+    ``yyyy-MM-dd HH:mm:ss`` in ``tz``, with the fraction of a second,
+    if any, trailing zeros trimmed (a naive datetime is the process's
+    local time, as Spark takes it); a null part as its bare key, as
+    ``concat_ws`` skips nulls.
+    """
+    text = "_".join(
+        k if v is None else f"{k}:{_spark_string(v, tz) if isinstance(v, datetime) else v}"
+        for k, v in sorted(parts.items())
+    )
+    return hashlib.md5(text.encode("utf-8")).hexdigest()
+
+
+def _spark_string(value: datetime, tz: tzinfo) -> str:
+    t = value.astimezone(tz)
+    text = f"{t.year:04d}-{t.month:02d}-{t.day:02d} {t.hour:02d}:{t.minute:02d}:{t.second:02d}"
+    return text + f".{t.microsecond:06d}".rstrip("0") if t.microsecond else text
 
 
 def sha256_record_hash(*cols: Column | str) -> Column:

@@ -22,7 +22,8 @@ Python loop.
 from __future__ import annotations
 
 import re
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone, tzinfo
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -256,6 +257,43 @@ def window_spine(
         .withColumn("window_day", F.to_date("window_start"))
     )
     return spine
+
+
+def session_tzinfo(spark: SparkSession) -> tzinfo:
+    """The session time zone (``spark.sql.session.timeZone``) as a
+    ``tzinfo``: a region id such as ``UTC`` or ``America/New_York``, or
+    a fixed offset such as ``+05:30``."""
+    name = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        return ZoneInfo(name)
+    except (ValueError, KeyError):  # ZoneInfoNotFoundError is a KeyError
+        return datetime.strptime(name, "%z").tzinfo
+
+
+def window_bounds(
+    start: datetime, end: datetime, granularity: str, tz: tzinfo
+) -> list[tuple[datetime, datetime]]:
+    """F1 on the driver: the windows ``window_spine`` yields (trailing
+    window clamped to ``end``), as naive UTC ``(start, end)`` pairs.
+
+    As in ``window_spine``, a naive bound is a wall time in the session
+    time zone ``tz`` and an aware one is taken as the instant it names.
+    ``window_spine`` stays the form for spines too large to collect.
+    """
+
+    def instant(value: datetime) -> datetime:
+        if value.tzinfo is None:
+            value = value.replace(tzinfo=tz)
+        return value.astimezone(timezone.utc).replace(tzinfo=None)
+
+    step = timedelta(minutes=parse_granularity_minutes(granularity))
+    s, e = instant(start), instant(end)
+    out = []
+    # sequence(s, e - 1 second, step), each window clamped to e
+    while s <= e - timedelta(seconds=1):
+        out.append((s, min(s + step, e)))
+        s += step
+    return out
 
 
 def day_spine(spark: SparkSession, start_day: str, end_day: str) -> DataFrame:

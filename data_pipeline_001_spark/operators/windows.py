@@ -1,4 +1,4 @@
-"""Window-function transforms — W1..W5 of SURVEY.md §2.5.
+"""Window-function transforms — W1..W4 of SURVEY.md §2.5.
 
 The reference implements these as pandas scan-line loops; here each is
 a reusable Spark transform over ``Window.partitionBy(day).orderBy(start)``.
@@ -10,7 +10,8 @@ spine is still millions of small rows/day, never a global sort.
                               utils/time_utils.py:253-268)
 - W3 duplicate prioritization (reference: state_manager.py:937-982)
 - W4 continuity check        (reference: utils/time_utils.py:233-251)
-- W5 priority-ordered selection (reference: core/pending_records_selector.py:20-23)
+- W5 priority-ordered selection lives with the control table, on Arrow
+  (``plans.control_table.select_pending``)
 """
 
 from __future__ import annotations
@@ -139,28 +140,6 @@ def resolve_duplicates(
         F.col(inserted_col).asc_nulls_last(),
     )
     return records.withColumn("_keep", F.row_number().over(w) == 1)
-
-
-def select_pending(
-    records: DataFrame,
-    limit: int,
-    start_col: str = "source_query_window_start_time",
-    retry_col: str = "pipeline_retry_count",
-    priority_col: str = "pipeline_priority",
-) -> DataFrame:
-    """W5/O1: pending-work selection — oldest window first, then most
-    retried, then lowest priority value; LIMIT n.
-
-    (reference: pending_records_selector.py:20-23). Catalyst plans this
-    as TakeOrderedAndProject — no global sort materialization.
-    """
-    return (
-        records.where(F.col("pipeline_status") == "pending")
-        .orderBy(
-            F.col(start_col).asc(), F.col(retry_col).desc(), F.col(priority_col).asc()
-        )
-        .limit(limit)
-    )
 
 
 def top_k_per_group(

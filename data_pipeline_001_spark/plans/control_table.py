@@ -17,13 +17,25 @@ one ``part-00000.parquet`` in a temp directory and renames it over the
 live one; a mutation that fails removes its temp directory and leaves
 the table as it was. A table Spark wrote (several part files,
 ``_SUCCESS``, ``.crc``) is read as it is and becomes one file at its
-first mutation. ``read()`` hands Spark a DataFrame for the planners
-(populate, pending selection, gap and duplicate detection); a state
-transition (claim, stage completion, failure, reset, delete) starts no
-Spark job. Only ``append_records`` (the F9 md5 ids) and
-``merge_audit_results`` (the batch-path join) compute in Spark, and
-both collect only their new or changed rows (one per window) with
-``toArrow()`` for the same writer.
+first mutation. The hourly run's planners (populate's anti-join, the
+stale-run check, pending selection) filter ``rows()`` on the driver,
+``append_records`` computes the F9 md5 ids with ``hashlib``, and a
+state transition (claim, stage completion, failure, reset, delete)
+rewrites on the driver: none of them starts a Spark job. ``read()``
+hands Spark a DataFrame for the callers off that path —
+``fill_gaps``, ``resolve_duplicate_windows``, ``audit_spc_flags`` and
+``run_batch`` — and for outside readers. Only ``merge_audit_results``
+(the batch-path join) computes in Spark; it collects only its changed
+rows (one per window) with ``toArrow()`` for the same writer.
+
+One writer process at a time: every mutation rewrites the whole table
+and then does two renames, so two processes mutating one table lose
+each other's updates, and between the renames the live path does not
+exist. In a probe where two processes each claimed their own 24 windows
+of one table at once, 18+6, 10+15 and 0+24 of the 48 claims survived
+over three runs. One file per pipeline and day (ROADMAP.md, direction
+5) is the fix; until then, give each concurrently running pipeline its
+own table.
 
 Scale posture: the control table holds one row per *window*, not per
 record — a year of hourly windows across 1000 pipelines is ~9M rows.
@@ -45,17 +57,18 @@ import itertools
 import os
 import shutil
 import uuid
-from collections.abc import Iterable, Iterator
-from datetime import datetime, timezone
+from collections.abc import Callable, Iterable, Iterator
+from datetime import datetime, timedelta, timezone
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_pipeline_001_spark.functions.hash_fns import composite_md5_id
+from data_pipeline_001_spark.functions.hash_fns import composite_md5_hex
+from data_pipeline_001_spark.functions.time_fns import session_tzinfo
 
 PIPELINE_STATUSES = ("pending", "in_progress", "completed", "failed")
 STAGES = ("source_discovery", "source_to_stage", "stage_to_target", "audit")
@@ -221,6 +234,15 @@ class ControlTable:
         self.create_if_not_exists()
         return self.spark.read.schema(CONTROL_SCHEMA).parquet(self.path)
 
+    def rows(self, where: Callable[[pa.Table], pa.ChunkedArray]) -> pa.Table:
+        """The rows for which the mask ``where(batch)`` holds (a null
+        entry drops the row, like SQL ``WHERE``), read on the driver one
+        batch at a time, in ``ARROW_SCHEMA``. No Spark job."""
+        return pa.concat_tables(
+            [ARROW_SCHEMA.empty_table()]
+            + [_conform(t.filter(where(t))) for t in self._tables()]
+        )
+
     def _tables(self) -> Iterator[pa.Table]:
         """The current state on the driver, one bounded batch at a time
         (files whose names start with ``_`` or ``.`` — Spark's
@@ -270,30 +292,37 @@ class ControlTable:
     # -- inserts -----------------------------------------------------------
 
     def append_records(self, rows: list[dict]) -> int:
-        """S8/M7: bulk append (snowflake_utils.py:146-165 analogue)."""
+        """S8/M7: bulk append (snowflake_utils.py:146-165 analogue).
+
+        The F9 ids are computed on the driver (``composite_md5_hex`` in
+        the session time zone), equal to what ``composite_md5_id`` gives
+        on the same rows."""
         if not rows:
             return 0
-        df = self.spark.createDataFrame(rows, CONTROL_SCHEMA)
-        df = df.withColumn(
-            "unique_source_id",
-            composite_md5_id(
+        tz = session_tzinfo(self.spark)
+        records = []
+        for r in rows:
+            source_id = composite_md5_hex(
                 {
-                    "pipeline_name": F.col("pipeline_name"),
-                    "source_name": F.col("source_name"),
-                    "window_start": F.col("source_query_window_start_time"),
-                    "window_end": F.col("source_query_window_end_time"),
-                }
-            ),
-        ).withColumn(
-            "unique_run_id",
-            composite_md5_id(
+                    "pipeline_name": r.get("pipeline_name"),
+                    "source_name": r.get("source_name"),
+                    "window_start": r.get("source_query_window_start_time"),
+                    "window_end": r.get("source_query_window_end_time"),
+                },
+                tz,
+            )
+            run_id = composite_md5_hex(
+                {"source_id": source_id, "inserted": r.get("record_first_inserted_time")}, tz
+            )
+            records.append(
                 {
-                    "source_id": F.col("unique_source_id"),
-                    "inserted": F.col("record_first_inserted_time"),
+                    **{k: utc_naive(v) if isinstance(v, datetime) else v for k, v in r.items()},
+                    "unique_source_id": source_id,
+                    "unique_run_id": run_id,
                 }
-            ),
-        )
-        self._overwrite(itertools.chain(self._tables(), [df.toArrow()]))
+            )
+        table = pa.Table.from_pylist(records, schema=ARROW_SCHEMA)
+        self._overwrite(itertools.chain(self._tables(), [table]))
         return len(rows)
 
     # -- keyed conditional update (the MERGE kernel for M1..M4) ------------
@@ -518,6 +547,69 @@ def _incremented(col: pa.ChunkedArray) -> pa.ChunkedArray:
     return pc.add(col, 1)
 
 
+def utc_naive(value: datetime) -> datetime:
+    """The naive UTC form the table stores. Spark takes a naive
+    datetime as the process's local time on the way in and out; this
+    stores the same instant it would."""
+    return value.astimezone(timezone.utc).replace(tzinfo=None)
+
+
+_EPOCH = datetime(1970, 1, 1)
+
+
+def spark_local(value: datetime) -> datetime:
+    """A stored naive UTC timestamp as Spark's ``collect()`` returns
+    it: the naive local time (``TimestampType.fromInternal``)."""
+    us = (value - _EPOCH) // timedelta(microseconds=1)
+    return datetime.fromtimestamp(us // 1_000_000).replace(microsecond=us % 1_000_000)
+
+
+def collected(table: pa.Table) -> list[Row]:
+    """Control rows as Spark's ``collect()`` returns them: ``Row``s
+    indexable by column name, timestamps as naive local-time datetimes."""
+    cols = [
+        [None if v is None else spark_local(v) for v in table[name].to_pylist()]
+        if pa.types.is_timestamp(table.schema.field(name).type)
+        else table[name].to_pylist()
+        for name in table.column_names
+    ]
+    make = Row(*table.column_names)
+    return [make(*values) for values in zip(*cols)]
+
+
+def select_pending(rows: pa.Table, limit: int) -> pa.Table:
+    """W5/O1: pending-work selection — oldest window first, then most
+    retried, then lowest priority value; LIMIT n
+    (reference: pending_records_selector.py:20-23). Nulls sort as in
+    Spark: first in an ascending key, last in a descending one."""
+    rows = rows.filter(pc.equal(rows["pipeline_status"], "pending"))
+    start = rows["source_query_window_start_time"]
+    retries = rows["pipeline_retry_count"]
+    priority = rows["pipeline_priority"]
+    keys = pa.table(
+        {
+            "start_set": pc.is_valid(start),
+            "start": start,
+            "retries_null": pc.is_null(retries),
+            "retries": retries,
+            "priority_set": pc.is_valid(priority),
+            "priority": priority,
+        }
+    )
+    order = pc.sort_indices(
+        keys,
+        sort_keys=[
+            ("start_set", "ascending"),
+            ("start", "ascending"),
+            ("retries_null", "ascending"),
+            ("retries", "descending"),
+            ("priority_set", "ascending"),
+            ("priority", "ascending"),
+        ],
+    )
+    return rows.take(order[:limit])
+
+
 def _assign(table: pa.Table, mask, assignments: dict[str, object]) -> pa.Table:
     """Set each assigned column to its new value where ``mask`` holds
     and keep the old value elsewhere (a null mask entry keeps it too,
@@ -525,9 +617,7 @@ def _assign(table: pa.Table, mask, assignments: dict[str, object]) -> pa.Table:
     mask = pc.fill_null(mask, False)
     for name, value in assignments.items():
         if isinstance(value, datetime):
-            # Spark takes a naive datetime as the process's local time
-            # on the way in and out; store the same UTC instant it would
-            value = value.astimezone(timezone.utc).replace(tzinfo=None)
+            value = utc_naive(value)
         i = table.schema.get_field_index(name)
         old = table.column(i)
         new = pc.cast(value(old), old.type) if callable(value) else pa.scalar(value, old.type)

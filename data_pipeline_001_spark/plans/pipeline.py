@@ -13,13 +13,14 @@ Lifecycle per run (reference step numbers preserved):
 
 Stage work is DataFrame transforms against pluggable Source/Sink
 connectors; control state lives in the ControlTable. The per-window
-loop is driver-side (as in the reference); once the source's schema is
-resolved, a window launches four distributed Spark jobs: the source
-count (two, because adaptive execution runs its shuffle stage as a job
-of its own), the stage write and the target write. The stage read-back
-infers nothing, the audit counts the target from its Parquet footers,
-and the control table moves on the driver, all with no job. At
-very large window counts the same stages compose into one job via
+loop is driver-side (as in the reference). Spark does the data work
+only: once the source's schema is resolved, a window launches two
+Spark jobs, the stage write and the target write. Planning (steps
+0-4) reads and writes the control table on the driver through Arrow;
+a Parquet ``FileSource`` counts the window on the driver with
+``pyarrow``, the stage read-back infers nothing, and the audit counts
+the target from its Parquet footers, all with no job. At very large
+window counts the same stages compose into one job via
 ``groupBy(window)`` — see ``extract_all_windows``.
 """
 
@@ -29,20 +30,22 @@ import time
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_001_spark.functions import time_fns
 from data_pipeline_001_spark.functions.hash_fns import percentage_difference
-from data_pipeline_001_spark.operators.windows import (
-    detect_gaps,
-    resolve_duplicates,
-    select_pending,
-)
+from data_pipeline_001_spark.operators.windows import detect_gaps, resolve_duplicates
 from data_pipeline_001_spark.plans.control_table import (
     STAGES,
     ControlTable,
+    collected,
     default_record,
+    select_pending,
+    spark_local,
+    utc_naive,
 )
 from data_pipeline_001_spark.sources.base import Sink, Source
 
@@ -163,6 +166,22 @@ class WindowPipeline:
             & (F.col("source_subcategory") == c.source_desc[2])
         )
 
+    def _scoped_rows(self, where=None) -> pa.Table:
+        """``_scoped`` on the driver: this pipeline's control rows for
+        which the optional mask ``where(batch)`` also holds. No Spark
+        job."""
+        c = self.config
+
+        def keep(t: pa.Table) -> pa.ChunkedArray:
+            mask = pc.equal(t["pipeline_name"], c.pipeline_name)
+            for col, value in zip(
+                ("source_name", "source_category", "source_subcategory"), c.source_desc
+            ):
+                mask = pc.and_(mask, pc.equal(t[col], value))
+            return mask if where is None else pc.and_(mask, where(t))
+
+        return self.control.rows(keep)
+
     # ------------------------------------------------------------------ #
     # Step 0 — populate (state_manager.populate_pipeline_batches)
     # ------------------------------------------------------------------ #
@@ -171,29 +190,31 @@ class WindowPipeline:
         """Plan windows over [start, end): insert control rows for any
         window not already present (fresh start AND backfill collapse
         into one anti-join — J1 — instead of the reference's two code
-        paths, state_manager.py:268-294 / 679-753)."""
-        spine = time_fns.window_spine(
-            self.spark, start, end, self.config.granularity
-        )
-        existing = self._scoped(self.control.read()).select(
-            F.col("source_query_window_start_time").alias("window_start")
-        )
-        missing = spine.join(existing, "window_start", "left_anti")
-        rows = missing.collect()  # spine rows only — bounded, never data-plane
+        paths, state_manager.py:268-294 / 679-753). The spine and the
+        anti-join run on the driver: no Spark job."""
         from data_pipeline_001_spark.sources.file_connectors import window_dir_name
 
-        records = [
-            default_record(
-                self.config.pipeline_name,
-                self.config.source_desc,
-                self.config.target_desc,
-                r["window_start"],
-                r["window_end"],
-                stage_path=window_dir_name(r["window_start"]),
-                tolerance_pct=self.config.tolerance_pct,
+        existing = set(
+            self._scoped_rows()["source_query_window_start_time"].to_pylist()
+        )
+        records = []
+        for ws, we in time_fns.window_bounds(
+            start, end, self.config.granularity, time_fns.session_tzinfo(self.spark)
+        ):
+            if ws in existing:
+                continue
+            ws, we = spark_local(ws), spark_local(we)
+            records.append(
+                default_record(
+                    self.config.pipeline_name,
+                    self.config.source_desc,
+                    self.config.target_desc,
+                    ws,
+                    we,
+                    stage_path=window_dir_name(ws),
+                    tolerance_pct=self.config.tolerance_pct,
+                )
             )
-            for r in rows
-        ]
         return self.control.append_records(records)
 
     def fill_gaps(self) -> int:
@@ -248,10 +269,8 @@ class WindowPipeline:
         """Returns (valid_count, reset_count). Stale rows (runtime >
         acceptable) get the selective M5 reset."""
         now = now or datetime.utcnow()
-        rows = (
-            self._scoped(self.control.read())
-            .where(F.col("pipeline_status") == "in_progress")
-            .collect()
+        rows = collected(
+            self._scoped_rows(lambda t: pc.equal(t["pipeline_status"], "in_progress"))
         )
         stale, valid = [], 0
         for r in rows:
@@ -271,11 +290,16 @@ class WindowPipeline:
     # ------------------------------------------------------------------ #
 
     def pending_records(self, now: datetime | None = None) -> list:
-        boundary = time_fns.rounded_past_timestamp(self.config.x_time_back, now)
-        ct = self._scoped(self.control.read()).where(
-            F.col("source_query_window_start_time") <= F.lit(boundary)
+        """The windows to run now, as ``Row``s in the order to run them
+        (W5), from the driver: no Spark job."""
+        boundary = pa.scalar(
+            utc_naive(time_fns.rounded_past_timestamp(self.config.x_time_back, now)),
+            pa.timestamp("us"),
         )
-        return select_pending(ct, self.config.max_pipeline_runs).collect()
+        rows = self._scoped_rows(
+            lambda t: pc.less_equal(t["source_query_window_start_time"], boundary)
+        )
+        return collected(select_pending(rows, self.config.max_pipeline_runs))
 
     # ------------------------------------------------------------------ #
     # Step 5 — per-window stage execution
@@ -650,7 +674,7 @@ class WindowPipeline:
         """Whole-plan batch execution — N windows, THREE Spark jobs
         total (extract+stage write, target write, audit aggregation)
         plus one columnar control MERGE, instead of the per-window
-        loop's 4 jobs × N windows. Requires the target sink to
+        loop's 2 jobs × N windows. Requires the target sink to
         support ``load_all`` (DayPartitionedTableSink).
 
         Returns the per-window audit DataFrame

@@ -1,0 +1,388 @@
+"""The run's control plane on the driver, checked against the Spark
+forms it replaced: the window spine, the F9 ids ``append_records``
+computes, pending selection, and ``FileSource``'s Parquet count. Every
+check runs in this process and again under ``TZ=America/New_York``,
+where Spark takes a naive datetime as New York time."""
+
+import os
+import random
+import subprocess
+import sys
+from datetime import datetime, timedelta, timezone
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from conftest import SF_DIR
+from pyspark.sql import functions as F
+
+from data_pipeline_001_spark.functions import time_fns
+from data_pipeline_001_spark.functions.hash_fns import composite_md5_id
+from data_pipeline_001_spark.plans.control_table import (
+    CONTROL_SCHEMA,
+    ControlTable,
+    default_record,
+)
+from data_pipeline_001_spark.plans.pipeline import PipelineConfig, WindowPipeline
+from data_pipeline_001_spark.sources.file_connectors import (
+    FileSource,
+    PartitionedParquetSink,
+    window_dir_name,
+    window_predicate,
+)
+
+DAY = datetime(2024, 1, 2)
+DAY_END = datetime(2024, 1, 3)
+
+
+def _pipe(spark, tmp_path, name="plan", granularity="6h", runs=4):
+    return WindowPipeline(
+        spark,
+        PipelineConfig(pipeline_name=name, granularity=granularity, max_pipeline_runs=runs),
+        FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts"),
+        PartitionedParquetSink(spark, str(tmp_path / f"{name}_stage")),
+        PartitionedParquetSink(spark, str(tmp_path / f"{name}_target")),
+        ControlTable(spark, str(tmp_path / f"{name}_control")),
+    )
+
+
+def _spark_ids(df):
+    """The Spark form of ``append_records``' F9 ids."""
+    df = df.withColumn(
+        "unique_source_id",
+        composite_md5_id(
+            {
+                "pipeline_name": F.col("pipeline_name"),
+                "source_name": F.col("source_name"),
+                "window_start": F.col("source_query_window_start_time"),
+                "window_end": F.col("source_query_window_end_time"),
+            }
+        ),
+    )
+    return df.withColumn(
+        "unique_run_id",
+        composite_md5_id(
+            {"source_id": F.col("unique_source_id"), "inserted": F.col("record_first_inserted_time")}
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# planning
+# --------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "start,end,granularity,tz",
+    [
+        (DAY, DAY_END, "6h", "UTC"),
+        (datetime(2024, 1, 2, 0, 20), datetime(2024, 1, 2, 5, 10, 30), "1h", "UTC"),  # clamped
+        (datetime(2024, 1, 2, 0, 0, 0, 250), datetime(2024, 1, 2, 2), "45m", "UTC"),
+        (DAY, DAY + timedelta(minutes=30), "1h", "UTC"),  # one clamped window
+        (datetime(2024, 3, 10), datetime(2024, 3, 11), "1h", "America/Los_Angeles"),  # 23 h
+        (datetime(2024, 11, 3), datetime(2024, 11, 4), "1h", "America/Los_Angeles"),  # 25 h
+        (
+            datetime(2024, 1, 2, tzinfo=timezone(timedelta(hours=-5))),
+            datetime(2024, 1, 2, 12, tzinfo=timezone.utc),
+            "2h",
+            "UTC",
+        ),
+    ],
+)
+def test_window_bounds_equal_window_spine(spark, start, end, granularity, tz):
+    with time_fns.session_timezone(spark, tz):
+        spine = time_fns.window_spine(spark, start, end, granularity).collect()
+        bounds = time_fns.window_bounds(
+            start, end, granularity, time_fns.session_tzinfo(spark)
+        )
+    # window_spine's rows come back as local time; compare instants
+    expected = [
+        (r["window_start"].astimezone(timezone.utc), r["window_end"].astimezone(timezone.utc))
+        for r in spine
+    ]
+    got = [(s.replace(tzinfo=timezone.utc), e.replace(tzinfo=timezone.utc)) for s, e in bounds]
+    assert got == expected
+
+
+def test_append_ids_equal_composite_md5_id(spark, tmp_path):
+    """``append_records`` hashes on the driver what ``composite_md5_id``
+    hashes in Spark, for whole-second and microsecond insert times and
+    window bounds."""
+    rows = []
+    for i, inserted in enumerate(
+        [datetime(2024, 5, 1, 12, 0, 0), datetime(2024, 5, 1, 12, 0, 0, 500000),
+         datetime(2024, 5, 1, 12, 0, 1, 123456), datetime(2024, 5, 1, 12, 0, 2, 120)]
+    ):
+        start = DAY + timedelta(hours=i, microseconds=7 * i)
+        rec = default_record(
+            "ids", ("events", "file", "parquet"), ("target", "file", "parquet"),
+            start, start + timedelta(hours=1), stage_path=window_dir_name(start),
+        )
+        rec["record_first_inserted_time"] = inserted
+        rows.append(rec)
+    table = ControlTable(spark, str(tmp_path / "control"))
+    table.append_records(rows)
+    got = [
+        (r["unique_source_id"], r["unique_run_id"])
+        for r in table.read().orderBy("source_query_window_start_time").collect()
+    ]
+    expected = [
+        (r["unique_source_id"], r["unique_run_id"])
+        for r in _spark_ids(spark.createDataFrame(rows, CONTROL_SCHEMA))
+        .orderBy("source_query_window_start_time")
+        .collect()
+    ]
+    assert got == expected
+    assert len(set(got)) == len(rows)
+
+
+def test_populate_over_a_spark_planned_table_adds_nothing(spark, tmp_path):
+    """A table planned by the Spark path (``window_spine`` + Spark ids)
+    holds the same windows and ids the driver plans, so re-running
+    ``populate`` over it inserts no duplicate."""
+    pipe = _pipe(spark, tmp_path)
+    spine = time_fns.window_spine(spark, DAY, DAY_END, "6h").collect()
+    records = [
+        default_record(
+            "plan", ("events", "file", "parquet"), ("target", "file", "parquet"),
+            r["window_start"], r["window_end"], stage_path=window_dir_name(r["window_start"]),
+        )
+        for r in spine
+    ]
+    _spark_ids(spark.createDataFrame(records, CONTROL_SCHEMA)).write.parquet(pipe.control.path)
+    spark_planned = pipe.control.read().collect()
+
+    assert pipe.populate(DAY, DAY_END) == 0
+    assert pipe.populate(DAY, DAY_END + timedelta(hours=6)) == 1
+
+    fresh = _pipe(spark, tmp_path / "fresh")
+    assert fresh.populate(DAY, DAY_END) == len(spine)
+
+    def plan(rows):
+        return sorted(
+            (r["unique_source_id"], r["source_query_window_start_time"],
+             r["source_query_window_end_time"], r["stage_name"])
+            for r in rows
+        )
+
+    assert plan(fresh.control.read().collect()) == plan(spark_planned)
+
+
+@pytest.mark.slow
+def test_run_matches_every_window_in_spark_pending_order(spark, tmp_path):
+    """``run()`` completes and matches every window, and
+    ``pending_records()`` returns the ids and bounds the Spark path
+    (``read()`` + ``orderBy`` + ``limit``) selects, in its order."""
+    pipe = _pipe(spark, tmp_path, granularity="3h", runs=5)
+    pipe.populate(DAY, DAY_END)
+    boundary = time_fns.rounded_past_timestamp(pipe.config.x_time_back)
+    spark_path = (
+        pipe.control.read()
+        .where(
+            (F.col("pipeline_name") == "plan")
+            & (F.col("pipeline_status") == "pending")
+            & (F.col("source_query_window_start_time") <= F.lit(boundary))
+        )
+        .orderBy(
+            F.col("source_query_window_start_time").asc(),
+            F.col("pipeline_retry_count").desc(),
+            F.col("pipeline_priority").asc(),
+        )
+        .limit(5)
+        .collect()
+    )
+
+    def keys(rows):
+        return [
+            (r["unique_source_id"], r["source_query_window_start_time"],
+             r["source_query_window_end_time"])
+            for r in rows
+        ]
+
+    assert keys(pipe.pending_records()) == keys(spark_path)
+    assert len(spark_path) == 5
+
+    pipe.config.max_pipeline_runs = 8
+    result = pipe.run(DAY, DAY_END)
+    assert (result.processed, result.completed) == (8, 8)
+    rows = pipe.control.read().collect()
+    assert len(rows) == 8
+    for r in rows:
+        assert r["count_match_status"] == "matched"
+        assert r["source_count"] == r["target_count"]
+    first = min(r["source_query_window_start_time"] for r in rows)
+    last = max(r["source_query_window_end_time"] for r in rows)
+    assert sum(r["source_count"] for r in rows) == _spark_count(pipe.source, first, last) > 0
+
+
+# --------------------------------------------------------------------------
+# FileSource.count on the driver
+# --------------------------------------------------------------------------
+
+BASE = datetime(2024, 1, 2, 6)
+WINDOWS = [(BASE + timedelta(hours=h), BASE + timedelta(hours=h + 1)) for h in range(-1, 4)]
+
+
+def _us(value: datetime) -> int:
+    """The instant ``F.lit`` gives a naive datetime, in µs."""
+    return int(value.timestamp()) * 1_000_000 + value.microsecond
+
+
+def _events(n=400, seed=3):
+    """Timestamps in µs: random ones over the windows plus, for each
+    window bound, one on it and one a microsecond either side of it."""
+    rng = random.Random(seed)
+    lo, hi = _us(WINDOWS[0][0]) - 3_600_000_000, _us(WINDOWS[-1][1]) + 3_600_000_000
+    values = [rng.randrange(lo, hi) for _ in range(n)]
+    for start, _ in WINDOWS + [(WINDOWS[-1][1], None)]:
+        values += [_us(start) - 1, _us(start), _us(start) + 1]
+    rng.shuffle(values)
+    return values
+
+
+def _write(path, ts, row_group_size=None, **cols):
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(pa.table({"ts": ts, **cols}), path, row_group_size=row_group_size)
+
+
+def _spark_count(src, start, end):
+    return src._read().where(window_predicate(src.ts_col, start, end)).count()
+
+
+def _assert_driver_counts(src, windows=WINDOWS):
+    for start, end in windows:
+        got = src._driver_count(start, end)
+        assert got is not None, "the driver path was not taken"
+        assert got == _spark_count(src, start, end), (start, end)
+
+
+def test_driver_count_microseconds_unsorted_row_groups(spark, tmp_path):
+    path = str(tmp_path / "us" / "part-0.parquet")
+    _write(path, pa.array(_events(), pa.timestamp("us")), row_group_size=64)
+    assert pq.ParquetFile(path).metadata.num_row_groups > 4
+    _assert_driver_counts(FileSource(spark, os.path.dirname(path)))
+
+
+def test_driver_count_nanoseconds(spark, tmp_path):
+    """TIMESTAMP(NANOS): Spark truncates to µs, so a value a nanosecond
+    before a bound counts in the window before it."""
+    ns = []
+    for v in _events():
+        ns += [v * 1000, v * 1000 - 1, v * 1000 + 999]
+    path = str(tmp_path / "ns" / "part-0.parquet")
+    _write(path, pa.array(ns, pa.timestamp("ns")), row_group_size=200)
+    _assert_driver_counts(FileSource(spark, os.path.dirname(path)))
+
+
+@pytest.mark.parametrize("unit,tz", [("us", "UTC"), ("ms", "America/New_York"), ("ns", "UTC")])
+def test_driver_count_time_zone_aware_column(spark, tmp_path, unit, tz):
+    values = pa.array([v * 1000 for v in _events()], pa.timestamp("ns", tz=tz))
+    path = str(tmp_path / unit / "part-0.parquet")
+    _write(path, values.cast(pa.timestamp(unit, tz=tz), safe=False))
+    src = FileSource(spark, os.path.dirname(path))
+    _assert_driver_counts(src)
+    # an aware window bound is the instant it names
+    _assert_driver_counts(
+        src, [(s.replace(tzinfo=timezone.utc), e.replace(tzinfo=timezone.utc)) for s, e in WINDOWS]
+    )
+
+
+def test_driver_count_excludes_null_fields(spark, tmp_path):
+    ts = _events()
+    n = len(ts)
+    path = str(tmp_path / "nulls" / "part-0.parquet")
+    _write(
+        path,
+        pa.array([None if i % 11 == 0 else v for i, v in enumerate(ts)], pa.timestamp("us")),
+        row_group_size=100,
+        user_id=pa.array([None if i % 3 == 0 else i for i in range(n)], pa.int64()),
+        event_type=pa.array([None if i % 5 == 0 else "view" for i in range(n)]),
+    )
+    root = os.path.dirname(path)
+    _assert_driver_counts(FileSource(spark, root))
+    _assert_driver_counts(FileSource(spark, root, must_exist=("user_id",)))
+    _assert_driver_counts(
+        FileSource(spark, root, must_exist=("user_id",), exclude_null=("event_type",))
+    )
+
+
+def test_driver_count_hive_partitions_and_hidden_files(spark, tmp_path):
+    """One partition written by pyarrow, one by Spark (INT96, with its
+    ``_SUCCESS`` and ``.crc`` files), plus stray hidden files."""
+    root = tmp_path / "hive"
+    ts = _events()
+    _write(str(root / "region=0" / "part-0.parquet"), pa.array(ts[::2], pa.timestamp("us")))
+    _write(str(tmp_path / "odd" / "part-0.parquet"), pa.array(ts[1::2], pa.timestamp("us")))
+    spark.read.parquet(str(tmp_path / "odd")).write.parquet(str(root / "region=1"))
+    assert any(n.endswith(".crc") for n in os.listdir(root / "region=1"))
+    (root / "_SUCCESS").write_text("")
+    (root / "region=0" / ".orphan.parquet.crc").write_bytes(b"not parquet")
+    (root / "region=0" / "_committed_123").write_text("{}")
+    _assert_driver_counts(FileSource(spark, str(root)))
+
+
+def test_driver_count_sees_a_file_added_after_the_first_read(spark, tmp_path):
+    root = tmp_path / "grow"
+    ts = _events()
+    _write(str(root / "a.parquet"), pa.array(ts, pa.timestamp("us")))
+    src = FileSource(spark, str(root))
+    before = src.count(*WINDOWS[1])
+    _write(str(root / "b.parquet"), pa.array(ts, pa.timestamp("us")))
+    assert src.count(*WINDOWS[1]) == 2 * before > 0
+    _assert_driver_counts(src)
+
+
+def test_source_past_one_split_counts_on_the_driver(spark, tmp_path):
+    """A window whose row groups outgrow one Spark input split is still
+    counted on the driver, one file or many, and the count is Spark's."""
+    root = tmp_path / "big"
+    ts = _events(4000)
+    _write(str(root / "part-0.parquet"), pa.array(ts, pa.timestamp("us")), row_group_size=500)
+    for i in range(1, 9):
+        _write(str(root / f"part-{i}.parquet"), pa.array(ts[i::9], pa.timestamp("us")))
+    src = FileSource(spark, str(root))
+    key = "spark.sql.files.maxPartitionBytes"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "4k")
+    try:
+        _assert_driver_counts(src, WINDOWS + [(WINDOWS[0][0], WINDOWS[-1][1])])
+    finally:
+        spark.conf.set(key, previous)
+
+
+def test_time_zone_free_column_read_as_ntz_counts_in_spark(spark, tmp_path):
+    """With NTZ inference on, Spark reads a time zone-free column as
+    wall times in the session time zone; that count stays Spark's."""
+    path = str(tmp_path / "ntz" / "part-0.parquet")
+    _write(path, pa.array(_events(), pa.timestamp("us")))
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        src = FileSource(spark, os.path.dirname(path))
+        start, end = WINDOWS[1]
+        assert src._driver_count(start, end) is None
+        assert src.count(start, end) == _spark_count(src, start, end) > 0
+        assert src._driver_count(start, end) is None  # the resolved schema says NTZ
+    finally:
+        spark.conf.set(key, previous)
+
+
+@pytest.mark.slow
+def test_checks_hold_under_new_york_time(repo_root):
+    """Every check of this module again, in a process whose local time
+    is New York's: naive datetimes move five hours against UTC."""
+    if os.environ.get("TZ") == "America/New_York":
+        pytest.skip("this process is the New York run")
+    env = {**os.environ, "TZ": "America/New_York", "SPARK_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-m", "pytest", "-q", "-p", "no:cacheprovider",
+         os.path.abspath(__file__), "-k", "not new_york"],
+        cwd=repo_root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, proc.stdout[-4000:] + proc.stderr[-2000:]
+    assert " passed" in proc.stdout

@@ -343,9 +343,9 @@ def _spark_jobs(spark, fn):
 
 def test_warm_window_launches_only_count_and_write_jobs(spark, tmp_path):
     """Once the first window has resolved the source schema, a window's
-    only Spark jobs are the source count and the stage and target
-    writes: extract and the stage read-back infer no schema, and both
-    sinks count from Parquet footers."""
+    only Spark jobs are the stage and target writes: the Parquet source
+    counts on the driver, extract and the stage read-back infer no
+    schema, and both sinks count from Parquet footers."""
     source = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts")
     stage = PartitionedParquetSink(spark, str(tmp_path / "stage"))
     target = DayPartitionedTableSink(spark, str(tmp_path / "target"))
@@ -360,9 +360,8 @@ def test_warm_window_launches_only_count_and_write_jobs(spark, tmp_path):
     assert _spark_jobs(spark, lambda: source.extract(s, e).schema) == 0
     assert _spark_jobs(spark, lambda: stage.count(s, e)) == 0
     assert _spark_jobs(spark, lambda: target.count(s, e)) == 0
-    count_jobs = _spark_jobs(spark, lambda: source.count(s, e))
-    assert count_jobs >= 1
-    assert _spark_jobs(spark, lambda: pipe.run_window(second)) == count_jobs + 2
+    assert _spark_jobs(spark, lambda: source.count(s, e)) == 0
+    assert _spark_jobs(spark, lambda: pipe.run_window(second)) == 2
     r = [
         x
         for x in control.read().collect()
@@ -370,6 +369,36 @@ def test_warm_window_launches_only_count_and_write_jobs(spark, tmp_path):
     ][0]
     assert r["pipeline_status"] == "completed"
     assert r["source_count"] == r["target_count"] > 0
+
+
+def test_planning_a_run_launches_no_spark_job(spark, tmp_path):
+    """populate, the stale-run check and pending selection read and
+    write the control table on the driver: planning a run, fresh or
+    over a table that already holds windows, launches no Spark job."""
+    pipe = WindowPipeline(
+        spark,
+        PipelineConfig(pipeline_name="plan", granularity="3h", max_pipeline_runs=4),
+        FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts"),
+        PartitionedParquetSink(spark, str(tmp_path / "stage")),
+        PartitionedParquetSink(spark, str(tmp_path / "target")),
+        ControlTable(spark, str(tmp_path / "control")),
+    )
+
+    runs = []
+
+    def plan(start, end):
+        runs.append(
+            (pipe.populate(start, end), pipe.validate_in_progress(), pipe.pending_records())
+        )
+
+    assert _spark_jobs(spark, lambda: plan(DAY, datetime(2024, 1, 2, 12))) == 0
+    inserted, validated, pending = runs[-1]
+    assert (inserted, validated, len(pending)) == (4, (0, 0), 4)
+    pipe.control.claim(pending[0]["unique_source_id"])
+    assert _spark_jobs(spark, lambda: plan(DAY, DAY_END)) == 0
+    inserted, validated, pending = runs[-1]
+    assert (inserted, validated) == (4, (1, 0))
+    assert [r["source_query_window_start_time"].hour for r in pending] == [3, 6, 9, 12]
 
 
 def _write_window_events(spark, path, counts, start=DAY, hours=3):

@@ -3,6 +3,7 @@ overlap pair, duplicate resolution rule order, pending selection."""
 
 from datetime import datetime
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from data_pipeline_001_spark.operators.windows import (
@@ -10,8 +11,8 @@ from data_pipeline_001_spark.operators.windows import (
     detect_gaps,
     detect_overlaps,
     resolve_duplicates,
-    select_pending,
 )
+from data_pipeline_001_spark.plans.control_table import select_pending
 
 
 def _windows(spark, rows):
@@ -89,21 +90,36 @@ def test_duplicate_resolution_rule_order(spark):
     assert kept == {"a2", "b2", "c1"}
 
 
-def test_select_pending_order(spark):
-    t = datetime(2024, 1, 1)
-    rows = [
-        ("r1", "pending", datetime(2024, 1, 1, 5), 0, 1.0),
-        ("r2", "pending", datetime(2024, 1, 1, 3), 0, 1.0),   # oldest window → first
-        ("r3", "pending", datetime(2024, 1, 1, 3), 2, 1.0),   # same window, more retries → before r2
-        ("r4", "in_progress", datetime(2024, 1, 1, 1), 0, 1.0),  # not pending
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "id string, pipeline_status string, source_query_window_start_time timestamp, "
-        "pipeline_retry_count int, pipeline_priority double",
+def test_select_pending_order():
+    """W5 on the driver: oldest window first, then most retried, then
+    lowest priority; nulls where Spark's orderBy puts them (first when
+    ascending, last when descending); LIMIT n."""
+    rows = pa.table(
+        {
+            "id": ["r1", "r2", "r3", "r4", "r5", "r6", "r7"],
+            "pipeline_status": ["pending", "pending", "pending", "in_progress",
+                                "pending", "pending", None],
+            "source_query_window_start_time": pa.array(
+                [datetime(2024, 1, 1, 5), datetime(2024, 1, 1, 3),  # oldest window → first
+                 datetime(2024, 1, 1, 3),  # same window, more retries → before r2
+                 datetime(2024, 1, 1, 1),  # not pending
+                 datetime(2024, 1, 1, 3),  # null retries sort last when descending
+                 None,  # null start sorts first when ascending
+                 datetime(2024, 1, 1, 0)],  # null status is not pending
+                pa.timestamp("us"),
+            ),
+            "pipeline_retry_count": pa.array([0, 0, 2, 0, None, 0, 0], pa.int32()),
+            "pipeline_priority": [1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0],
+        }
     )
-    out = [r["id"] for r in select_pending(df, limit=2).collect()]
-    assert out == ["r3", "r2"]
+    assert select_pending(rows, limit=2)["id"].to_pylist() == ["r6", "r3"]
+    assert select_pending(rows, limit=9)["id"].to_pylist() == ["r6", "r3", "r2", "r5", "r1"]
+    tie = rows.set_column(
+        4, "pipeline_priority", pa.array([1.0, 3.0, None, 1.0, 1.0, 1.0, 1.0])
+    ).filter(pa.array([False, True, True, False, False, False, False]))
+    tie = tie.set_column(3, "pipeline_retry_count", pa.array([2, 2], pa.int32()))
+    # same window and retries: null priority first, then lowest value
+    assert select_pending(tie, limit=2)["id"].to_pylist() == ["r3", "r2"]
 
 
 def test_approx_quartiles_agree_with_exact_ntile(spark):
