@@ -1,67 +1,24 @@
-"""Window-function transforms — W1..W4 of SURVEY.md §2.5.
+"""Window-function transforms — W2 and W4 of SURVEY.md §2.5, plus the
+ranked, sampled and sessionized folds the query registry shares.
 
 The reference implements these as pandas scan-line loops; here each is
 a reusable Spark transform over ``Window.partitionBy(day).orderBy(start)``.
 Partitioning by day keeps the sort local to a partition — at 100 TB the
 spine is still millions of small rows/day, never a global sort.
 
-- W1 gap detection           (reference: core/state_manager.py:820-884)
 - W2 overlap detection       (reference: state_manager.py:906-925,
                               utils/time_utils.py:253-268)
-- W3 duplicate prioritization (reference: state_manager.py:937-982)
 - W4 continuity check        (reference: utils/time_utils.py:233-251)
-- W5 priority-ordered selection lives with the control table, on Arrow
-  (``plans.control_table.select_pending``)
+- W1 gap detection, W3 duplicate prioritization and W5 priority-ordered
+  selection plan the control table, so they live with it as Arrow
+  kernels on the driver (``plans.control_table.interior_gaps``,
+  ``duplicate_losers``, ``select_pending``)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def detect_gaps(
-    windows: DataFrame,
-    start_col: str = "window_start",
-    end_col: str = "window_end",
-    day_col: str = "window_day",
-    day_bounds: bool = True,
-) -> DataFrame:
-    """W1: find uncovered intervals between sorted windows within a day.
-
-    Returns (window_day, gap_start, gap_end) for every interior gap
-    (next_start > current_end) and — when ``day_bounds`` — edge gaps
-    between start-of-day/first window and last window/end-of-day.
-    """
-    w = Window.partitionBy(day_col).orderBy(start_col)
-    s, e, d = F.col(start_col), F.col(end_col), F.col(day_col)
-
-    interior = (
-        windows.withColumn("_next_start", F.lead(start_col).over(w))
-        .where(F.col("_next_start") > e)
-        .select(d.alias("window_day"), e.alias("gap_start"), F.col("_next_start").alias("gap_end"))
-    )
-    if not day_bounds:
-        return interior
-
-    day_start = F.to_timestamp(d)
-    day_end = F.to_timestamp(d) + F.expr("interval 1 day")
-    per_day = windows.groupBy(d.alias("window_day")).agg(
-        F.min(s).alias("_first_start"), F.max(e).alias("_last_end")
-    )
-    leading = per_day.where(F.col("_first_start") > F.to_timestamp("window_day")).select(
-        "window_day",
-        F.to_timestamp("window_day").alias("gap_start"),
-        F.col("_first_start").alias("gap_end"),
-    )
-    trailing = per_day.where(
-        F.col("_last_end") < F.to_timestamp("window_day") + F.expr("interval 1 day")
-    ).select(
-        "window_day",
-        F.col("_last_end").alias("gap_start"),
-        (F.to_timestamp("window_day") + F.expr("interval 1 day")).alias("gap_end"),
-    )
-    return interior.unionByName(leading).unionByName(trailing)
 
 
 def detect_overlaps(
@@ -111,35 +68,6 @@ def check_continuity(
             F.col("_next_start").alias("missing_end"),
         )
     )
-
-
-def resolve_duplicates(
-    records: DataFrame,
-    key_cols: tuple[str, ...],
-    status_col: str = "pipeline_status",
-    updated_col: str = "record_last_updated_time",
-    started_col: str = "pipeline_start_time",
-    inserted_col: str = "record_first_inserted_time",
-) -> DataFrame:
-    """W3: keep exactly one record per key by the reference's 4-level rule:
-
-    1. completed beats non-completed
-    2. latest ``record_last_updated_time``
-    3. latest ``pipeline_start_time``
-    4. **oldest** ``record_first_inserted_time``  (inverted final key,
-       state_manager.py:966-973)
-
-    Returns the input plus ``_keep boolean`` — callers filter
-    ``_keep`` to get survivors or ``~_keep`` for deletions (M6).
-    """
-    rank = F.when(F.col(status_col) == "completed", 1).otherwise(0)
-    w = Window.partitionBy(*key_cols).orderBy(
-        rank.desc(),
-        F.col(updated_col).desc_nulls_last(),
-        F.col(started_col).desc_nulls_last(),
-        F.col(inserted_col).asc_nulls_last(),
-    )
-    return records.withColumn("_keep", F.row_number().over(w) == 1)
 
 
 def top_k_per_group(

@@ -17,16 +17,18 @@ one ``part-00000.parquet`` in a temp directory and renames it over the
 live one; a mutation that fails removes its temp directory and leaves
 the table as it was. A table Spark wrote (several part files,
 ``_SUCCESS``, ``.crc``) is read as it is and becomes one file at its
-first mutation. The hourly run's planners (populate's anti-join, the
-stale-run check, pending selection) filter ``rows()`` on the driver,
-``append_records`` computes the F9 md5 ids with ``hashlib``, and a
-state transition (claim, stage completion, failure, reset, delete)
-rewrites on the driver: none of them starts a Spark job. ``read()``
-hands Spark a DataFrame for the callers off that path —
-``fill_gaps``, ``resolve_duplicate_windows``, ``audit_spc_flags`` and
-``run_batch`` — and for outside readers. Only ``merge_audit_results``
-(the batch-path join) computes in Spark; it collects only its changed
-rows (one per window) with ``toArrow()`` for the same writer.
+first mutation. ``WindowPipeline`` reads the table only through
+``rows()`` and writes it only through the mutations below, all on the
+driver: its planners (populate's anti-join, gap detection W1,
+duplicate resolution W3, the stale-run check, pending selection W5)
+filter ``rows()`` with ``pyarrow.compute``, ``append_records``
+computes the F9 md5 ids with ``hashlib``, and every state transition
+(claim, stage completion, failure, reset, delete, and the batch path's
+``merge_audit_results``) is a keyed column rewrite. None of them
+starts a Spark job, apart from the one ``toArrow()`` that pulls the
+batch audit into ``merge_audit_results``. ``read()`` hands Spark a
+DataFrame for the SPC gate (``audit_spc_flags``, whose XmR operator
+runs in Spark) and for outside readers.
 
 One writer process at a time: every mutation rewrites the whole table
 and then does two renames, so two processes mutating one table lose
@@ -64,7 +66,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_pipeline_001_spark.functions.hash_fns import composite_md5_hex
@@ -159,7 +160,9 @@ ARROW_SCHEMA = pa.schema(
 
 
 def _utcnow() -> datetime:
-    return datetime.now(timezone.utc).replace(tzinfo=None)
+    """The one clock of every transition time: now, as an aware UTC
+    instant (``_assign`` stores it as naive UTC)."""
+    return datetime.now(timezone.utc)
 
 
 def default_record(
@@ -175,7 +178,9 @@ def default_record(
 ) -> dict:
     """Build one control row with reference defaults
     (config/drive_table_defaults.json:2-65; id gen state_manager.py:419-484)."""
-    now = _utcnow()
+    # naive local time, the form of the window bounds callers pass:
+    # Spark, and ``append_records``, read a naive datetime as local time
+    now = _utcnow().astimezone().replace(tzinfo=None)
     base = {f.name: None for f in CONTROL_SCHEMA.fields}
     dur = int((window_end - window_start).total_seconds() // 60)
     # placeholder — append_records derives the real md5 ids (F9)
@@ -364,8 +369,10 @@ class ControlTable:
         extra: dict[str, object] | None = None,
     ) -> None:
         """M2: single-update stage completion
-        (source_discovery_manager.py:111-152 et al.)."""
+        (source_discovery_manager.py:111-152 et al.). A naive
+        ``started`` is local time, as Spark reads it."""
         now = _utcnow()
+        started = started.astimezone(timezone.utc)
         assign: dict[str, object] = {
             f"{stage}_status": "completed",
             f"{stage}_start_time": started,
@@ -461,72 +468,86 @@ class ControlTable:
 
     def merge_audit_results(
         self, results: DataFrame, pipeline_name: str | None = None
-    ) -> None:
+    ) -> list[datetime]:
         """Columnar MERGE of per-window batch results — ONE overwrite
         for N windows instead of N row updates (the batch-path upgrade
         of M1+M2+A5; the reference does this row-at-a-time over
         Snowflake, main_pipeline_orchestrator.py:302-404).
 
         ``results`` columns: window_start timestamp, source_count long,
-        target_count long. Every matched window gets all four stages
-        completed + audit metrics; tolerance check decides
-        completed vs the M4-style reset.
+        target_count long, one row per window. Every matched window
+        gets all four stages completed + audit metrics; tolerance check
+        decides completed vs the M4-style reset.
 
         ``pipeline_name`` scopes the merge: in a shared control table
         only that pipeline's rows are eligible to match (the reference
         always scopes drive-table updates by source descriptor). The
-        results are also deduped on window_start (deterministic max per
-        count) so a duplicated audit row can't fan the join out and
-        duplicate control rows in the overwritten table.
+        results are pulled to the driver with ``toArrow()`` and deduped
+        on window_start (max per count), so a duplicated audit row
+        cannot match a control row twice; the matched rows are then
+        rewritten in place, like any other transition. Returns the
+        audited windows (naive UTC) that matched no control row.
         """
+        audit = results.toArrow().group_by("window_start").aggregate(
+            [("source_count", "max"), ("target_count", "max")]
+        )
+        # the stored form: naive UTC
+        windows = pc.cast(audit["window_start"], pa.timestamp("us"))
+        sc, tc = audit["source_count_max"], audit["target_count_max"]
+        pcts = pa.array(
+            [pct_difference(s, t) for s, t in zip(sc.to_pylist(), tc.to_pylist())],
+            pa.float64(),
+        )
         now = _utcnow()
-        r = (
-            results.groupBy(F.col("window_start").alias("_ws"))
-            .agg(
-                F.max("source_count").alias("_sc"),
-                F.max("target_count").alias("_tc"),
+        hit: set[int] = set()
+
+        def merge(t: pa.Table) -> pa.Table:
+            at = pc.index_in(
+                t["source_query_window_start_time"], value_set=windows, skip_nulls=True
             )
-        )
-        cond = F.col("source_query_window_start_time") == F.col("_ws")
-        if pipeline_name is not None:
-            cond = cond & (F.col("pipeline_name") == F.lit(pipeline_name))
-        # only the matched rows change: Spark computes them (one row per
-        # window) and the driver swaps them in for their old versions
-        df = self.read().join(r, cond, "inner")
-        pct = (
-            F.when((F.col("_sc") == 0) & (F.col("_tc") == 0), F.lit(0.0))
-            .when(F.col("_sc") == 0, F.lit(100.0))
-            .otherwise(
-                (F.col("_tc") - F.col("_sc")).cast("double") / F.col("_sc") * 100.0
+            matched = pc.is_valid(at)
+            if pipeline_name is not None:
+                matched = pc.and_(matched, pc.equal(t["pipeline_name"], pipeline_name))
+            hit.update(at.filter(matched).to_pylist())
+            src, tgt, pct = pc.take(sc, at), pc.take(tc, at), pc.take(pcts, at)
+            ok = pc.less_equal(
+                pc.abs(pct), pc.fill_null(t["accepted_tolerance_percentage"], 0.0)
             )
-        )
-        ok = F.abs(pct) <= F.coalesce(F.col("accepted_tolerance_percentage"), F.lit(0.0))
-        assign = {
-            "pipeline_status": F.when(ok, "completed").otherwise("pending"),
-            "pipeline_end_time": F.when(ok, F.lit(now)).otherwise(
-                F.col("pipeline_end_time")
-            ),
-            "completed_stage_number": F.when(ok, F.lit(4)).otherwise(F.lit(0)),
-            "source_count": F.col("_sc"),
-            "target_count": F.col("_tc"),
-            "count_difference": F.col("_tc") - F.col("_sc"),
-            "count_difference_percentage": pct,
-            "count_match_status": F.when(ok, "matched").otherwise("not_matched"),
-            "record_last_updated_time": F.lit(now),
-        }
-        for s in STAGES:
-            assign[f"{s}_status"] = F.when(ok, "completed").otherwise("pending")
-        for col_name, expr in assign.items():
-            df = df.withColumn(
-                col_name, expr.cast(CONTROL_SCHEMA[col_name].dataType)
+            t = _assign(
+                t,
+                matched,
+                {
+                    "source_count": src,
+                    "target_count": tgt,
+                    "count_difference": pc.subtract(tgt, src),
+                    "count_difference_percentage": pct,
+                    "record_last_updated_time": now,
+                },
             )
-        merged = _conform(df.toArrow())
-        stale = merged["unique_source_id"].to_pylist()
-        kept = (
-            t.filter(pc.invert(_keyed(t, "unique_source_id", stale)))
-            for t in self._tables()
-        )
-        self._overwrite(itertools.chain(kept, [merged]))
+            t = _assign(
+                t,
+                pc.and_(matched, ok),
+                {
+                    "pipeline_status": "completed",
+                    "pipeline_end_time": now,
+                    "completed_stage_number": 4,
+                    "count_match_status": "matched",
+                    **{f"{s}_status": "completed" for s in STAGES},
+                },
+            )
+            return _assign(
+                t,
+                pc.and_(matched, pc.invert(ok)),
+                {
+                    "pipeline_status": "pending",
+                    "completed_stage_number": 0,
+                    "count_match_status": "not_matched",
+                    **{f"{s}_status": "pending" for s in STAGES},
+                },
+            )
+
+        self._overwrite(merge(t) for t in self._tables())
+        return [w for i, w in enumerate(windows.to_pylist()) if i not in hit]
 
 
 #: rows per batch a mutation holds on the driver (~70 MB of control rows)
@@ -610,16 +631,75 @@ def select_pending(rows: pa.Table, limit: int) -> pa.Table:
     return rows.take(order[:limit])
 
 
+def pct_difference(source_count: int, target_count: int) -> float:
+    """A5: the audit's count difference as a percentage of the source
+    count; 0 when both are 0, 100 when only the source is
+    (audit_manager.py:385-392)."""
+    if source_count == 0:
+        return 0.0 if target_count == 0 else 100.0
+    return (target_count - source_count) / source_count * 100.0
+
+
+def interior_gaps(rows: pa.Table) -> list[tuple[datetime, datetime]]:
+    """W1: gap detection (reference: state_manager.py:820-884). The
+    windows of each day sorted by start (nulls first, as in Spark);
+    every interior gap, from a window's end to the next start of the
+    same day where that start is later, as naive UTC ``(start, end)``
+    pairs."""
+    rows = rows.sort_by(
+        [("query_window_start_day", "ascending"),
+         ("source_query_window_start_time", "ascending")],
+        null_placement="at_start",
+    )
+    days = rows["query_window_start_day"].to_pylist()
+    starts = rows["source_query_window_start_time"].to_pylist()
+    ends = rows["source_query_window_end_time"].to_pylist()
+    return [
+        (end, next_start)
+        for day, end, next_day, next_start in zip(days, ends, days[1:], starts[1:])
+        if day == next_day and end is not None and next_start is not None and next_start > end
+    ]
+
+
+def duplicate_losers(rows: pa.Table, key: str = "source_query_window_start_time") -> pa.Table:
+    """W3: duplicate prioritisation (reference: state_manager.py:937-982).
+    Every row but the best of its ``key``, by the reference's 4-level
+    rule: completed beats non-completed, then the latest
+    ``record_last_updated_time``, then the latest ``pipeline_start_time``,
+    then the OLDEST ``record_first_inserted_time`` (inverted final key,
+    state_manager.py:966-973). A null time ranks last, as Spark's
+    ``desc_nulls_last``/``asc_nulls_last`` rank it; a null status is
+    not completed."""
+    completed = pc.fill_null(pc.equal(rows["pipeline_status"], "completed"), False)
+    ranked = rows.append_column("_completed", completed).sort_by(
+        [
+            (key, "ascending"),
+            ("_completed", "descending"),
+            ("record_last_updated_time", "descending"),
+            ("pipeline_start_time", "descending"),
+            ("record_first_inserted_time", "ascending"),
+        ]
+    )
+    keys = ranked[key].to_pylist()
+    loses = [i > 0 and k == keys[i - 1] for i, k in enumerate(keys)]
+    return ranked.drop_columns(["_completed"]).filter(pa.array(loses, pa.bool_()))
+
+
 def _assign(table: pa.Table, mask, assignments: dict[str, object]) -> pa.Table:
     """Set each assigned column to its new value where ``mask`` holds
     and keep the old value elsewhere (a null mask entry keeps it too,
-    like SQL ``CASE WHEN``)."""
+    like SQL ``CASE WHEN``). A value is a literal, an array aligned
+    with the table's rows, or a function of the old column."""
     mask = pc.fill_null(mask, False)
     for name, value in assignments.items():
         if isinstance(value, datetime):
             value = utc_naive(value)
         i = table.schema.get_field_index(name)
         old = table.column(i)
-        new = pc.cast(value(old), old.type) if callable(value) else pa.scalar(value, old.type)
+        if callable(value):
+            value = value(old)
+        elif not isinstance(value, (pa.Array, pa.ChunkedArray)):
+            value = pa.scalar(value, old.type)
+        new = pc.cast(value, old.type)
         table = table.set_column(i, ARROW_SCHEMA.field(name), pc.if_else(mask, new, old))
     return table

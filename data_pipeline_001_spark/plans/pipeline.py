@@ -15,9 +15,11 @@ Stage work is DataFrame transforms against pluggable Source/Sink
 connectors; control state lives in the ControlTable. The per-window
 loop is driver-side (as in the reference). Spark does the data work
 only: once the source's schema is resolved, a window launches two
-Spark jobs, the stage write and the target write. Planning (steps
-0-4) reads and writes the control table on the driver through Arrow;
-a Parquet ``FileSource`` counts the window on the driver with
+Spark jobs, the stage write and the target write. Every read and
+write of the control table — planning (steps 0-4), gap and duplicate
+repair, the state transitions and the batch path's merge — runs on the
+driver through Arrow; only the SPC gate reads it in Spark. A
+Parquet ``FileSource`` counts the window on the driver with
 ``pyarrow``, the stage read-back infers nothing, and the audit counts
 the target from its Parquet footers, all with no job. At very large
 window counts the same stages compose into one job via
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from datetime import datetime, timedelta
+from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -36,13 +38,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_001_spark.functions import time_fns
-from data_pipeline_001_spark.functions.hash_fns import percentage_difference
-from data_pipeline_001_spark.operators.windows import detect_gaps, resolve_duplicates
 from data_pipeline_001_spark.plans.control_table import (
     STAGES,
     ControlTable,
     collected,
     default_record,
+    duplicate_losers,
+    interior_gaps,
+    pct_difference,
     select_pending,
     spark_local,
     utc_naive,
@@ -93,7 +96,6 @@ class PipelineConfig:
     timezone: str = "UTC"
     source_desc: tuple[str, str, str] = ("events", "file", "parquet")
     target_desc: tuple[str, str, str] = ("target", "file", "parquet")
-    audit_max_retries: int = 3  # legacy cap; the R3 envelope tiers its own counts
     audit_base_wait_s: float = 60.0  # reference's nominal base wait (Snowpipe)
     audit_wait_scale: float = 0.0  # 0 = compute schedule but never block (sync sinks)
     # post-audit SPC gate (beyond the reference: audit_manager.py stops
@@ -152,24 +154,13 @@ class WindowPipeline:
         self.target_sink = target_sink
         self.control = control
 
-    def _scoped(self, ct: DataFrame) -> DataFrame:
-        """Restrict control rows to THIS pipeline's descriptor — the
-        reference always scopes drive-table operations by source
+    def _scoped_rows(self, where=None) -> pa.Table:
+        """THIS pipeline's control rows for which the optional mask
+        ``where(batch)`` also holds, read on the driver: no Spark job.
+        The reference always scopes drive-table operations by source
         name/category/subcategory (pending_records_selector.py), so a
         shared control table never lets one pipeline claim, reap, or
         overwrite another's windows."""
-        c = self.config
-        return ct.where(
-            (F.col("pipeline_name") == c.pipeline_name)
-            & (F.col("source_name") == c.source_desc[0])
-            & (F.col("source_category") == c.source_desc[1])
-            & (F.col("source_subcategory") == c.source_desc[2])
-        )
-
-    def _scoped_rows(self, where=None) -> pa.Table:
-        """``_scoped`` on the driver: this pipeline's control rows for
-        which the optional mask ``where(batch)`` also holds. No Spark
-        job."""
         c = self.config
 
         def keep(t: pa.Table) -> pa.ChunkedArray:
@@ -218,38 +209,26 @@ class WindowPipeline:
         return self.control.append_records(records)
 
     def fill_gaps(self) -> int:
-        """Backfill: detect per-day coverage gaps in the control table
-        (W1) and insert windows at the pipeline granularity (M7)."""
-        ct = self._scoped(self.control.read()).select(
-            F.col("source_query_window_start_time").alias("window_start"),
-            F.col("source_query_window_end_time").alias("window_end"),
-            F.col("query_window_start_day").alias("window_day"),
-        )
-        if ct.isEmpty():
-            return 0
-        gaps = detect_gaps(ct, day_bounds=False).collect()
+        """Backfill: detect per-day coverage gaps in this pipeline's
+        control rows (W1) and insert windows at the pipeline
+        granularity (M7), on the driver: no Spark job."""
         inserted = 0
-        for g in gaps:
-            inserted += self.populate(g["gap_start"], g["gap_end"])
+        for start, end in interior_gaps(self._scoped_rows()):
+            # the stored bounds are naive UTC: hand populate the instants
+            inserted += self.populate(
+                start.replace(tzinfo=timezone.utc), end.replace(tzinfo=timezone.utc)
+            )
         return inserted
 
     def resolve_duplicate_windows(self) -> int:
-        """W3 + M6: delete all but the best record per window key.
+        """W3 + M6: delete all but the best record per window key, on
+        the driver: no Spark job.
 
         Deletion keys on unique_run_id — identical re-planned windows
         share the deterministic unique_source_id, so run id is the
         only column that tells the copies apart.
         """
-        ct = self._scoped(self.control.read())
-        flagged = resolve_duplicates(
-            ct, key_cols=("source_query_window_start_time",)
-        )
-        losers = [
-            r["unique_run_id"]
-            for r in flagged.where(~F.col("_keep"))
-            .select("unique_run_id")
-            .collect()
-        ]
+        losers = duplicate_losers(self._scoped_rows())["unique_run_id"].to_pylist()
         self.control.delete_records(losers, key_col="unique_run_id")
         return len(losers)
 
@@ -267,11 +246,14 @@ class WindowPipeline:
 
     def validate_in_progress(self, now: datetime | None = None) -> tuple[int, int]:
         """Returns (valid_count, reset_count). Stale rows (runtime >
-        acceptable) get the selective M5 reset."""
-        now = now or datetime.utcnow()
-        rows = collected(
-            self._scoped_rows(lambda t: pc.equal(t["pipeline_status"], "in_progress"))
-        )
+        acceptable) get the selective M5 reset. The stored start times
+        are naive UTC; a naive ``now`` is taken as UTC too."""
+        now = now or datetime.now(timezone.utc)
+        if now.tzinfo is not None:
+            now = utc_naive(now)
+        rows = self._scoped_rows(
+            lambda t: pc.equal(t["pipeline_status"], "in_progress")
+        ).to_pylist()
         stale, valid = [], 0
         for r in rows:
             started = r["pipeline_start_time"]
@@ -350,7 +332,7 @@ class WindowPipeline:
             # Stage 1 — source discovery: count + F12 duration estimates
             # (downstream staleness reaping keys on these, so a heavy
             # window gets a proportionally longer acceptable runtime)
-            t0 = datetime.utcnow()
+            t0 = datetime.now(timezone.utc)
             src_count = self.source.count(start, end)
             self.control.complete_stage(
                 sid,
@@ -365,7 +347,7 @@ class WindowPipeline:
             # Stage 2 — source → stage (idempotence short-circuit S3,
             # clean S4, extract S2)
             stage = "source_to_stage"
-            t0 = datetime.utcnow()
+            t0 = datetime.now(timezone.utc)
             if self.stage_sink.exists(start, end):
                 self.stage_sink.clean(start, end)
             extracted = self.source.extract(start, end)
@@ -394,7 +376,7 @@ class WindowPipeline:
             # written with, so nothing is inferred, and load it into
             # the target
             stage = "stage_to_target"
-            t0 = datetime.utcnow()
+            t0 = datetime.now(timezone.utc)
             if self.target_sink.exists(start, end):
                 self.target_sink.clean(start, end)
             staged_df = self.spark.read.schema(extracted.schema).parquet(
@@ -405,7 +387,7 @@ class WindowPipeline:
 
             # Stage 4 — audit (A4 recount, A5 reconciliation, R3 retry)
             stage = "audit"
-            t0 = datetime.utcnow()
+            t0 = datetime.now(timezone.utc)
             status = self._audit(sid, start, end, src_count, t0)
             # Stage 4b (optional) — post-audit SPC gate: the window's
             # audited count joins the pipeline's metrics series (the
@@ -449,10 +431,15 @@ class WindowPipeline:
             xmr_control_points,
         )
 
+        c = self.config
         series = (
-            self._scoped(self.control.read())
+            self.control.read()
             .where(
-                (F.col("audit_status") == "completed")
+                (F.col("pipeline_name") == c.pipeline_name)
+                & (F.col("source_name") == c.source_desc[0])
+                & (F.col("source_category") == c.source_desc[1])
+                & (F.col("source_subcategory") == c.source_desc[2])
+                & (F.col("audit_status") == "completed")
                 & F.col("target_count").isNotNull()
             )
             .select(
@@ -488,18 +475,6 @@ class WindowPipeline:
                 ucl=round(r["ucl"], 2),
                 lcl=round(r["lcl"], 2),
             )
-
-    @staticmethod
-    def _pct(src_count: int, tgt_count: int) -> float:
-        return (
-            0.0
-            if (src_count == 0 and tgt_count == 0)
-            else (
-                100.0
-                if src_count == 0
-                else (tgt_count - src_count) / src_count * 100.0
-            )
-        )
 
     def _sleep(self, seconds: float) -> None:
         """Audit wait hook. The reference sleeps real wall-clock between
@@ -540,7 +515,7 @@ class WindowPipeline:
                 extra={
                     "target_count": tgt,
                     "count_difference": tgt - src_count,
-                    "count_difference_percentage": self._pct(src_count, tgt),
+                    "count_difference_percentage": pct_difference(src_count, tgt),
                     "count_match_status": "matched",
                 },
             )
@@ -554,7 +529,7 @@ class WindowPipeline:
             return "reset"
 
         initial = self.target_sink.count(start, end)
-        initial_pct = self._pct(src_count, initial)
+        initial_pct = pct_difference(src_count, initial)
         if abs(initial_pct) <= tol:
             return done(initial)
 
@@ -571,7 +546,7 @@ class WindowPipeline:
         )
         self._sleep(base_wait)
         first = self.target_sink.count(start, end)
-        if abs(self._pct(src_count, first)) <= tol:
+        if abs(pct_difference(src_count, first)) <= tol:
             return done(first)
         improvement = first - initial
         if improvement <= 0:
@@ -599,7 +574,7 @@ class WindowPipeline:
         for retry_num in range(2, max_total + 1):
             self._sleep(phase2_wait_seconds(retry_num, mult, base_wait))
             new = self.target_sink.count(start, end)
-            if abs(self._pct(src_count, new)) <= tol:
+            if abs(pct_difference(src_count, new)) <= tol:
                 return done(new)
             if new > prev:
                 consecutive_no_improvement = 0
@@ -671,11 +646,18 @@ class WindowPipeline:
         )
 
     def run_batch(self, plan_start: datetime, plan_end: datetime) -> DataFrame:
-        """Whole-plan batch execution — N windows, THREE Spark jobs
-        total (extract+stage write, target write, audit aggregation)
-        plus one columnar control MERGE, instead of the per-window
-        loop's 2 jobs × N windows. Requires the target sink to
-        support ``load_all`` (DayPartitionedTableSink).
+        """Whole-plan batch execution — N windows in a fixed number of
+        Spark jobs instead of the per-window loop's 2 jobs × N
+        windows: six for a day of 6 h windows with a fresh source (the
+        source's and the target's schema reads, the one target write,
+        the audit aggregation's two shuffle-map stages and its
+        checkpoint, and the merge's ``toArrow()`` of the audit). The
+        control table is planned, merged and checked on the driver.
+        Requires the target sink to support ``load_all``
+        (DayPartitionedTableSink).
+
+        A naive plan bound is a wall time in the session time zone, as
+        ``populate`` reads it.
 
         Returns the per-window audit DataFrame
         (window_start, source_count, target_count) as FIRST observed;
@@ -683,6 +665,12 @@ class WindowPipeline:
         adaptive-retry envelope, so the control table holds the final
         per-window outcome (completed, or cleaned + reset).
         """
+        tz = time_fns.session_tzinfo(self.spark)
+        # F.lit would read a naive bound as the process's local time
+        plan_start, plan_end = (
+            t.astimezone(tz) if t.tzinfo else t.replace(tzinfo=tz)
+            for t in (plan_start, plan_end)
+        )
         self.populate(plan_start, plan_end)
         tagged = self.extract_all_windows(plan_start, plan_end)
         # one write for every window partition (dynamic overwrite keeps
@@ -735,7 +723,7 @@ class WindowPipeline:
             # and the caller re-evaluates the returned frame
             .localCheckpoint()
         )
-        self.control.merge_audit_results(audit, self.config.pipeline_name)
+        unmatched = self.control.merge_audit_results(audit, self.config.pipeline_name)
         # R3 on the batch path: the columnar merge above records the
         # FIRST observation; windows it left mismatched (async sinks
         # may still be landing rows) get the same adaptive retry
@@ -743,28 +731,22 @@ class WindowPipeline:
         # phase-2 improvement-driven waits, exhaustion → clean+reset.
         # Bounded driver work: one row per MISMATCHED window only,
         # each recount the sink's count of one window.
-        mismatched = (
-            self._scoped(self.control.read())
-            .where(
-                (F.col("pipeline_status") == "pending")
-                & (F.col("count_match_status") == "not_matched")
-                & F.col("source_count").isNotNull()
+        mismatched = self._scoped_rows(
+            lambda t: pc.and_(
+                pc.and_(
+                    pc.equal(t["pipeline_status"], "pending"),
+                    pc.equal(t["count_match_status"], "not_matched"),
+                ),
+                pc.is_valid(t["source_count"]),
             )
-            .select(
-                "unique_source_id",
-                "source_query_window_start_time",
-                "source_query_window_end_time",
-                "source_count",
-            )
-            .collect()
         )
-        for row in mismatched:
+        for row in collected(mismatched):
             status = self._audit(
                 row["unique_source_id"],
                 row["source_query_window_start_time"],
                 row["source_query_window_end_time"],
                 row["source_count"],
-                datetime.utcnow(),
+                datetime.now(timezone.utc),
             )
             if status == "completed":
                 # the columnar write DID run the earlier stages; mirror
@@ -774,11 +756,6 @@ class WindowPipeline:
                     {f"{s}_status": "completed" for s in STAGES},
                 )
         # audit rows with no control row would otherwise vanish silently
-        # (both sides are bounded: one row per window)
-        planned = self._scoped(self.control.read()).select(
-            F.col("source_query_window_start_time").alias("window_start")
-        )
-        unmatched = audit.join(planned, "window_start", "left_anti").collect()
         if unmatched:
             import logging
 
@@ -786,6 +763,6 @@ class WindowPipeline:
                 "run_batch: %d audit window(s) matched no control row "
                 "(first: %s) — check plan alignment",
                 len(unmatched),
-                unmatched[0]["window_start"],
+                unmatched[0],
             )
         return audit

@@ -1,8 +1,10 @@
 """The run's control plane on the driver, checked against the Spark
 forms it replaced: the window spine, the F9 ids ``append_records``
-computes, pending selection, and ``FileSource``'s Parquet count. Every
-check runs in this process and again under ``TZ=America/New_York``,
-where Spark takes a naive datetime as New York time."""
+computes, pending selection, and ``FileSource``'s Parquet count; and
+the times and windows it stores: transition times, ``fill_gaps`` and a
+``run_batch`` day, read back raw from the Parquet file. Every check
+runs in this process and again under ``TZ=America/New_York``, where
+Spark takes a naive datetime as New York time."""
 
 import os
 import random
@@ -25,6 +27,7 @@ from data_pipeline_001_spark.plans.control_table import (
 )
 from data_pipeline_001_spark.plans.pipeline import PipelineConfig, WindowPipeline
 from data_pipeline_001_spark.sources.file_connectors import (
+    DayPartitionedTableSink,
     FileSource,
     PartitionedParquetSink,
     window_dir_name,
@@ -35,13 +38,13 @@ DAY = datetime(2024, 1, 2)
 DAY_END = datetime(2024, 1, 3)
 
 
-def _pipe(spark, tmp_path, name="plan", granularity="6h", runs=4):
+def _pipe(spark, tmp_path, name="plan", granularity="6h", runs=4, target=PartitionedParquetSink):
     return WindowPipeline(
         spark,
         PipelineConfig(pipeline_name=name, granularity=granularity, max_pipeline_runs=runs),
         FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts"),
         PartitionedParquetSink(spark, str(tmp_path / f"{name}_stage")),
-        PartitionedParquetSink(spark, str(tmp_path / f"{name}_target")),
+        target(spark, str(tmp_path / f"{name}_target")),
         ControlTable(spark, str(tmp_path / f"{name}_control")),
     )
 
@@ -213,6 +216,74 @@ def test_run_matches_every_window_in_spark_pending_order(spark, tmp_path):
     first = min(r["source_query_window_start_time"] for r in rows)
     last = max(r["source_query_window_end_time"] for r in rows)
     assert sum(r["source_count"] for r in rows) == _spark_count(pipe.source, first, last) > 0
+
+
+# --------------------------------------------------------------------------
+# stored times and windows, in any local time zone
+# --------------------------------------------------------------------------
+
+UTC_DAY = DAY.replace(tzinfo=timezone.utc)
+
+
+def _stored(control):
+    """The control rows as the Parquet file holds them (naive UTC),
+    ordered by window start."""
+    table = pq.read_table(control.path, coerce_int96_timestamp_unit="us")
+    return sorted(table.to_pylist(), key=lambda r: r["source_query_window_start_time"])
+
+
+def _tiled(rows, hours):
+    """The stored windows start at ``hours`` on DAY (UTC) and each ends
+    where the next starts."""
+    assert [r["source_query_window_start_time"] for r in rows] == [
+        DAY + timedelta(hours=h) for h in hours
+    ]
+    for r, nxt in zip(rows, rows[1:]):
+        assert r["source_query_window_end_time"] == nxt["source_query_window_start_time"]
+
+
+def test_transition_times_are_stored_in_utc(spark, tmp_path):
+    """A claim stores the real UTC time; a fresh claim counts as a
+    running window and one two hours old is reaped."""
+    pipe = _pipe(spark, tmp_path)
+    pipe.populate(DAY, DAY_END)
+    sid = _stored(pipe.control)[0]["unique_source_id"]
+    pipe.control.claim(sid)
+    started = [r for r in _stored(pipe.control) if r["unique_source_id"] == sid][0][
+        "pipeline_start_time"
+    ]
+    now = datetime.now(timezone.utc)
+    assert abs(started - now.replace(tzinfo=None)) < timedelta(minutes=1)
+    assert pipe.validate_in_progress() == (1, 0)
+    assert pipe.validate_in_progress(now + timedelta(hours=2)) == (0, 1)
+
+
+def test_fill_gaps_restores_the_window_at_its_instant(spark, tmp_path):
+    pipe = _pipe(spark, tmp_path)
+    pipe.populate(DAY, DAY_END)
+    victim = _stored(pipe.control)[2]
+    assert victim["source_query_window_start_time"] == DAY + timedelta(hours=12)
+    pipe.control.delete_records([victim["unique_source_id"]])
+    assert pipe.fill_gaps() == 1
+    rows = _stored(pipe.control)
+    _tiled(rows, [0, 6, 12, 18])
+    assert rows[2]["unique_source_id"] == victim["unique_source_id"]
+
+
+@pytest.mark.slow
+def test_run_batch_completes_a_day(spark, tmp_path):
+    """A naive plan bound is a session-time wall time for the tagging
+    and the audit as for the plan, so every window matches."""
+    pipe = _pipe(spark, tmp_path, name="batch", target=DayPartitionedTableSink)
+    pipe.run_batch(DAY, DAY_END)
+    rows = _stored(pipe.control)
+    _tiled(rows, [0, 6, 12, 18])
+    for r in rows:
+        assert (r["pipeline_status"], r["count_match_status"]) == ("completed", "matched")
+        assert r["source_count"] == r["target_count"]
+    day = pipe.source.count(UTC_DAY, UTC_DAY + timedelta(days=1))
+    assert sum(r["source_count"] for r in rows) == day > 0
+    assert pipe.target_sink.read_all().count() == day
 
 
 # --------------------------------------------------------------------------

@@ -289,8 +289,7 @@ def test_audit_retry_converges_on_async_sink(spark, tmp_path):
     )
     control = ControlTable(spark, str(tmp_path / "control"))
     cfg = PipelineConfig(
-        pipeline_name="async", granularity="6h", max_pipeline_runs=1,
-        audit_max_retries=5,
+        pipeline_name="async", granularity="6h", max_pipeline_runs=1
     )
     pipe = WindowPipeline(spark, cfg, source, stage, target, control)
     pipe.populate(DAY, datetime(2024, 1, 2, 6))
@@ -312,8 +311,7 @@ def test_audit_mismatch_resets_pipeline(spark, tmp_path):
     target = LossySink(spark, str(tmp_path / "target"))
     control = ControlTable(spark, str(tmp_path / "control"))
     cfg = PipelineConfig(
-        pipeline_name="lossy", granularity="6h", max_pipeline_runs=1,
-        audit_max_retries=2,
+        pipeline_name="lossy", granularity="6h", max_pipeline_runs=1
     )
     pipe = WindowPipeline(spark, cfg, source, stage, target, control)
     pipe.populate(DAY, datetime(2024, 1, 2, 6))
@@ -399,6 +397,56 @@ def test_planning_a_run_launches_no_spark_job(spark, tmp_path):
     inserted, validated, pending = runs[-1]
     assert (inserted, validated) == (4, (1, 0))
     assert [r["source_query_window_start_time"].hour for r in pending] == [3, 6, 9, 12]
+
+
+def test_gap_and_duplicate_repair_launch_no_spark_job(pipe, spark):
+    """fill_gaps (W1) and resolve_duplicate_windows (W3) read and
+    rewrite the control table on the driver alone."""
+    from data_pipeline_001_spark.plans.control_table import default_record
+
+    pipe.populate(DAY, DAY_END)
+    rows = sorted(
+        pipe.control.read().collect(), key=lambda r: r["source_query_window_start_time"]
+    )
+    pipe.control.delete_records([rows[2]["unique_source_id"]])
+    filled = []
+    assert _spark_jobs(spark, lambda: filled.append(pipe.fill_gaps())) == 0
+    assert filled == [1]
+    pipe.control.append_records(
+        [
+            default_record(
+                "e2e", pipe.config.source_desc, pipe.config.target_desc,
+                rows[0]["source_query_window_start_time"],
+                rows[0]["source_query_window_end_time"], stage_path="dup",
+            )
+        ]
+    )
+    removed = []
+    assert _spark_jobs(spark, lambda: removed.append(pipe.resolve_duplicate_windows())) == 0
+    assert removed == [1]
+    assert pipe.control.read().count() == 4
+
+
+def test_run_batch_spark_jobs(spark, tmp_path):
+    """A day of run_batch launches six Spark jobs: the source's and the
+    target's schema reads, the target write, the audit aggregation's
+    two shuffle-map stages and its checkpoint, and the merge's pull of
+    the one-row-per-window audit. The control table is read and
+    rewritten on the driver."""
+    pipe = WindowPipeline(
+        spark,
+        PipelineConfig(pipeline_name="batch_jobs", granularity="6h"),
+        FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts"),
+        PartitionedParquetSink(spark, str(tmp_path / "stage")),
+        DayPartitionedTableSink(spark, str(tmp_path / "target")),
+        ControlTable(spark, str(tmp_path / "control")),
+    )
+    assert _spark_jobs(spark, lambda: pipe.run_batch(DAY, DAY_END)) == 6
+    rows = pipe.control.read().collect()
+    assert len(rows) == 4
+    assert {(r["pipeline_status"], r["count_match_status"]) for r in rows} == {
+        ("completed", "matched")
+    }
 
 
 def _write_window_events(spark, path, counts, start=DAY, hours=3):

@@ -66,7 +66,7 @@ def test_spine_partitions_range_for_many_granularities(spark):
     from pyspark.sql import functions as F
 
     from data_pipeline_001_spark.functions.time_fns import window_spine
-    from data_pipeline_001_spark.operators.windows import detect_gaps, detect_overlaps
+    from data_pipeline_001_spark.operators.windows import check_continuity, detect_overlaps
 
     start, end = "2024-03-01 00:00:00", "2024-03-02 00:00:00"
     for gran, n_expected in [("1h", 24), ("30m", 48), ("7h", 4), ("2h30m", 10)]:
@@ -74,7 +74,7 @@ def test_spine_partitions_range_for_many_granularities(spark):
         total_min = spine.agg(F.sum("duration_minutes")).first()[0]
         assert total_min == 1440, gran
         assert spine.count() == n_expected, gran
-        assert detect_gaps(spine, day_bounds=False).count() == 0, gran
+        assert check_continuity(spine).count() == 0, gran
         assert detect_overlaps(spine).count() == 0, gran
 
 

@@ -84,6 +84,14 @@ def test_config_merge_later_layers_win():
     assert cfg.extras["custom_key"] == "x"
 
 
+def test_config_layer_naming_a_removed_field_still_merges():
+    """A layer written for an older PipelineConfig keeps working: a key
+    the class no longer has (``audit_max_retries``) lands in extras."""
+    cfg = PipelineConfig.merged({"audit_max_retries": 3, "granularity": "2h"})
+    assert cfg.granularity == "2h"
+    assert cfg.extras == {"audit_max_retries": 3}
+
+
 def test_sink_file_sizing(spark, tables, tmp_path):
     """File-size discipline (the reference's 250 MB split,
     stage/ingestion_engine.py:174): maxRecordsPerFile bounds output

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_001_spark.functions import time_fns as T
-from data_pipeline_001_spark.operators.windows import detect_gaps, detect_overlaps
+from data_pipeline_001_spark.operators.windows import check_continuity, detect_overlaps
 
 
 def test_parse_duration_composite():
@@ -37,7 +37,7 @@ def test_spine_covers_range_without_gaps_or_overlaps(spark):
     assert rows[0]["window_start"] == datetime(2024, 3, 1, 0, 0)
     assert rows[-1]["window_end"] == datetime(2024, 3, 3, 0, 0)
     # self-verifying pair: our own detectors find nothing wrong
-    assert detect_gaps(spine, day_bounds=False).count() == 0
+    assert check_continuity(spine).count() == 0
     assert detect_overlaps(spine).count() == 0
 
 

@@ -9,7 +9,7 @@ from data_pipeline_001_spark.functions.time_fns import (
     session_timezone,
     window_spine,
 )
-from data_pipeline_001_spark.operators.windows import detect_gaps, detect_overlaps
+from data_pipeline_001_spark.operators.windows import check_continuity, detect_overlaps
 from data_pipeline_001_spark.plans.pipeline import render_templates
 
 
@@ -22,7 +22,7 @@ def test_spring_forward_day_has_23_windows(spark):
         rows = spine.collect()
         assert len(rows) == 23
         # continuous cover, no gaps/overlaps even across the jump
-        assert detect_gaps(spine, day_bounds=False).count() == 0
+        assert check_continuity(spine).count() == 0
         assert detect_overlaps(spine).count() == 0
         total = spine.agg(F.sum("duration_minutes")).first()[0]
         assert total == 23 * 60

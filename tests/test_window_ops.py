@@ -1,18 +1,18 @@
 """W1..W5 transform tests against the FIXTURES.md scenarios: gap day,
-overlap pair, duplicate resolution rule order, pending selection."""
+overlap pair, duplicate resolution rule order, pending selection (W1,
+W3 and W5 as the control table's Arrow kernels)."""
 
-from datetime import datetime
+from datetime import datetime, timedelta
 
 import pyarrow as pa
 from pyspark.sql import functions as F
 
-from data_pipeline_001_spark.operators.windows import (
-    check_continuity,
-    detect_gaps,
-    detect_overlaps,
-    resolve_duplicates,
+from data_pipeline_001_spark.operators.windows import check_continuity, detect_overlaps
+from data_pipeline_001_spark.plans.control_table import (
+    duplicate_losers,
+    interior_gaps,
+    select_pending,
 )
-from data_pipeline_001_spark.plans.control_table import select_pending
 
 
 def _windows(spark, rows):
@@ -22,19 +22,22 @@ def _windows(spark, rows):
     ).withColumn("window_day", F.to_date("window_start"))
 
 
-def test_gap_detection_interior_and_edges(spark):
-    # windows 00-10h and 12-24h: interior gap 10:00-12:00
-    rows = [(f"2024-05-01 {h:02d}:00:00", f"2024-05-01 {h + 1:02d}:00:00")
-            for h in list(range(0, 10)) + list(range(12, 23))]
-    rows.append(("2024-05-01 23:00:00", "2024-05-02 00:00:00"))
-    gaps = detect_gaps(_windows(spark, rows), day_bounds=False).collect()
-    assert len(gaps) == 1
-    assert gaps[0]["gap_start"] == datetime(2024, 5, 1, 10)
-    assert gaps[0]["gap_end"] == datetime(2024, 5, 1, 12)
-    # with day bounds: drop first window → leading edge gap appears
-    gaps2 = detect_gaps(_windows(spark, rows[1:]), day_bounds=True).collect()
-    starts = {(g["gap_start"], g["gap_end"]) for g in gaps2}
-    assert (datetime(2024, 5, 1, 0), datetime(2024, 5, 1, 1)) in starts
+def test_gap_detection_interior():
+    """W1 on the driver: within a day, each gap from a window's end to
+    a later next start; nothing across days, nothing for an overlap."""
+    hours = list(range(0, 10)) + list(range(12, 24))
+    starts = [datetime(2024, 5, 1, h) for h in hours] + [datetime(2024, 5, 2, 5)]
+    ends = [s + timedelta(hours=1) for s in starts]
+    ends[3] += timedelta(minutes=30)  # 03:00-04:30 overlaps the next window
+    rows = pa.table(
+        {
+            "query_window_start_day": pa.array([s.date() for s in starts], pa.date32()),
+            "source_query_window_start_time": pa.array(starts, pa.timestamp("us")),
+            "source_query_window_end_time": pa.array(ends, pa.timestamp("us")),
+        }
+    )
+    shuffled = rows.take(list(reversed(range(rows.num_rows))))
+    assert interior_gaps(shuffled) == [(datetime(2024, 5, 1, 10), datetime(2024, 5, 1, 12))]
 
 
 def test_overlap_detection(spark):
@@ -61,10 +64,11 @@ def test_continuity_check(spark):
     assert missing[0]["missing_end"] == datetime(2024, 5, 1, 3)
 
 
-def test_duplicate_resolution_rule_order(spark):
-    """The 4-level chain (state_manager.py:937-982): completed beats
-    non-completed; then latest updated; then latest started; then
-    OLDEST inserted (inverted final key)."""
+def test_duplicate_resolution_rule_order():
+    """The 4-level chain (state_manager.py:937-982) on the driver:
+    completed beats non-completed; then latest updated; then latest
+    started; then OLDEST inserted (inverted final key). Null times rank
+    last, as Spark's desc_nulls_last/asc_nulls_last rank them."""
     t0, t1, t2 = (datetime(2024, 1, 1, h) for h in (0, 1, 2))
     rows = [
         # key A: completed (id=a2) must beat in_progress with newer times
@@ -76,18 +80,37 @@ def test_duplicate_resolution_rule_order(spark):
         # key C: tie on status+updated+started → OLDEST inserted wins (c1)
         ("c1", "k3", "completed", t1, t1, t0),
         ("c2", "k3", "completed", t1, t1, t2),
+        # key D: a null updated time ranks after any time (d2)
+        ("d1", "k4", "completed", None, t2, t2),
+        ("d2", "k4", "completed", t0, t0, t0),
+        # key E: a null started time ranks after any time (e2)
+        ("e1", "k5", "completed", t1, None, t0),
+        ("e2", "k5", "completed", t1, t0, t1),
+        # key F: a null inserted time ranks after the oldest (f2)
+        ("f1", "k6", "completed", t1, t1, None),
+        ("f2", "k6", "completed", t1, t1, t2),
+        # key G: a null status is not completed (g2)
+        ("g1", "k7", None, t2, t2, t0),
+        ("g2", "k7", "completed", t0, t0, t0),
+        # null key: its rows are one group, as in a Spark partition (n2)
+        ("n1", None, "pending", t2, t2, t0),
+        ("n2", None, "completed", t0, t0, t0),
+        # a key with one row keeps it
+        ("s1", "k8", "failed", None, None, None),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "unique_source_id string, key string, pipeline_status string, "
-        "record_last_updated_time timestamp, pipeline_start_time timestamp, "
-        "record_first_inserted_time timestamp",
+    names = ["unique_source_id", "key", "pipeline_status", "record_last_updated_time",
+             "pipeline_start_time", "record_first_inserted_time"]
+    table = pa.table(
+        {
+            name: pa.array(list(values), pa.timestamp("us") if name.endswith("_time") else None)
+            for name, values in zip(names, zip(*rows))
+        }
     )
-    kept = {
-        r["unique_source_id"]
-        for r in resolve_duplicates(df, key_cols=("key",)).where("_keep").collect()
-    }
-    assert kept == {"a2", "b2", "c1"}
+    for order in (range(len(rows)), reversed(range(len(rows)))):
+        losers = duplicate_losers(table.take(list(order)), key="key")
+        assert losers.column_names == names
+        kept = {r[0] for r in rows} - set(losers["unique_source_id"].to_pylist())
+        assert kept == {"a2", "b2", "c1", "d2", "e2", "f2", "g2", "n2", "s1"}
 
 
 def test_select_pending_order():
