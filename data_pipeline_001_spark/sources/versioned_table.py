@@ -605,6 +605,11 @@ class VersionedTableSink(VersionedTable):
         windows[key] = [rel]
         self._commit_windows(windows, f"window-load:{key}")
 
+    def load_files(self, path: str, schema, start, end) -> None:
+        """S5 from the staged window's Parquet files: read them through
+        Spark with ``schema`` and commit them as ``load`` does."""
+        self.load(self.spark.read.schema(schema).parquet(path), start, end)
+
     def exists(self, start, end) -> bool:
         return self._wkey(start) in self._windows()
 

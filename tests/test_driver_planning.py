@@ -270,6 +270,72 @@ def test_fill_gaps_restores_the_window_at_its_instant(spark, tmp_path):
     assert rows[2]["unique_source_id"] == victim["unique_source_id"]
 
 
+def _last_pending_start(pipe, now=None):
+    """The UTC instant of the newest window ``pending_records`` selects."""
+    return max(r["source_query_window_start_time"] for r in pipe.pending_records(now)).astimezone(
+        timezone.utc
+    )
+
+
+def test_pending_boundary_floors_now_in_utc(spark, tmp_path):
+    """The safe boundary is ``now`` floored to the UTC day, minus
+    ``x_time_back``: at 2024-01-03 11:30 UTC with "1d" it is 2024-01-02
+    00:00, whether ``now`` is aware or naive (taken as UTC) or the
+    default."""
+    pipe = _pipe(spark, tmp_path, granularity="1h", runs=100)
+    pipe.populate(DAY - timedelta(days=1), DAY_END)
+    for now in (datetime(2024, 1, 3, 11, 30, tzinfo=timezone.utc), datetime(2024, 1, 3, 11, 30)):
+        assert _last_pending_start(pipe, now) == UTC_DAY
+
+    today = datetime.now(timezone.utc).replace(hour=0, minute=0, second=0, microsecond=0)
+    live = _pipe(spark, tmp_path, name="live", granularity="1h", runs=100)
+    live.populate(today - timedelta(days=2), today + timedelta(days=1))
+    before = datetime.now(timezone.utc).replace(hour=0, minute=0, second=0, microsecond=0)
+    got = _last_pending_start(live)
+    after = datetime.now(timezone.utc).replace(hour=0, minute=0, second=0, microsecond=0)
+    assert got in (before - timedelta(days=1), after - timedelta(days=1))
+
+
+def test_sink_paths_name_the_session_wall_time(spark, tmp_path):
+    """The stored 2024-01-02 00:00 UTC window is ``2024-01-02/00-00`` in
+    the stage and ``window_day=2024-01-02/window_start=00-00`` in the
+    table, given as an instant or as the local time ``collect()``
+    returns; the run's copy, the planned stage path and the audit's
+    recount of a ``load_all`` day agree. Under a New York session the
+    partition is the one ``load_all`` gives that instant."""
+    pipe = _pipe(spark, tmp_path, name="paths", target=DayPartitionedTableSink)
+    stage, table = pipe.stage_sink, pipe.target_sink
+    pipe.populate(DAY, DAY_END)
+    (first, *_) = pipe.pending_records()
+    for start in (UTC_DAY, first["source_query_window_start_time"]):
+        assert stage._window_path(start) == os.path.join(stage.root, "2024-01-02", "00-00")
+        assert table._partition_path(start) == os.path.join(
+            table.root, "window_day=2024-01-02", "window_start=00-00"
+        )
+    assert _stored(pipe.control)[0]["stage_name"] == "2024-01-02/00-00"
+
+    assert pipe.run_window(first) == "completed"
+    assert os.path.isdir(os.path.join(stage.root, "2024-01-02", "00-00"))
+    assert os.listdir(table.root) == ["window_day=2024-01-02"]
+    assert os.listdir(os.path.join(table.root, "window_day=2024-01-02")) == ["window_start=00-00"]
+
+    batch = _pipe(spark, tmp_path, name="paths_batch", target=DayPartitionedTableSink)
+    batch.run_batch(DAY, DAY_END)
+    for r in batch.control.read().collect():
+        start, end = r["source_query_window_start_time"], r["source_query_window_end_time"]
+        assert r["pipeline_status"] == "completed"
+        assert batch.target_sink.count(start, end) == r["source_count"] > 0
+
+    with time_fns.session_timezone(spark, "America/New_York"):
+        day, hhmm = spark.range(1).select(
+            F.to_date(F.lit(UTC_DAY)), F.date_format(F.lit(UTC_DAY), "HH-mm")
+        ).first()
+        assert table._partition_path(UTC_DAY) == os.path.join(
+            table.root, f"window_day={day}", f"window_start={hhmm}"
+        )
+        assert (str(day), hhmm) == ("2024-01-01", "19-00")
+
+
 @pytest.mark.slow
 def test_run_batch_completes_a_day(spark, tmp_path):
     """A naive plan bound is a session-time wall time for the tagging

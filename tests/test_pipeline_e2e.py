@@ -217,7 +217,7 @@ def test_stage_failure_attributed_to_failing_stage(spark, tmp_path):
     erroring stage's state is touched)."""
 
     class BrokenTarget(PartitionedParquetSink):
-        def load(self, df, start, end):
+        def load_files(self, path, schema, start, end):
             raise RuntimeError("target sink down")
 
     source = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts")
@@ -341,9 +341,9 @@ def _spark_jobs(spark, fn):
 
 def test_warm_window_launches_only_count_and_write_jobs(spark, tmp_path):
     """Once the first window has resolved the source schema, a window's
-    only Spark jobs are the stage and target writes: the Parquet source
-    counts on the driver, extract and the stage read-back infer no
-    schema, and both sinks count from Parquet footers."""
+    only Spark job is the stage write: the Parquet source counts on the
+    driver, extract infers no schema, the target loads the staged files
+    with a file copy, and both sinks count from Parquet footers."""
     source = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts")
     stage = PartitionedParquetSink(spark, str(tmp_path / "stage"))
     target = DayPartitionedTableSink(spark, str(tmp_path / "target"))
@@ -359,7 +359,7 @@ def test_warm_window_launches_only_count_and_write_jobs(spark, tmp_path):
     assert _spark_jobs(spark, lambda: stage.count(s, e)) == 0
     assert _spark_jobs(spark, lambda: target.count(s, e)) == 0
     assert _spark_jobs(spark, lambda: source.count(s, e)) == 0
-    assert _spark_jobs(spark, lambda: pipe.run_window(second)) == 2
+    assert _spark_jobs(spark, lambda: pipe.run_window(second)) == 1
     r = [
         x
         for x in control.read().collect()
@@ -447,6 +447,44 @@ def test_run_batch_spark_jobs(spark, tmp_path):
     assert {(r["pipeline_status"], r["count_match_status"]) for r in rows} == {
         ("completed", "matched")
     }
+
+
+def test_table_mixes_copied_windows_and_load_all_days(spark, tmp_path):
+    """Windows ``run_window`` loads as file copies and a day ``run_batch``
+    writes with ``load_all`` share one ``DayPartitionedTableSink``:
+    ``read_all()`` shows ``window_day``/``window_start`` for both, and
+    each window's partition holds its source rows."""
+    from datetime import timedelta
+
+    source = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts")
+    target = DayPartitionedTableSink(spark, str(tmp_path / "target"))
+    control = ControlTable(spark, str(tmp_path / "control"))
+    cfg = PipelineConfig(pipeline_name="mixed", granularity="6h", max_pipeline_runs=4)
+    pipe = WindowPipeline(
+        spark, cfg, source, PartitionedParquetSink(spark, str(tmp_path / "stage")), target, control
+    )
+    prev = DAY - timedelta(days=1)
+    pipe.run_batch(prev, DAY)
+    assert pipe.run(DAY, DAY_END).completed == 4
+
+    rows = control.read().collect()
+    assert len(rows) == 8
+    assert {(r["pipeline_status"], r["count_match_status"]) for r in rows} == {
+        ("completed", "matched")
+    }
+    back = target.read_all()
+    assert {"window_day", "window_start"} <= set(back.columns)
+    got = {
+        (r["window_day"], r["window_start"]): r["count"]
+        for r in back.groupBy("window_day", "window_start").count().collect()
+    }
+    expected = {
+        (r["source_query_window_start_time"].date(),
+         r["source_query_window_start_time"].strftime("%H-%M")): r["source_count"]
+        for r in rows
+    }
+    assert got == expected
+    assert sum(got.values()) == source.count(prev, DAY_END) > 0
 
 
 def _write_window_events(spark, path, counts, start=DAY, hours=3):

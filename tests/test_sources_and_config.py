@@ -513,3 +513,148 @@ def test_dynamic_partition_overwrite_replaces_only_touched(
         assert back.where(F.col("day") == days[1]).count() == n_half
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
+# --------------------------------------------------------------------------
+# stage → target at the file level (Sink.load_files)
+# --------------------------------------------------------------------------
+
+
+def _staged(spark, tables, tmp_path, parts=3):
+    """A day of events written to a stage sink in ``parts`` files; returns
+    the stage sink, its window directory and the written schema."""
+    from data_pipeline_001_spark.sources.file_connectors import PartitionedParquetSink
+
+    ev = tables["events"]
+    win = ev.where((F.col("ts") >= F.lit(WINDOW[0])) & (F.col("ts") < F.lit(WINDOW[1])))
+    stage = PartitionedParquetSink(spark, str(tmp_path / "stage"))
+    stage.load(win.repartition(parts), *WINDOW)
+    return stage, stage._window_path(WINDOW[0]), win.schema
+
+
+def _window_dir(sink):
+    return sink._window_path(WINDOW[0]) if hasattr(sink, "_window_path") else sink._partition_path(WINDOW[0])
+
+
+def _data_files(path):
+    return sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+
+
+def _sinks(spark, root):
+    from data_pipeline_001_spark.sources.file_connectors import (
+        DayPartitionedTableSink,
+        PartitionedParquetSink,
+    )
+
+    return [
+        PartitionedParquetSink(spark, str(root / "window_sink")),
+        DayPartitionedTableSink(spark, str(root / "table_sink")),
+    ]
+
+
+def test_load_files_copies_what_the_spark_load_writes(spark, tables, tmp_path):
+    """Both Parquet sinks load a staged window as a byte copy of its
+    files, and hold the rows today's Spark read-and-``load`` gives,
+    read through Spark with the written schema and through DuckDB."""
+    import duckdb
+
+    stage, staged, schema = _staged(spark, tables, tmp_path)
+    assert len(_data_files(staged)) == 3
+    for copied, written in zip(_sinks(spark, tmp_path / "copy"), _sinks(spark, tmp_path / "spark")):
+        copied.load_files(staged, schema, *WINDOW)
+        written.load(spark.read.schema(schema).parquet(staged), *WINDOW)
+        path = _window_dir(copied)
+        assert _data_files(path) == _data_files(staged)
+        for n in _data_files(staged):
+            for f in (n, f".{n}.crc"):
+                with open(os.path.join(staged, f), "rb") as a, open(os.path.join(path, f), "rb") as b:
+                    assert a.read() == b.read()
+        assert ("_SUCCESS" in os.listdir(path)) == ("_SUCCESS" in os.listdir(_window_dir(written)))
+        assert copied.exists(*WINDOW) and copied.count(*WINDOW) == written.count(*WINDOW) > 0
+
+        a = spark.read.schema(schema).parquet(path)
+        b = spark.read.schema(schema).parquet(_window_dir(written))
+        assert a.count() == b.count() == stage.count(*WINDOW)
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+        con = duckdb.connect()
+        rows = [
+            con.execute(f"SELECT * FROM read_parquet('{d}/*.parquet') ORDER BY event_id").fetchall()
+            for d in (path, _window_dir(written))
+        ]
+        assert rows[0] == rows[1] and len(rows[0]) == a.count()
+        assert copied.read_all().columns == written.read_all().columns
+
+
+def test_load_files_over_the_target_file_cap_goes_through_spark(spark, tables, tmp_path):
+    """A staged file holding more rows than the target's own write puts
+    in one file is loaded through Spark, so the target's files keep
+    the cap; under the cap the files are copied."""
+    import pyarrow.parquet as pq
+
+    from data_pipeline_001_spark.sources.file_connectors import (
+        DayPartitionedTableSink,
+        PartitionedParquetSink,
+    )
+
+    stage, staged, schema = _staged(spark, tables, tmp_path, parts=1)
+    (one,) = _data_files(staged)
+    rows = pq.read_metadata(os.path.join(staged, one)).num_rows
+    cap = rows // 4
+    assert cap > 0
+
+    def file_rows(path):
+        return [pq.read_metadata(os.path.join(path, n)).num_rows for n in _data_files(path)]
+
+    window_sink = PartitionedParquetSink(spark, str(tmp_path / "w"), max_records_per_file=cap)
+    table_sink = DayPartitionedTableSink(spark, str(tmp_path / "t"))
+    key = "spark.sql.files.maxRecordsPerFile"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(cap))
+    try:
+        for sink in (window_sink, table_sink):
+            sink.load_files(staged, schema, *WINDOW)
+            sizes = file_rows(_window_dir(sink))
+            assert len(sizes) >= 4 and max(sizes) <= cap and sum(sizes) == rows
+            assert sink.count(*WINDOW) == rows
+    finally:
+        spark.conf.set(key, prev)
+
+    # at the cap the staged file fits: copied as it is
+    window_sink = PartitionedParquetSink(spark, str(tmp_path / "w2"), max_records_per_file=rows)
+    table_sink = DayPartitionedTableSink(spark, str(tmp_path / "t2"))
+    for sink in (window_sink, table_sink):
+        sink.load_files(staged, schema, *WINDOW)
+        assert _data_files(_window_dir(sink)) == [one]
+
+
+def test_load_files_failed_copy_leaves_no_partial_window(spark, tables, tmp_path, monkeypatch):
+    """A copy that fails after its first file leaves no window in the
+    target, no temp directory beside it, and the staged window as it
+    was."""
+    import shutil
+
+    stage, staged, schema = _staged(spark, tables, tmp_path)
+    before = {n: os.path.getsize(os.path.join(staged, n)) for n in os.listdir(staged)}
+    n_staged = stage.count(*WINDOW)
+    real = shutil.copyfile
+    for sink in _sinks(spark, tmp_path):
+        copies = []
+
+        def failing(src, dst, *args, **kwargs):
+            if copies:
+                raise OSError("disk full")
+            copies.append(dst)
+            return real(src, dst, *args, **kwargs)
+
+        monkeypatch.setattr(shutil, "copyfile", failing)
+        with pytest.raises(OSError, match="disk full"):
+            sink.load_files(staged, schema, *WINDOW)
+        monkeypatch.setattr(shutil, "copyfile", real)
+
+        assert len(copies) == 1
+        assert not sink.exists(*WINDOW) and sink.count(*WINDOW) == 0
+        parent = os.path.dirname(_window_dir(sink))
+        assert os.listdir(parent) == []
+        assert {n: os.path.getsize(os.path.join(staged, n)) for n in os.listdir(staged)} == before
+        assert stage.count(*WINDOW) == n_staged > 0
