@@ -24,9 +24,8 @@ duplicate resolution W3, the stale-run check, pending selection W5)
 filter ``rows()`` with ``pyarrow.compute``, ``append_records``
 computes the F9 md5 ids with ``hashlib``, and every state transition
 (claim, stage completion, failure, reset, delete, and the batch path's
-``merge_audit_results``) is a keyed column rewrite. None of them
-starts a Spark job, apart from the one ``toArrow()`` that pulls the
-batch audit into ``merge_audit_results``. ``read()`` hands Spark a
+``merge_audit_results``) is a column rewrite keyed on
+``unique_source_id``. None of them starts a Spark job. ``read()`` hands Spark a
 DataFrame for the SPC gate (``audit_spc_flags``, whose XmR operator
 runs in Spark) and for outside readers.
 
@@ -466,49 +465,32 @@ class ControlTable:
             t.filter(pc.invert(_keyed(t, key_col, ids))) for t in self._tables()
         )
 
-    def merge_audit_results(
-        self, results: DataFrame, pipeline_name: str | None = None
-    ) -> list[datetime]:
+    def merge_audit_results(self, audit: pa.Table) -> None:
         """Columnar MERGE of per-window batch results — ONE overwrite
         for N windows instead of N row updates (the batch-path upgrade
         of M1+M2+A5; the reference does this row-at-a-time over
         Snowflake, main_pipeline_orchestrator.py:302-404).
 
-        ``results`` columns: window_start timestamp, source_count long,
-        target_count long, one row per window. Every matched window
-        gets all four stages completed + audit metrics; tolerance check
-        decides completed vs the M4-style reset.
-
-        ``pipeline_name`` scopes the merge: in a shared control table
-        only that pipeline's rows are eligible to match (the reference
-        always scopes drive-table updates by source descriptor). The
-        results are pulled to the driver with ``toArrow()`` and deduped
-        on window_start (max per count), so a duplicated audit row
-        cannot match a control row twice; the matched rows are then
-        rewritten in place, like any other transition. Returns the
-        audited windows (naive UTC) that matched no control row.
+        ``audit`` columns: unique_source_id string, source_count long,
+        target_count long, one row per window. Every control row whose
+        id is in ``audit`` gets the audit metrics; the tolerance check
+        decides all four stages completed vs the M4-style reset. Rows
+        match on ``unique_source_id``, the key of every other
+        transition, and a duplicated id takes its first entry, so the
+        merge cannot fan out.
         """
-        audit = results.toArrow().group_by("window_start").aggregate(
-            [("source_count", "max"), ("target_count", "max")]
-        )
-        # the stored form: naive UTC
-        windows = pc.cast(audit["window_start"], pa.timestamp("us"))
-        sc, tc = audit["source_count_max"], audit["target_count_max"]
+        sc, tc = audit["source_count"], audit["target_count"]
         pcts = pa.array(
             [pct_difference(s, t) for s, t in zip(sc.to_pylist(), tc.to_pylist())],
             pa.float64(),
         )
         now = _utcnow()
-        hit: set[int] = set()
 
         def merge(t: pa.Table) -> pa.Table:
             at = pc.index_in(
-                t["source_query_window_start_time"], value_set=windows, skip_nulls=True
+                t["unique_source_id"], value_set=audit["unique_source_id"], skip_nulls=True
             )
             matched = pc.is_valid(at)
-            if pipeline_name is not None:
-                matched = pc.and_(matched, pc.equal(t["pipeline_name"], pipeline_name))
-            hit.update(at.filter(matched).to_pylist())
             src, tgt, pct = pc.take(sc, at), pc.take(tc, at), pc.take(pcts, at)
             ok = pc.less_equal(
                 pc.abs(pct), pc.fill_null(t["accepted_tolerance_percentage"], 0.0)
@@ -547,7 +529,6 @@ class ControlTable:
             )
 
         self._overwrite(merge(t) for t in self._tables())
-        return [w for i, w in enumerate(windows.to_pylist()) if i not in hit]
 
 
 #: rows per batch a mutation holds on the driver (~70 MB of control rows)

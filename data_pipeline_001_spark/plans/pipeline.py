@@ -25,9 +25,13 @@ against 229 ms for Spark's read and write of a warm hourly window, on
 path's merge — runs on the driver through Arrow; only the SPC gate
 reads it in Spark. A Parquet ``FileSource`` counts the window on the
 driver with ``pyarrow``, and the audit counts the target from its
-Parquet footers, both with no job. At very large window counts the
-same stages compose into one job via ``groupBy(window)`` — see
-``extract_all_windows``.
+Parquet footers, both with no job. At very large window counts
+``run_batch`` runs the same stages for the whole plan in four jobs:
+the source's schema read, one ``load_all`` write of every window
+(tagged by ``extract_all_windows``), and one grouped count of the rows
+written (a shuffle-map and a result job); each planned window's target
+count is the same footer count, and the merge keys on
+``unique_source_id`` like every other transition.
 """
 
 from __future__ import annotations
@@ -633,9 +637,11 @@ class WindowPipeline:
 
         The floor is anchored at ``start`` (floor((ts-start)/gran)·gran
         + start), matching the start-aligned spine populate() plans —
-        an epoch-aligned floor would tag every row into windows the
-        control table doesn't have whenever ``start`` is off-boundary,
-        and run_batch's merge would silently match nothing."""
+        an epoch-aligned floor would, whenever ``start`` is
+        off-boundary, write every row into partitions no control row
+        names, and run_batch's per-window counts (source rows by
+        ``window_ts``, target rows by the window's partition) would
+        complete every planned window as 0 = 0."""
         df = self.source.extract(start, end)
         ts = F.col(getattr(self.source, "ts_col", "ts"))
         gran_s = time_fns.parse_granularity_minutes(self.config.granularity) * 60
@@ -657,22 +663,23 @@ class WindowPipeline:
     def run_batch(self, plan_start: datetime, plan_end: datetime) -> DataFrame:
         """Whole-plan batch execution — N windows in a fixed number of
         Spark jobs, where the per-window loop launches one per window:
-        six for a day of 6 h windows with a fresh source (the
-        source's and the target's schema reads, the one target write,
-        the audit aggregation's two shuffle-map stages and its
-        checkpoint, and the merge's ``toArrow()`` of the audit). The
-        control table is planned, merged and checked on the driver.
-        Requires the target sink to support ``load_all``
-        (DayPartitionedTableSink).
+        four for a day of 6 h windows with a fresh source (the source's
+        schema read, the one ``load_all`` write, and the grouped count
+        of the rows it wrote, whose shuffle-map and result stages run
+        as two jobs). The control table is planned, merged and checked
+        on the driver, and each window's target count is the sink's
+        ``count``, as in ``run_window``'s audit. Requires the target
+        sink to support ``load_all`` (DayPartitionedTableSink).
 
         A naive plan bound is a wall time in the session time zone, as
         ``populate`` reads it.
 
-        Returns the per-window audit DataFrame
-        (window_start, source_count, target_count) as FIRST observed;
-        windows whose initial audit mismatched then run the R3
-        adaptive-retry envelope, so the control table holds the final
-        per-window outcome (completed, or cleaned + reset).
+        Audits this pipeline's control rows in the plan and returns
+        their audit DataFrame (window_start, source_count,
+        target_count) as FIRST observed; a window with no source rows
+        audits 0 = 0. Windows whose initial audit mismatched then run
+        the R3 adaptive-retry envelope, so the control table holds the
+        final per-window outcome (completed, or cleaned + reset).
         """
         tz = time_fns.session_tzinfo(self.spark)
         # F.lit would read a naive bound as the process's local time
@@ -685,54 +692,39 @@ class WindowPipeline:
         # one write for every window partition (dynamic overwrite keeps
         # re-runs idempotent per window)
         self.target_sink.load_all(tagged)
-        # ONE aggregation for every window's audit counts (A4/A5 for
-        # the whole plan at once): tag each side and conditionally
-        # count over the union — one shuffle on window_start with
-        # map-side partial aggregation, instead of two aggregations
-        # plus a full-outer join (which shuffled both sides twice and
-        # needed the join's null-coalescing). Window sets that exist
-        # on only one side fall out naturally with a 0 on the other.
-        src_side = tagged.select(
-            F.col("window_ts").alias("window_start"),
-            F.lit(1).alias("is_src"),
-            F.lit(0).alias("is_tgt"),
-        )
-        # the target side holds every day loaded so far; audit only the
-        # plan's windows (partition-pruned to the plan's days), or each
-        # earlier day would read as source_count = 0 and be cleaned and
-        # reset by the retry envelope below
-        tgt_side = (
-            self.target_sink.read_all()
-            .where(F.col("window_day").between(plan_start.date(), plan_end.date()))
-            .select(
-                F.to_timestamp(
-                    F.concat_ws(
-                        " ",
-                        F.col("window_day").cast("string"),
-                        F.regexp_replace("window_start", "-", ":"),
-                    )
-                ).alias("window_start"),
-                F.lit(0).alias("is_src"),
-                F.lit(1).alias("is_tgt"),
-            )
-            .where(
-                (F.col("window_start") >= F.lit(plan_start))
-                & (F.col("window_start") < F.lit(plan_end))
+        # A4/A5 for the whole plan: one grouped count of the rows the
+        # write took, against each planned window's target count
+        source_counts = dict(tagged.groupBy("window_ts").count().collect())
+        lo, hi = (pa.scalar(utc_naive(t), pa.timestamp("us")) for t in (plan_start, plan_end))
+        windows = collected(
+            self._scoped_rows(
+                lambda t: pc.and_(
+                    pc.greater_equal(t["source_query_window_start_time"], lo),
+                    pc.less(t["source_query_window_start_time"], hi),
+                )
             )
         )
-        audit = (
-            src_side.unionByName(tgt_side)
-            .groupBy("window_start")
-            .agg(
-                F.sum("is_src").alias("source_count"),
-                F.sum("is_tgt").alias("target_count"),
+        audit = [
+            (
+                r["source_query_window_start_time"],
+                source_counts.get(r["source_query_window_start_time"], 0),
+                self.target_sink.count(
+                    r["source_query_window_start_time"], r["source_query_window_end_time"]
+                ),
             )
-            # materialize (one row per window): the retry envelope below
-            # may clean target partitions this plan's scan references,
-            # and the caller re-evaluates the returned frame
-            .localCheckpoint()
+            for r in windows
+        ]
+        self.control.merge_audit_results(
+            pa.table(
+                {
+                    "unique_source_id": pa.array(
+                        [r["unique_source_id"] for r in windows], pa.string()
+                    ),
+                    "source_count": pa.array([a[1] for a in audit], pa.int64()),
+                    "target_count": pa.array([a[2] for a in audit], pa.int64()),
+                }
+            )
         )
-        unmatched = self.control.merge_audit_results(audit, self.config.pipeline_name)
         # R3 on the batch path: the columnar merge above records the
         # FIRST observation; windows it left mismatched (async sinks
         # may still be landing rows) get the same adaptive retry
@@ -764,14 +756,6 @@ class WindowPipeline:
                     row["unique_source_id"],
                     {f"{s}_status": "completed" for s in STAGES},
                 )
-        # audit rows with no control row would otherwise vanish silently
-        if unmatched:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "run_batch: %d audit window(s) matched no control row "
-                "(first: %s) — check plan alignment",
-                len(unmatched),
-                unmatched[0],
-            )
-        return audit
+        return self.spark.createDataFrame(
+            audit, "window_start timestamp, source_count long, target_count long"
+        )

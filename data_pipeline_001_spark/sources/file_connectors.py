@@ -538,17 +538,17 @@ class DayPartitionedTableSink(Sink):
 class MockAsyncSink(Sink):
     """Sink whose writes become visible gradually over ``count`` calls.
 
-    Each ``count()`` reveals another ``reveal_fraction`` of the loaded
-    rows, simulating Snowpipe's asynchronous load so the audit
-    manager's recount/improvement-detection loop (R3) has something
-    real to converge on.
+    Each ``count()`` of a loaded window reveals another
+    ``1/reveal_steps`` of its rows, simulating Snowpipe's asynchronous
+    load so the audit manager's recount/improvement-detection loop (R3)
+    has something real to converge on. ``run_window`` and ``run_batch``
+    both audit through ``count``, so both paths see the same lag.
     """
 
     def __init__(self, inner: Sink, reveal_steps: int = 3):
         self.inner = inner
         self.reveal_steps = reveal_steps
         self._calls: dict[str, int] = {}
-        self._batch_reads = 0
 
     def load(self, df: DataFrame, start: datetime, end: datetime) -> None:
         self.inner.load(df, start, end)
@@ -566,23 +566,6 @@ class MockAsyncSink(Sink):
         if "window_ts" in df.columns:
             for r in df.select("window_ts").distinct().collect():
                 self._calls[r[0].isoformat()] = 0
-        self._batch_reads = 0
-
-    def read_all(self) -> DataFrame:
-        """Batch-path read-back: reveal a deterministic ~k/steps row
-        subset (hash-bucketed, monotone in k) so the columnar audit
-        sees an under-count that converges over successive reads, the
-        same contract count() provides per window."""
-        df = self.inner.read_all()
-        self._batch_reads = min(self._batch_reads + 1, self.reveal_steps)
-        k = self._batch_reads
-        if k >= self.reveal_steps:
-            return df
-        h = F.pmod(
-            F.xxhash64(*[F.col(c).cast("string") for c in df.columns]),
-            F.lit(self.reveal_steps),
-        )
-        return df.where(h < k)
 
     def exists(self, start: datetime, end: datetime) -> bool:
         return self.inner.exists(start, end)

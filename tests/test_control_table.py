@@ -298,11 +298,14 @@ def test_mutations_stream_across_batches(spark, tmp_path, monkeypatch):
     table.fail_stage(ids[3], "source_to_stage", "boom")
     table.reset_stale_in_progress([ids[2], ids[6]])
     table.delete_records([ids[4]])
-    audit = spark.createDataFrame(
-        [(datetime(2024, 1, 2, 0), 5, 5), (datetime(2024, 1, 2, 6), 10, 5)],
-        "window_start timestamp, source_count long, target_count long",
+    audit = pa.table(
+        {
+            "unique_source_id": [ids[0], ids[6]],
+            "source_count": pa.array([5, 10], pa.int64()),
+            "target_count": pa.array([5, 5], pa.int64()),
+        }
     )
-    table.merge_audit_results(audit, "p1")
+    table.merge_audit_results(audit)
 
     rows = table.read().collect()
     assert sorted(r["unique_source_id"] for r in rows) == sorted(ids[:4] + ids[5:])

@@ -4,6 +4,7 @@ dynamic partition overwrite keeps re-runs idempotent."""
 
 from datetime import datetime
 
+import pyarrow as pa
 import pytest
 
 pytestmark = pytest.mark.slow  # lane 2: see pytest.ini
@@ -52,6 +53,27 @@ def test_run_batch_completes_all_windows(batch_pipe, spark):
     assert total_target == batch_pipe.source.count(DAY, DAY_END)
 
 
+def test_run_batch_completes_windows_with_no_rows(batch_pipe):
+    """Planned windows the source has no rows for audit 0 = 0 and
+    complete, as ``run_window`` completes them: the four 6 h windows
+    of 2024-01-31, after sf0.001's last event."""
+    audit = batch_pipe.run_batch(datetime(2024, 1, 30), datetime(2024, 2, 1)).collect()
+    assert len(audit) == 8
+    rows = batch_pipe.control.read().collect()
+    assert len(rows) == 8
+    empty = [r for r in rows if r["source_query_window_start_time"] >= datetime(2024, 1, 31)]
+    assert len(empty) == 4
+    for r in empty:
+        assert (r["pipeline_status"], r["count_match_status"]) == (
+            "completed",
+            "matched",
+        ), r["source_query_window_start_time"]
+        assert r["completed_stage_number"] == 4
+        assert r["source_count"] == r["target_count"] == 0
+    for r in rows:
+        assert r["pipeline_status"] == "completed", r["source_query_window_start_time"]
+
+
 def test_run_batch_idempotent_rerun(batch_pipe):
     first = {r["window_start"]: r["target_count"] for r in batch_pipe.run_batch(DAY, DAY_END).collect()}
     second = {r["window_start"]: r["target_count"] for r in batch_pipe.run_batch(DAY, DAY_END).collect()}
@@ -85,23 +107,34 @@ def test_run_batch_with_unaligned_plan_start(spark, tmp_path):
     assert total == pipe.source.count(start, end) > 0
 
 
-def test_shared_control_table_pipelines_are_isolated(spark, tmp_path):
+@pytest.mark.parametrize(
+    "names",
+    [
+        (("pipe_a", "pipe_a"), ("pipe_b", "pipe_b")),
+        (("events", "src_a"), ("events", "src_b")),
+    ],
+    ids=["distinct_names", "same_name"],
+)
+def test_shared_control_table_pipelines_are_isolated(spark, tmp_path, names):
     """Two pipelines over ONE control table: pipeline B's batch merge
     and populate must not complete, reset, or re-plan pipeline A's
     rows (the reference scopes every drive-table op by the source
-    descriptor, pending_records_selector.py)."""
+    descriptor, pending_records_selector.py) — also when both share a
+    pipeline_name and differ only in their source descriptor."""
     control = ControlTable(spark, str(tmp_path / "control"))
 
-    def build(name):
+    def build(name, source_name):
         source = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts")
-        stage = PartitionedParquetSink(spark, str(tmp_path / f"{name}_stage"))
-        target = DayPartitionedTableSink(spark, str(tmp_path / f"{name}_target"))
+        stage = PartitionedParquetSink(spark, str(tmp_path / f"{source_name}_stage"))
+        target = DayPartitionedTableSink(spark, str(tmp_path / f"{source_name}_target"))
         cfg = PipelineConfig(
-            pipeline_name=name, granularity="6h", source_desc=(name, "file", "parquet")
+            pipeline_name=name,
+            granularity="6h",
+            source_desc=(source_name, "file", "parquet"),
         )
         return WindowPipeline(spark, cfg, source, stage, target, control)
 
-    a, b = build("pipe_a"), build("pipe_b")
+    a, b = build(*names[0]), build(*names[1])
     # A plans but does not run: its rows stay pending
     a.populate(DAY, DAY_END)
     assert control.read().count() == 8
@@ -111,9 +144,9 @@ def test_shared_control_table_pipelines_are_isolated(spark, tmp_path):
     assert len(rows) == 16  # A's 8 rows were NOT reused/overwritten
     by_pipe = {}
     for r in rows:
-        by_pipe.setdefault(r["pipeline_name"], []).append(r["pipeline_status"])
-    assert set(by_pipe["pipe_a"]) == {"pending"}
-    assert set(by_pipe["pipe_b"]) == {"completed"}
+        by_pipe.setdefault(r["source_name"], []).append(r["pipeline_status"])
+    assert set(by_pipe[names[0][1]]) == {"pending"}
+    assert set(by_pipe[names[1][1]]) == {"completed"}
 
 
 def test_merge_audit_results_dedupes_duplicate_windows(spark, tmp_path):
@@ -128,12 +161,15 @@ def test_merge_audit_results_dedupes_duplicate_windows(spark, tmp_path):
     pipe.populate(DAY, DAY_END)
     n_before = control.read().count()
 
-    one = control.read().collect()[0]["source_query_window_start_time"]
-    audit = spark.createDataFrame(
-        [(one, 5, 5), (one, 5, 5)],
-        "window_start timestamp, source_count long, target_count long",
+    one = control.read().collect()[0]["unique_source_id"]
+    audit = pa.table(
+        {
+            "unique_source_id": [one, one],
+            "source_count": pa.array([5, 5], pa.int64()),
+            "target_count": pa.array([5, 5], pa.int64()),
+        }
     )
-    control.merge_audit_results(audit, "dup")
+    control.merge_audit_results(audit)
     assert control.read().count() == n_before
 
 

@@ -428,11 +428,11 @@ def test_gap_and_duplicate_repair_launch_no_spark_job(pipe, spark):
 
 
 def test_run_batch_spark_jobs(spark, tmp_path):
-    """A day of run_batch launches six Spark jobs: the source's and the
-    target's schema reads, the target write, the audit aggregation's
-    two shuffle-map stages and its checkpoint, and the merge's pull of
-    the one-row-per-window audit. The control table is read and
-    rewritten on the driver."""
+    """A day of run_batch launches four Spark jobs: the source's schema
+    read, the target's ``load_all`` write, and the grouped count of the
+    rows written (its shuffle-map and result stages run as two jobs).
+    Each window's target count sums its partition's Parquet footers, and
+    the control table is read and rewritten on the driver."""
     pipe = WindowPipeline(
         spark,
         PipelineConfig(pipeline_name="batch_jobs", granularity="6h"),
@@ -441,7 +441,7 @@ def test_run_batch_spark_jobs(spark, tmp_path):
         DayPartitionedTableSink(spark, str(tmp_path / "target")),
         ControlTable(spark, str(tmp_path / "control")),
     )
-    assert _spark_jobs(spark, lambda: pipe.run_batch(DAY, DAY_END)) == 6
+    assert _spark_jobs(spark, lambda: pipe.run_batch(DAY, DAY_END)) == 4
     rows = pipe.control.read().collect()
     assert len(rows) == 4
     assert {(r["pipeline_status"], r["count_match_status"]) for r in rows} == {
