@@ -704,15 +704,11 @@ class WindowPipeline:
                 )
             )
         )
-        audit = [
-            (
-                r["source_query_window_start_time"],
-                source_counts.get(r["source_query_window_start_time"], 0),
-                self.target_sink.count(
-                    r["source_query_window_start_time"], r["source_query_window_end_time"]
-                ),
-            )
-            for r in windows
+        starts = [r["source_query_window_start_time"] for r in windows]
+        source = [source_counts.get(s, 0) for s in starts]
+        target = [
+            self.target_sink.count(s, r["source_query_window_end_time"])
+            for s, r in zip(starts, windows)
         ]
         self.control.merge_audit_results(
             pa.table(
@@ -720,8 +716,8 @@ class WindowPipeline:
                     "unique_source_id": pa.array(
                         [r["unique_source_id"] for r in windows], pa.string()
                     ),
-                    "source_count": pa.array([a[1] for a in audit], pa.int64()),
-                    "target_count": pa.array([a[2] for a in audit], pa.int64()),
+                    "source_count": pa.array(source, pa.int64()),
+                    "target_count": pa.array(target, pa.int64()),
                 }
             )
         )
@@ -757,5 +753,6 @@ class WindowPipeline:
                     {f"{s}_status": "completed" for s in STAGES},
                 )
         return self.spark.createDataFrame(
-            audit, "window_start timestamp, source_count long, target_count long"
+            list(zip(starts, source, target)),
+            "window_start timestamp, source_count long, target_count long",
         )
