@@ -25,9 +25,12 @@ filter ``rows()`` with ``pyarrow.compute``, ``append_records``
 computes the F9 md5 ids with ``hashlib``, and every state transition
 (claim, stage completion, failure, reset, delete, and the batch path's
 ``merge_audit_results``) is a column rewrite keyed on
-``unique_source_id``. None of them starts a Spark job. ``read()`` hands Spark a
-DataFrame for the SPC gate (``audit_spc_flags``, whose XmR operator
-runs in Spark) and for outside readers.
+``unique_source_id``. ``update_where`` is the keyed rewrite that claim,
+stage completion and failure share: one rewrite for a list of ids,
+with a value per id where one is given, so a run claims and stages all
+of its windows in one rewrite each. None of them starts a Spark job.
+``read()`` hands Spark a DataFrame for ``audit_spc_flags`` and outside
+readers.
 
 One writer process at a time: every mutation rewrites the whole table
 and then does two renames, so two processes mutating one table lose
@@ -46,10 +49,10 @@ writer that holds one batch at a time (peak driver Python RSS at most
 on 4 cores: ~8 ms at 10 rows, ~0.23 s at 100k, 2.0 s at 1M, 6.0 s at
 3M and 18.5 s at 9M rows (the Spark read-modify-write it replaced:
 ~0.58 s at 10 rows, 2.7 s, 8.7 s, 15.7 s and 40 s, with a 3-5 GB
-driver JVM from 1M rows up). At ~2 s per million rows and five
-transitions per window, one table keeps pace with 1000 hourly
-pipelines only up to a few hundred thousand rows; past that, use one
-table per pipeline or per period.
+driver JVM from 1M rows up). At ~2 s per million rows and 2.3
+rewrites per window (23 for a ten-window run), one table keeps pace
+with 1000 hourly pipelines only up to about a million rows; past that,
+use one table per pipeline or per period.
 """
 
 from __future__ import annotations
@@ -331,45 +334,67 @@ class ControlTable:
 
     # -- keyed conditional update (the MERGE kernel for M1..M4) ------------
 
-    def update_where(
-        self, unique_source_id: str, assignments: dict[str, object]
-    ) -> None:
-        """Rewrite columns on the window row ``unique_source_id``.
+    def update_where(self, ids: list[str], assignments: dict[str, object]) -> None:
+        """Rewrite columns on the window rows whose ``unique_source_id``
+        is in ``ids``, in one rewrite of the table; one id is the
+        one-row case.
 
-        ``assignments`` values are literals or functions of the old
-        column (``_incremented`` for ``retry_count + 1``); every update
+        An ``assignments`` value is a literal, a function of the old
+        column (``_incremented`` for ``retry_count + 1``), or a list
+        holding one value per id, in the order of ``ids``, matched to
+        the rows with ``pc.index_in`` as ``merge_audit_results`` matches
+        its rows (a duplicated id takes its first value). Every update
         also bumps ``record_last_updated_time`` (reference behavior —
         every UPDATE sets it).
         """
+        if isinstance(ids, str):
+            raise TypeError("update_where takes a list of ids")
+        keys = pa.array(ids, pa.string())
         assignments = {"record_last_updated_time": _utcnow(), **assignments}
-        self._overwrite(
-            _assign(t, _keyed(t, "unique_source_id", [unique_source_id]), assignments)
-            for t in self._tables()
-        )
+        per_id = {
+            name: pa.array(
+                [utc_naive(v) if isinstance(v, datetime) else v for v in values]
+            )
+            for name, values in assignments.items()
+            if isinstance(values, list)
+        }
+
+        def update(t: pa.Table) -> pa.Table:
+            at = _positions(t, keys)
+            return _assign(
+                t,
+                pc.is_valid(at),
+                {**assignments, **{n: pc.take(v, at) for n, v in per_id.items()}},
+            )
+
+        self._overwrite(update(t) for t in self._tables())
 
     # -- M1..M6 ------------------------------------------------------------
 
-    def claim(self, unique_source_id: str, run_id: str | None = None) -> None:
-        """M1: claim/lock — pending → in_progress (record_status_updater.py:12-31)."""
+    def claim(self, ids: list[str], run_id: str | None = None) -> None:
+        """M1: claim/lock — pending → in_progress (record_status_updater.py:12-31),
+        every window of ``ids`` in one rewrite; each gets its own run id
+        unless ``run_id`` is given."""
         self.update_where(
-            unique_source_id,
+            ids,
             {
                 "pipeline_status": "in_progress",
                 "pipeline_start_time": _utcnow(),
-                "unique_run_id": run_id or uuid.uuid4().hex,
+                "unique_run_id": [run_id or uuid.uuid4().hex for _ in ids],
             },
         )
 
     def complete_stage(
         self,
-        unique_source_id: str,
+        ids: list[str],
         stage: str,
         started: datetime,
         extra: dict[str, object] | None = None,
     ) -> None:
         """M2: single-update stage completion
-        (source_discovery_manager.py:111-152 et al.). A naive
-        ``started`` is local time, as Spark reads it."""
+        (source_discovery_manager.py:111-152 et al.) of every window of
+        ``ids``; an ``extra`` value may be a list of one value per id.
+        A naive ``started`` is local time, as Spark reads it."""
         now = _utcnow()
         started = started.astimezone(timezone.utc)
         assign: dict[str, object] = {
@@ -385,13 +410,14 @@ class ControlTable:
             assign["pipeline_status"] = "completed"
             assign["pipeline_end_time"] = now
         assign.update(extra or {})
-        self.update_where(unique_source_id, assign)
+        self.update_where(ids, assign)
 
-    def fail_stage(self, unique_source_id: str, stage: str, error: str) -> None:
+    def fail_stage(self, ids: list[str], stage: str, error: str) -> None:
         """M3: fail/reset one stage, retry_count+1
-        (source_discovery_manager.py:154-175; record_status_updater.py:102-123)."""
+        (source_discovery_manager.py:154-175; record_status_updater.py:102-123),
+        for every window of ``ids``."""
         self.update_where(
-            unique_source_id,
+            ids,
             {
                 f"{stage}_status": "pending",
                 f"{stage}_start_time": None,
@@ -422,7 +448,7 @@ class ControlTable:
             assign[f"{s}_start_time"] = None
             assign[f"{s}_end_time"] = None
             assign[f"{s}_actual_duration_minutes"] = None
-        self.update_where(unique_source_id, assign)
+        self.update_where([unique_source_id], assign)
 
     def reset_stale_in_progress(self, unique_source_ids: list[str]) -> None:
         """M5: selective reset — only non-completed stages
@@ -487,9 +513,7 @@ class ControlTable:
         now = _utcnow()
 
         def merge(t: pa.Table) -> pa.Table:
-            at = pc.index_in(
-                t["unique_source_id"], value_set=audit["unique_source_id"], skip_nulls=True
-            )
+            at = _positions(t, audit["unique_source_id"])
             matched = pc.is_valid(at)
             src, tgt, pct = pc.take(sc, at), pc.take(tc, at), pc.take(pcts, at)
             ok = pc.less_equal(
@@ -543,6 +567,12 @@ def _conform(table: pa.Table) -> pa.Table:
 def _keyed(table: pa.Table, key_col: str, ids: list[str]) -> pa.ChunkedArray:
     """Row mask: ``key_col`` is one of ``ids`` (a null key never matches)."""
     return pc.is_in(table[key_col], value_set=pa.array(list(ids), pa.string()))
+
+
+def _positions(table: pa.Table, ids) -> pa.ChunkedArray:
+    """Each row's position in ``ids`` by ``unique_source_id``: the first
+    one for a duplicated id, null for a row not in ``ids``."""
+    return pc.index_in(table["unique_source_id"], value_set=ids, skip_nulls=True)
 
 
 def _incremented(col: pa.ChunkedArray) -> pa.ChunkedArray:

@@ -9,33 +9,44 @@ Lifecycle per run (reference step numbers preserved):
   2. concurrency guard — exit if valid in_progress work exists
   3. pending selection — priority-ordered LIMIT n (W5)
   4. safe boundary     — drop windows newer than now - x_time_back (P7)
-  5. per-window stages — discovery → source→stage → stage→target → audit
+  5. stages            — discovery → source→stage for the run's windows
+                         together, then stage→target → audit per window
 
 Stage work is DataFrame transforms against pluggable Source/Sink
-connectors; control state lives in the ControlTable. The per-window
-loop is driver-side (as in the reference). Spark does the data work
-only: once the source's schema is resolved, a window launches one
-Spark job, the stage write. The target loads the staged window's
-Parquet files at the file level (``Sink.load_files``), as the
-reference's Snowpipe copies the staged S3 files into the target table:
-the Parquet sinks copy the files into place with no job (2.1 ms
-against 229 ms for Spark's read and write of a warm hourly window, on
-4 cores). Every read and write of the control table — planning (steps
-0-4), gap and duplicate repair, the state transitions and the batch
-path's merge — runs on the driver through Arrow; only the SPC gate
-reads it in Spark. A Parquet ``FileSource`` counts the window on the
-driver with ``pyarrow``, and the audit counts the target from its
-Parquet footers, both with no job. At very large window counts
-``run_batch`` runs the same stages for the whole plan in four jobs:
-the source's schema read, one ``load_all`` write of every window
-(tagged by ``extract_all_windows``), and one grouped count of the rows
-written (a shuffle-map and a result job); each planned window's target
-count is the same footer count, and the merge keys on
+connectors; control state lives in the ControlTable. A run is the unit
+of work for claiming and staging (``_stage_windows``): one control
+rewrite claims every selected window, each window's source is counted
+on its own and one rewrite records the counts, one ``source.extract``
+of the run's span, tagged with each row's window, is written by one
+``Sink.load_windows``, and one rewrite completes the stage. Spark does
+the data work only: once the source's schema is resolved, a run
+launches one Spark job, the stage write, however many windows it holds
+(a window with no rows adds one, see ``load_windows``). The loop over
+the staged windows (``run_window``) is driver-side, as in the
+reference: the target loads each staged window's Parquet files at the
+file level (``Sink.load_files``), as the reference's Snowpipe copies
+the staged S3 files into the target table — the Parquet sinks copy the
+files into place with no job (2.1 ms against 229 ms for Spark's read
+and write of a warm hourly window, on 4 cores) — then the audit and
+its R3 envelope run, two control rewrites per window. A ten-window run
+rewrites the control table 23 times. Every read and write of the
+control table — planning (steps 0-4), gap and duplicate repair, the
+state transitions, the SPC gate's XmR points and the batch path's
+merge — runs on the driver through Arrow. A Parquet ``FileSource``
+counts the window on the driver with ``pyarrow``, and the audit counts
+the target from its Parquet footers, both with no job. At very large
+window counts ``run_batch`` runs the same stages for the whole plan in
+four jobs: the source's schema read, one ``load_all`` write of every
+window (tagged by ``extract_all_windows``), and one grouped count of
+the rows written (a shuffle-map and a result job); each planned
+window's target count is the same footer count, and the merge keys on
 ``unique_source_id`` like every other transition.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 import time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -44,6 +55,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_pipeline_001_spark.functions import time_fns
 from data_pipeline_001_spark.plans.control_table import (
@@ -58,7 +70,8 @@ from data_pipeline_001_spark.plans.control_table import (
     spark_local,
     utc_naive,
 )
-from data_pipeline_001_spark.sources.base import Sink, Source
+from data_pipeline_001_spark.sources.base import WINDOW_INDEX, Sink, Source
+from data_pipeline_001_spark.sources.file_connectors import window_dir_name, window_predicate
 
 
 def render_templates(config: dict, max_passes: int = 5) -> dict:
@@ -89,6 +102,34 @@ def render_templates(config: dict, max_passes: int = 5) -> dict:
         if not changed:
             break
     return out
+
+
+def xmr_points(series: list[tuple[datetime, int]]) -> dict[datetime, dict]:
+    """``xmr_control_points`` on the driver: the Shewhart XmR point of
+    each ``(key, value)`` of a short series (one per pipeline window),
+    keyed by ``key``, with the columns that operator gives — ``value``,
+    ``xbar``, ``ucl``/``lcl`` = xbar ± 2.66·mRbar, ``n_points`` and
+    ``out_of_control`` (None, like Spark's null, with fewer than two
+    points)."""
+    series = sorted(series, key=lambda p: p[0])
+    values = [float(v) for _, v in series]
+    ranges = [abs(b - a) for a, b in zip(values, values[1:])]
+    xbar = sum(values) / len(values) if values else None
+    mrbar = sum(ranges) / len(ranges) if ranges else None
+    ucl = lcl = None
+    if mrbar is not None:
+        ucl, lcl = xbar + 2.66 * mrbar, xbar - 2.66 * mrbar
+    return {
+        key: {
+            "value": v,
+            "xbar": xbar,
+            "ucl": ucl,
+            "lcl": lcl,
+            "n_points": len(values),
+            "out_of_control": None if ucl is None else (v > ucl or v < lcl),
+        }
+        for (key, _), v in zip(series, values)
+    }
 
 
 @dataclass
@@ -161,6 +202,8 @@ class WindowPipeline:
         self.stage_sink = stage_sink
         self.target_sink = target_sink
         self.control = control
+        # the extract schema of each window the latest stage write staged
+        self._staged: dict[str, T.StructType] = {}
 
     def _scoped_rows(self, where=None) -> pa.Table:
         """THIS pipeline's control rows for which the optional mask
@@ -191,8 +234,6 @@ class WindowPipeline:
         into one anti-join — J1 — instead of the reference's two code
         paths, state_manager.py:268-294 / 679-753). The spine and the
         anti-join run on the driver: no Spark job."""
-        from data_pipeline_001_spark.sources.file_connectors import window_dir_name
-
         existing = set(
             self._scoped_rows()["source_query_window_start_time"].to_pylist()
         )
@@ -331,86 +372,161 @@ class WindowPipeline:
             for s in bases
         }
 
-    def run_window(self, record) -> str:
-        """Execute the 4-stage pipeline for one control row. Returns
-        final status: 'completed' | 'failed' | 'reset'."""
-        sid = record["unique_source_id"]
-        start = record["source_query_window_start_time"]
-        end = record["source_query_window_end_time"]
-        self.control.claim(sid)
+    def _stage_windows(self, records: list) -> tuple[list, int]:
+        """Stages 1-2 for a run's windows ``records``, together.
 
-        stage = "source_discovery"
-        try:
-            # Stage 1 — source discovery: count + F12 duration estimates
-            # (downstream staleness reaping keys on these, so a heavy
-            # window gets a proportionally longer acceptable runtime)
-            t0 = datetime.now(timezone.utc)
-            src_count = self.source.count(start, end)
-            self.control.complete_stage(
-                sid,
-                "source_discovery",
-                t0,
-                extra={
-                    "source_count": src_count,
-                    **self._duration_estimates(src_count),
-                },
+        One rewrite claims them all. Each window's source is counted on
+        its own (a discovery error fails only that window), and one
+        rewrite records every count with its F12 duration estimates
+        (staleness reaping keys on these, so a heavy window gets a
+        proportionally longer acceptable runtime). One
+        ``source.extract`` covers the run: filtered by the OR of the
+        windows' predicates, so windows that are not next to each other
+        read only their own rows, and tagged with each row's window
+        (``WINDOW_INDEX``, a ``CASE`` over the exact half-open bounds).
+        The stage sink writes it with one ``load_windows``, and one
+        rewrite completes the stage for every window. A stage-write
+        error fails every window of the run at ``source_to_stage``.
+
+        Returns the staged windows' refreshed control rows, in the order
+        of ``records``, and the number of windows that failed. The
+        windows of one run must not overlap (``populate`` plans a
+        disjoint spine): a row goes to the first window it falls in."""
+        if not records:
+            return [], 0
+        self.control.claim([r["unique_source_id"] for r in records])
+
+        # Stage 1 — source discovery
+        t0 = datetime.now(timezone.utc)
+        counts: dict[str, int] = {}
+        for r in records:
+            sid = r["unique_source_id"]
+            try:
+                counts[sid] = self.source.count(
+                    r["source_query_window_start_time"], r["source_query_window_end_time"]
+                )
+            except Exception as exc:  # noqa: BLE001 — the reference records any stage error
+                self.control.fail_stage([sid], "source_discovery", str(exc))
+        found = [r for r in records if r["unique_source_id"] in counts]
+        if not found:
+            return [], len(records)
+        ids = [r["unique_source_id"] for r in found]
+        estimates = [self._duration_estimates(counts[sid]) for sid in ids]
+        self.control.complete_stage(
+            ids,
+            "source_discovery",
+            t0,
+            extra={
+                "source_count": [counts[sid] for sid in ids],
+                **{k: [e[k] for e in estimates] for k in estimates[0]},
+            },
+        )
+
+        # Stage 2 — source → stage (idempotence short-circuit S3, clean
+        # S4, extract S2), one write for the run
+        t0 = datetime.now(timezone.utc)
+        bounds = list(
+            dict.fromkeys(
+                (r["source_query_window_start_time"], r["source_query_window_end_time"])
+                for r in found
             )
-
-            # Stage 2 — source → stage (idempotence short-circuit S3,
-            # clean S4, extract S2)
-            stage = "source_to_stage"
-            t0 = datetime.now(timezone.utc)
-            if self.stage_sink.exists(start, end):
-                self.stage_sink.clean(start, end)
-            extracted = self.source.extract(start, end)
-            self.stage_sink.load(extracted, start, end)
-            # free write-path loss check: the stage write's Observation
-            # metrics (captured inside the write job, no extra scan)
-            # must already match the plan-time source count — catching
-            # an extract-side filter/shape bug here is one window-write
-            # earlier than the audit
-            written = getattr(self.stage_sink, "last_write_metrics", None)
-            if written is not None and written["rows"] != src_count:
+        )
+        ts = getattr(self.source, "ts_col", "ts")
+        in_window = [window_predicate(ts, s, e) for s, e in bounds]
+        index = F.when(in_window[0], 0)
+        for i, cond in enumerate(in_window[1:], 1):
+            index = index.when(cond, i)
+        try:
+            for s, e in bounds:
+                if self.stage_sink.exists(s, e):
+                    self.stage_sink.clean(s, e)
+            extracted = self.source.extract(
+                min(s for s, _ in bounds), max(e for _, e in bounds)
+            )
+            self.stage_sink.load_windows(
+                extracted.where(functools.reduce(operator.or_, in_window)).withColumn(
+                    WINDOW_INDEX, index
+                ),
+                bounds,
+            )
+        except Exception as exc:  # noqa: BLE001
+            self.control.fail_stage(ids, "source_to_stage", str(exc))
+            return [], len(records)
+        # write-path loss check: each staged window's footer count must
+        # already match its plan-time source count — an extract-side
+        # filter or shape bug shows here, a stage earlier than the audit
+        for r in found:
+            s, e = r["source_query_window_start_time"], r["source_query_window_end_time"]
+            written = self.stage_sink.count(s, e)
+            if written != counts[r["unique_source_id"]]:
                 from data_pipeline_001_spark.utils import pipeline_log
 
                 pipeline_log.info(
                     "stage write row-count drift vs plan-time source count",
                     log_key="StageWrite",
                     status="WRITE_DRIFT",
-                    window=str(start),
-                    source_count=src_count,
-                    written_rows=written["rows"],
+                    window=str(s),
+                    source_count=counts[r["unique_source_id"]],
+                    written_rows=written,
                 )
-            self.control.complete_stage(sid, "source_to_stage", t0)
+        self.control.complete_stage(ids, "source_to_stage", t0)
+        self._staged = dict.fromkeys(ids, extracted.schema)
+        keys = pa.array(ids, pa.string())
+        refreshed = {
+            r["unique_source_id"]: r
+            for r in collected(
+                self._scoped_rows(lambda t: pc.is_in(t["unique_source_id"], value_set=keys))
+            )
+        }
+        return [refreshed[sid] for sid in ids], len(records) - len(found)
 
+    def run_window(self, record) -> str:
+        """Stages 3-4 for one control row that the latest stage write
+        staged (``run`` passes each window's refreshed row): the target
+        loads the staged files, then the audit, its R3 envelope and the
+        optional SPC gate. Any other row, such as a pending one, is
+        first staged as a run of one window, through the same
+        ``_stage_windows`` (one Spark job). Returns the final status:
+        'completed' | 'failed' | 'reset'."""
+        sid = record["unique_source_id"]
+        if sid not in self._staged:
+            staged, _ = self._stage_windows([record])
+            if not staged:
+                return "failed"
+            record = staged[0]
+        schema = self._staged.pop(sid)
+        start = record["source_query_window_start_time"]
+        end = record["source_query_window_end_time"]
+
+        stage = "stage_to_target"
+        try:
             # Stage 3 — stage → target (S6/S7/S5): the target loads
             # the staged window's files (one directory, written with
             # the extract's schema) — a file copy for the Parquet sinks
-            stage = "stage_to_target"
             t0 = datetime.now(timezone.utc)
             if self.target_sink.exists(start, end):
                 self.target_sink.clean(start, end)
             self.target_sink.load_files(
                 self.stage_sink._window_path(start),  # type: ignore[attr-defined]
-                extracted.schema,
+                schema,
                 start,
                 end,
             )
-            self.control.complete_stage(sid, "stage_to_target", t0)
+            self.control.complete_stage([sid], "stage_to_target", t0)
 
             # Stage 4 — audit (A4 recount, A5 reconciliation, R3 retry)
             stage = "audit"
             t0 = datetime.now(timezone.utc)
-            status = self._audit(sid, start, end, src_count, t0)
+            status = self._audit(sid, start, end, record["source_count"], t0)
             # Stage 4b (optional) — post-audit SPC gate: the window's
             # audited count joins the pipeline's metrics series (the
             # control table itself) and is checked against the XmR
             # process limits
             if status == "completed" and self.config.spc_gate:
-                # Observability only: a transient Spark error inside the
-                # SPC collect must never flip a window whose audit
-                # actually PASSED back to failed (that would corrupt
-                # control-table status and trigger a spurious reset).
+                # Observability only: an error inside the SPC check must
+                # never flip a window whose audit actually PASSED back
+                # to failed (that would corrupt control-table status
+                # and trigger a spurious reset).
                 try:
                     self._spc_check(start)
                 except Exception as spc_exc:  # noqa: BLE001
@@ -427,7 +543,7 @@ class WindowPipeline:
         except Exception as exc:  # noqa: BLE001 — reference records any stage error
             # fail the stage that actually raised (reference keeps other
             # stages' state untouched: record_status_updater.py:102-123)
-            self.control.fail_stage(sid, stage, str(exc))
+            self.control.fail_stage([sid], stage, str(exc))
             return "failed"
 
     def audit_spc_flags(self) -> DataFrame:
@@ -466,18 +582,14 @@ class WindowPipeline:
 
     def _spc_check(self, start) -> None:
         """Log an SPC verdict for the just-audited window (run-flow
-        hook behind ``config.spc_gate``). One collect of one row of a
-        control-table-sized frame — never data-sized."""
+        hook behind ``config.spc_gate``): its XmR point over this
+        pipeline's audited counts, the point ``audit_spc_flags`` gives,
+        computed on the driver from the control rows with no Spark job."""
         from data_pipeline_001_spark.utils import pipeline_log
 
-        rows = (
-            self.audit_spc_flags()
-            .where(F.col("window_start") == start)
-            .collect()
-        )
-        if not rows or rows[0]["n_points"] < self.config.spc_min_points:
+        r = self._spc_points().get(start)
+        if r is None or r["n_points"] < self.config.spc_min_points:
             return
-        r = rows[0]
         if r["out_of_control"]:
             pipeline_log.info(
                 "window count out of control vs process history",
@@ -488,6 +600,15 @@ class WindowPipeline:
                 ucl=round(r["ucl"], 2),
                 lcl=round(r["lcl"], 2),
             )
+
+    def _spc_points(self) -> dict[datetime, dict]:
+        """``audit_spc_flags``' rows by window start, from the driver."""
+        rows = self._scoped_rows(
+            lambda t: pc.and_(
+                pc.equal(t["audit_status"], "completed"), pc.is_valid(t["target_count"])
+            )
+        ).select(["source_query_window_start_time", "target_count"])
+        return xmr_points([tuple(r) for r in collected(rows)])
 
     def _sleep(self, seconds: float) -> None:
         """Audit wait hook. The reference sleeps real wall-clock between
@@ -522,7 +643,7 @@ class WindowPipeline:
 
         def done(tgt: int) -> str:
             self.control.complete_stage(
-                sid,
+                [sid],
                 "audit",
                 t0,
                 extra={
@@ -608,6 +729,14 @@ class WindowPipeline:
         plan_end: datetime,
         now: datetime | None = None,
     ) -> RunResult:
+        """One DAG run: plan ``[plan_start, plan_end)`` (step 0), reap
+        stale work and exit while valid ``in_progress`` work exists
+        (steps 1-2), select up to ``max_pipeline_runs`` pending windows
+        (steps 3-4), stage them together (``_stage_windows``: one claim,
+        one stage write) and run stages 3-4 for each staged window
+        through ``run_window``, in W5 order. A discovery error fails only
+        its window; a stage-write error fails every window of the run at
+        ``source_to_stage``."""
         result = RunResult()
         self.populate(plan_start, plan_end)
         valid, reset = self.validate_in_progress(now)
@@ -615,7 +744,9 @@ class WindowPipeline:
         if valid:
             result.exited_for_concurrency = True
             return result
-        for record in self.pending_records(now):
+        staged, failed = self._stage_windows(self.pending_records(now))
+        result.processed = result.failed = failed
+        for record in staged:
             status = self.run_window(record)
             result.processed += 1
             if status == "completed":
@@ -672,7 +803,10 @@ class WindowPipeline:
         sink to support ``load_all`` (DayPartitionedTableSink).
 
         A naive plan bound is a wall time in the session time zone, as
-        ``populate`` reads it.
+        ``populate`` reads it. Like ``run``, it first reaps stale
+        ``in_progress`` rows and, while valid ones exist (another run
+        holds windows of this pipeline), plans and loads nothing and
+        returns an empty audit frame (R5).
 
         Audits this pipeline's control rows in the plan and returns
         their audit DataFrame (window_start, source_count,
@@ -681,6 +815,11 @@ class WindowPipeline:
         the R3 adaptive-retry envelope, so the control table holds the
         final per-window outcome (completed, or cleaned + reset).
         """
+        audit_schema = "window_start timestamp, source_count long, target_count long"
+        # R5, as in ``run``: no batch while valid in_progress work exists
+        valid, _ = self.validate_in_progress()
+        if valid:
+            return self.spark.createDataFrame([], audit_schema)
         tz = time_fns.session_tzinfo(self.spark)
         # F.lit would read a naive bound as the process's local time
         plan_start, plan_end = (
@@ -749,10 +888,7 @@ class WindowPipeline:
                 # the columnar write DID run the earlier stages; mirror
                 # the merge ok-path's stage bookkeeping for this row
                 self.control.update_where(
-                    row["unique_source_id"],
+                    [row["unique_source_id"]],
                     {f"{s}_status": "completed" for s in STAGES},
                 )
-        return self.spark.createDataFrame(
-            list(zip(starts, source, target)),
-            "window_start timestamp, source_count long, target_count long",
-        )
+        return self.spark.createDataFrame(list(zip(starts, source, target)), audit_schema)

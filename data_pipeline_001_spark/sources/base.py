@@ -15,6 +15,12 @@ staged S3 files into the target table without re-reading the rows
 through Spark and calls *load*; the Parquet sinks copy the files
 instead, with no Spark job (2.1 ms against 229 ms for a warm hourly
 window on 4 cores).
+
+S5 also has a run form, *load_windows*: the stage write of a run's
+windows from one extract whose rows carry ``WINDOW_INDEX``, the
+position of their window in the run. By default it calls *load* once
+per window; ``PartitionedParquetSink`` writes every window in one
+Spark job.
 """
 
 from __future__ import annotations
@@ -23,7 +29,18 @@ from abc import ABC, abstractmethod
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+#: the integer column ``load_windows`` reads: the row's window, as its
+#: position in the run's list of bounds
+WINDOW_INDEX = "_window_index"
+
+
+def window_rows(df: DataFrame, i: int) -> DataFrame:
+    """The rows of a ``load_windows`` frame in its window ``i``, without
+    ``WINDOW_INDEX``."""
+    return df.where(F.col(WINDOW_INDEX) == i).drop(WINDOW_INDEX)
 
 
 class Source(ABC):
@@ -53,6 +70,14 @@ class Sink(ABC):
         default reads them through Spark and calls ``load``."""
         df = SparkSession.active().read.schema(schema).parquet(path)
         self.load(df, start, end)
+
+    def load_windows(self, df: DataFrame, bounds: list[tuple[datetime, datetime]]) -> None:
+        """S5 for a run: write each window of ``bounds`` idempotently
+        from ``df``, whose ``WINDOW_INDEX`` column gives each row's
+        position in ``bounds``; the column itself is not written. This
+        default calls ``load`` once per window."""
+        for i, (start, end) in enumerate(bounds):
+            self.load(window_rows(df, i), start, end)
 
     @abstractmethod
     def count(self, start: datetime, end: datetime) -> int:

@@ -610,6 +610,13 @@ class VersionedTableSink(VersionedTable):
         Spark with ``schema`` and commit them as ``load`` does."""
         self.load(self.spark.read.schema(schema).parquet(path), start, end)
 
+    def load_windows(self, df: DataFrame, bounds) -> None:
+        """S5 for a run's tagged windows (``Sink.load_windows``): one
+        ``load`` commit per window."""
+        from data_pipeline_001_spark.sources.base import Sink
+
+        Sink.load_windows(self, df, bounds)
+
     def exists(self, start, end) -> bool:
         return self._wkey(start) in self._windows()
 

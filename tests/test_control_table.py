@@ -56,14 +56,14 @@ def test_append_generates_ids_and_defaults(ct):
 
 def test_claim_and_complete_all_stages(ct):
     sid = _row(ct)["unique_source_id"]
-    ct.claim(sid)
+    ct.claim([sid])
     r = _row(ct)
     assert r["pipeline_status"] == "in_progress"
     assert r["pipeline_start_time"] is not None
 
     started = datetime.utcnow()
     for i, stage in enumerate(STAGES, start=1):
-        ct.complete_stage(sid, stage, started)
+        ct.complete_stage([sid], stage, started)
         r = _row(ct)
         assert r[f"{stage}_status"] == "completed"
         assert r["completed_stage_number"] == i
@@ -73,8 +73,8 @@ def test_claim_and_complete_all_stages(ct):
 
 def test_fail_stage_resets_and_counts_retry(ct):
     sid = _row(ct)["unique_source_id"]
-    ct.claim(sid)
-    ct.fail_stage(sid, "source_discovery", "boom")
+    ct.claim([sid])
+    ct.fail_stage([sid], "source_discovery", "boom")
     r = _row(ct)
     assert r["pipeline_status"] == "failed"
     assert r["pipeline_retry_count"] == 1
@@ -84,10 +84,10 @@ def test_fail_stage_resets_and_counts_retry(ct):
 
 def test_audit_mismatch_full_reset(ct):
     sid = _row(ct)["unique_source_id"]
-    ct.claim(sid)
+    ct.claim([sid])
     started = datetime.utcnow()
     for stage in STAGES[:3]:
-        ct.complete_stage(sid, stage, started)
+        ct.complete_stage([sid], stage, started)
     ct.reset_after_audit_mismatch(sid)
     r = _row(ct)
     assert r["pipeline_status"] == "pending"
@@ -101,10 +101,10 @@ def test_audit_mismatch_full_reset(ct):
 
 def test_selective_stale_reset_keeps_completed_stages(ct):
     sid = _row(ct)["unique_source_id"]
-    ct.claim(sid)
+    ct.claim([sid])
     started = datetime.utcnow()
-    ct.complete_stage(sid, "source_discovery", started)
-    ct.complete_stage(sid, "source_to_stage", started)
+    ct.complete_stage([sid], "source_discovery", started)
+    ct.complete_stage([sid], "source_to_stage", started)
     ct.reset_stale_in_progress([sid])
     r = _row(ct)
     # completed stages survive (invalid_progress_handler.py:106-167)
@@ -151,18 +151,18 @@ def test_storage_contract_after_m1_to_m7(spark, tmp_path):
         table.read().collect(), key=lambda r: r["source_query_window_start_time"]
     )
     started = datetime(2024, 1, 2, 5, 6, 7, 890123)
-    table.claim(a["unique_source_id"], run_id="run-a")  # M1
+    table.claim([a["unique_source_id"]], run_id="run-a")  # M1
     table.complete_stage(  # M2
-        a["unique_source_id"], "source_discovery", started,
+        [a["unique_source_id"]], "source_discovery", started,
         extra={"source_count": 42, "source_to_stage_expected_duration_minutes": 15},
     )
-    table.claim(b["unique_source_id"])
-    table.fail_stage(b["unique_source_id"], "source_discovery", "boom")  # M3
-    table.claim(c["unique_source_id"])
-    table.complete_stage(c["unique_source_id"], "source_discovery", started)
+    table.claim([b["unique_source_id"]])
+    table.fail_stage([b["unique_source_id"]], "source_discovery", "boom")  # M3
+    table.claim([c["unique_source_id"]])
+    table.complete_stage([c["unique_source_id"]], "source_discovery", started)
     table.reset_after_audit_mismatch(c["unique_source_id"])  # M4
-    table.claim(d["unique_source_id"])
-    table.complete_stage(d["unique_source_id"], "source_discovery", started)
+    table.claim([d["unique_source_id"]])
+    table.complete_stage([d["unique_source_id"]], "source_discovery", started)
     table.reset_stale_in_progress([d["unique_source_id"]])  # M5
     table.delete_records([b["unique_source_id"]])  # M6
 
@@ -220,9 +220,9 @@ def test_legacy_spark_written_table_is_read_and_mutated(spark, tmp_path):
 
     table = ControlTable(spark, path)
     started = datetime(2024, 1, 2, 9, 30)
-    table.claim("id1", run_id="run-claimed")
-    table.complete_stage("id1", "source_discovery", started)
-    table.fail_stage("id2", "source_to_stage", "boom")
+    table.claim(["id1"], run_id="run-claimed")
+    table.complete_stage(["id1"], "source_discovery", started)
+    table.fail_stage(["id2"], "source_to_stage", "boom")
     table.delete_records(["run-id3"], key_col="unique_run_id")
 
     got = _by_id(table.read().collect())
@@ -250,10 +250,10 @@ def test_state_transitions_launch_no_spark_job(ct, spark):
     group = f"ct-transitions-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "control-table state transitions")
     try:
-        ct.claim(sid)
+        ct.claim([sid])
         started = datetime.utcnow()
         for stage in STAGES:
-            ct.complete_stage(sid, stage, started)
+            ct.complete_stage([sid], stage, started)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -272,7 +272,7 @@ def test_naive_datetimes_round_trip_in_any_local_timezone(ct, monkeypatch):
     monkeypatch.setenv("TZ", "America/New_York")
     time.tzset()
     try:
-        ct.complete_stage(sid, "source_discovery", started)
+        ct.complete_stage([sid], "source_discovery", started)
         assert _row(ct)["source_discovery_start_time"] == started
     finally:
         monkeypatch.undo()
@@ -293,9 +293,9 @@ def test_mutations_stream_across_batches(spark, tmp_path, monkeypatch):
     ]
     monkeypatch.setattr(control_table, "_BATCH_ROWS", 2)
     started = datetime(2024, 1, 2, 9, 30)
-    table.claim(ids[1], run_id="run-1")
-    table.complete_stage(ids[5], "source_discovery", started)
-    table.fail_stage(ids[3], "source_to_stage", "boom")
+    table.claim([ids[1]], run_id="run-1")
+    table.complete_stage([ids[5]], "source_discovery", started)
+    table.fail_stage([ids[3]], "source_to_stage", "boom")
     table.reset_stale_in_progress([ids[2], ids[6]])
     table.delete_records([ids[4]])
     audit = pa.table(
@@ -331,6 +331,105 @@ def test_failed_mutation_leaves_the_table_unchanged(ct, tmp_path):
     before = _by_id(ct.read().collect())
     sid = next(iter(before))
     with pytest.raises(pa.ArrowException):
-        ct.update_where(sid, {"pipeline_retry_count": "not-a-number"})
+        ct.update_where([sid], {"pipeline_retry_count": "not-a-number"})
     assert _by_id(ct.read().collect()) == before
     assert os.listdir(tmp_path) == ["control"]
+
+
+def _keyed_table(spark, path, hours=4):
+    table = ControlTable(spark, path)
+    table.append_records(
+        [
+            default_record(
+                "p1", ("events", "file", "parquet"), ("target", "file", "parquet"),
+                datetime(2024, 1, 2, h), datetime(2024, 1, 2, h + 1),
+                stage_path=f"2024-01-02/{h:02d}-00",
+            )
+            for h in range(hours)
+        ]
+    )
+    return table
+
+
+#: the columns that differ between two tables built apart: the times a
+#: row was written or changed, and the run id an unclaimed row derives
+#: from its insert time
+_VOLATILE = {
+    "record_first_inserted_time", "record_last_updated_time", "pipeline_start_time",
+    "source_discovery_end_time", "unique_run_id",
+}
+
+
+def _state(table):
+    """The rows, ordered by window start, without ``_VOLATILE``."""
+    rows = pq.read_table(table.path, coerce_int96_timestamp_unit="us").to_pylist()
+    return sorted(
+        ({k: v for k, v in r.items() if k not in _VOLATILE} for r in rows),
+        key=lambda r: r["source_query_window_start_time"],
+    )
+
+
+def test_keyed_transitions_equal_one_id_calls(spark, tmp_path):
+    """One ``claim``/``complete_stage``/``fail_stage`` over many ids, with
+    a different value per id, leaves the rows that the one-id calls made
+    in sequence leave (the transition times aside); a row outside the
+    ids is untouched, and an id the table lacks changes nothing."""
+    started = datetime(2024, 1, 2, 5, 6, 7)
+    batched = _keyed_table(spark, str(tmp_path / "batched"))
+    single = _keyed_table(spark, str(tmp_path / "single"))
+    rows = sorted(
+        batched.read().collect(), key=lambda r: r["source_query_window_start_time"]
+    )
+    ids = [r["unique_source_id"] for r in rows[:3]]
+    counts, minutes = [10, 0, 30], [15, 16, 17]
+    before = _state(batched)
+
+    batched.claim([*ids, "absent"], run_id="run")
+    batched.complete_stage(
+        ids, "source_discovery", started,
+        extra={"source_count": counts, "source_to_stage_expected_duration_minutes": minutes},
+    )
+    batched.fail_stage(ids[1:], "source_to_stage", "boom")
+    for sid, n, m in zip(ids, counts, minutes):
+        single.claim([sid], run_id="run")
+        single.complete_stage(
+            [sid], "source_discovery", started,
+            extra={"source_count": n, "source_to_stage_expected_duration_minutes": m},
+        )
+    for sid in ids[1:]:
+        single.fail_stage([sid], "source_to_stage", "boom")
+
+    got, want = _state(batched), _state(single)
+    assert got == want
+    assert [r["source_count"] for r in got] == [10, 0, 30, None]
+    assert [r["pipeline_status"] for r in got] == ["in_progress", "failed", "failed", "pending"]
+    assert got[3] == before[3]
+    claimed = pq.read_table(batched.path, columns=["unique_source_id", "unique_run_id"])
+    assert {r["unique_run_id"] for r in claimed.to_pylist() if r["unique_source_id"] in ids} == {
+        "run"
+    }
+    with pytest.raises(TypeError):
+        batched.update_where(ids[0], {"pipeline_retry_count": 9})
+
+
+def test_keyed_values_take_the_first_duplicate(spark, tmp_path):
+    """A duplicated id takes its first value, in ``update_where`` as in
+    ``merge_audit_results``, and neither fans out the table."""
+    table = _keyed_table(spark, str(tmp_path / "control"), hours=2)
+    a, b = (r["unique_source_id"] for r in sorted(
+        table.read().collect(), key=lambda r: r["source_query_window_start_time"]
+    ))
+    table.update_where([a, a, b], {"source_count": [1, 2, 3]})
+    table.merge_audit_results(
+        pa.table(
+            {
+                "unique_source_id": [b, b],
+                "source_count": pa.array([5, 5], pa.int64()),
+                "target_count": pa.array([5, 9], pa.int64()),
+            }
+        )
+    )
+    got = {r["unique_source_id"]: r for r in table.read().collect()}
+    assert len(got) == table.read().count() == 2
+    assert got[a]["source_count"] == 1
+    assert (got[b]["target_count"], got[b]["count_match_status"]) == (5, "matched")

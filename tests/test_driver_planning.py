@@ -248,7 +248,7 @@ def test_transition_times_are_stored_in_utc(spark, tmp_path):
     pipe = _pipe(spark, tmp_path)
     pipe.populate(DAY, DAY_END)
     sid = _stored(pipe.control)[0]["unique_source_id"]
-    pipe.control.claim(sid)
+    pipe.control.claim([sid])
     started = [r for r in _stored(pipe.control) if r["unique_source_id"] == sid][0][
         "pipeline_start_time"
     ]
@@ -334,6 +334,28 @@ def test_sink_paths_name_the_session_wall_time(spark, tmp_path):
             table.root, f"window_day={day}", f"window_start={hhmm}"
         )
         assert (str(day), hhmm) == ("2024-01-01", "19-00")
+
+
+def test_run_stage_paths_name_the_session_wall_time(spark, tmp_path):
+    """A run's one stage write puts each window in the directory
+    ``window_dir_name`` gives its stored instant, and the target copy
+    follows it: the day's four windows are ``2024-01-02/00-00`` to
+    ``18-00`` in any local time zone."""
+    pipe = _pipe(spark, tmp_path, name="run_paths")
+    assert pipe.run(DAY, DAY_END).completed == 4
+    tz = time_fns.session_tzinfo(spark)
+    names = [
+        window_dir_name(r["source_query_window_start_time"].replace(tzinfo=timezone.utc), tz)
+        for r in _stored(pipe.control)
+    ]
+    assert names == [f"2024-01-02/{h:02d}-00" for h in (0, 6, 12, 18)]
+    assert [r["stage_name"] for r in _stored(pipe.control)] == names
+    for sink in (pipe.stage_sink, pipe.target_sink):
+        assert sorted(
+            f"{day}/{hhmm}" for day in os.listdir(sink.root) for hhmm in os.listdir(
+                os.path.join(sink.root, day)
+            )
+        ) == names
 
 
 @pytest.mark.slow

@@ -289,3 +289,27 @@ def test_consecutive_run_batch_days_keep_earlier_days(batch_pipe):
         ), r["source_query_window_start_time"]
     total_target = batch_pipe.target_sink.read_all().count()
     assert total_target == batch_pipe.source.count(DAY, DAY_END) > 0
+
+
+def test_run_batch_exits_while_a_run_holds_windows(batch_pipe):
+    """R5: with a fresh ``in_progress`` window inside the plan,
+    ``run_batch`` returns an empty audit, loads nothing, and leaves the
+    claimed row as it was."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    batch_pipe.populate(DAY, DAY_END)
+    sid = batch_pipe.control.read().collect()[3]["unique_source_id"]
+    batch_pipe.control.claim([sid])
+
+    def rows():
+        return pq.read_table(
+            batch_pipe.control.path, coerce_int96_timestamp_unit="us"
+        ).to_pylist()
+
+    before = rows()
+    assert batch_pipe.run_batch(DAY, DAY_END).collect() == []
+    assert rows() == before
+    root = batch_pipe.target_sink.root
+    assert not os.path.exists(root) or not os.listdir(root)

@@ -3,6 +3,7 @@
 verify drive-table transitions + idempotence + backfill + stale reset
 + the mock-async audit retry (R3)."""
 
+import os
 import uuid
 from datetime import datetime
 
@@ -142,7 +143,7 @@ def test_stale_in_progress_reset_then_rerun(pipe):
     pipe.populate(DAY, DAY_END)
     rec = pipe.control.read().collect()[0]
     sid = rec["unique_source_id"]
-    pipe.control.claim(sid)
+    pipe.control.claim([sid])
     # no expected durations set → acceptable runtime floors at 10 min;
     # pretend "now" is 2 hours later → stale
     from datetime import timedelta
@@ -204,8 +205,8 @@ def test_duration_estimates_scale_staleness_bound(spark, tmp_path):
 
     # both re-claimed at the same instant, checked 40 min later:
     # light's bound is 15+7+3=25 min → reaped; heavy's is hours → valid
-    heavy.control.claim(heavy.control.read().collect()[0]["unique_source_id"])
-    light.control.claim(lrow["unique_source_id"])
+    heavy.control.claim([heavy.control.read().collect()[0]["unique_source_id"]])
+    light.control.claim([lrow["unique_source_id"]])
     later = datetime.utcnow() + timedelta(minutes=40)
     assert heavy.validate_in_progress(later) == (1, 0)
     assert light.validate_in_progress(later) == (0, 1)
@@ -239,7 +240,7 @@ def test_stage_failure_attributed_to_failing_stage(spark, tmp_path):
 def test_concurrency_guard_exits(pipe):
     pipe.populate(DAY, DAY_END)
     sid = pipe.control.read().collect()[0]["unique_source_id"]
-    pipe.control.claim(sid)  # fresh claim → valid in_progress
+    pipe.control.claim([sid])  # fresh claim → valid in_progress
     result = pipe.run(DAY, DAY_END)
     assert result.exited_for_concurrency
     assert result.processed == 0
@@ -369,6 +370,125 @@ def test_warm_window_launches_only_count_and_write_jobs(spark, tmp_path):
     assert r["source_count"] == r["target_count"] > 0
 
 
+def _run_pipe(spark, tmp_path, name, granularity="2h", runs=10, stage=PartitionedParquetSink,
+              **cfg):
+    return WindowPipeline(
+        spark,
+        PipelineConfig(
+            pipeline_name=name, granularity=granularity, max_pipeline_runs=runs, **cfg
+        ),
+        FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts"),
+        stage(spark, str(tmp_path / f"{name}_stage")),
+        PartitionedParquetSink(spark, str(tmp_path / f"{name}_target")),
+        ControlTable(spark, str(tmp_path / f"{name}_control")),
+    )
+
+
+def test_warm_run_stages_ten_windows_in_one_spark_job(spark, tmp_path):
+    """Once the source schema is resolved, a ten-window ``run()``
+    launches one Spark job, its stage write, and every window completes
+    and matches."""
+    from datetime import timedelta
+
+    pipe = _run_pipe(spark, tmp_path, "run_jobs")
+    end = DAY + timedelta(hours=22)
+    pipe.populate(DAY, end)
+    assert pipe.run_window(pipe.pending_records()[0]) == "completed"
+    results = []
+    assert _spark_jobs(spark, lambda: results.append(pipe.run(DAY, end))) == 1
+    assert (results[0].processed, results[0].completed) == (10, 10)
+    rows = pipe.control.read().collect()
+    assert len(rows) == 11
+    for r in rows:
+        assert (r["pipeline_status"], r["count_match_status"]) == ("completed", "matched")
+        assert r["source_count"] == r["target_count"] > 0
+
+
+def test_spc_gate_launches_no_spark_job(spark, tmp_path):
+    """The SPC gate computes its window's XmR point on the driver: a warm
+    window with ``spc_gate`` on launches only its stage write."""
+    pipe = _run_pipe(spark, tmp_path, "spc_jobs", granularity="6h", runs=4, spc_gate=True)
+    pipe.populate(DAY, DAY_END)
+    first, second = pipe.pending_records()[:2]
+    assert pipe.run_window(first) == "completed"
+    assert _spark_jobs(spark, lambda: pipe.run_window(second)) == 1
+
+
+def test_failed_stage_write_fails_every_window_of_the_run(spark, tmp_path):
+    """A stage write that fails mid-job fails every window of the run at
+    ``source_to_stage`` with the error text, leaves no temp directory
+    under the stage root, and the windows complete when run again (a
+    failed window is not pending, so each is rerun on its own)."""
+
+    class FlakyStage(PartitionedParquetSink):
+        down = True
+
+        def load_windows(self, df, bounds):
+            if self.down:
+                df = df.withColumn("boom", F.raise_error(F.lit("stage store down")))
+            super().load_windows(df, bounds)
+
+    pipe = _run_pipe(spark, tmp_path, "flaky_stage", granularity="6h", runs=4, stage=FlakyStage)
+    result = pipe.run(DAY, DAY_END)
+    assert (result.processed, result.failed, result.completed) == (4, 4, 0)
+    rows = pipe.control.read().collect()
+    for r in rows:
+        assert r["pipeline_status"] == "failed"
+        assert r["source_discovery_status"] == "completed"
+        assert r["source_to_stage_status"] == "pending"
+        assert r["pipeline_retry_count"] == 1
+        assert "stage store down" in r["pipeline_error_details"]
+    assert not [n for n in os.listdir(pipe.stage_sink.root) if n.startswith(".")]
+
+    pipe.stage_sink.down = False
+    assert [pipe.run_window(r) for r in rows] == ["completed"] * 4
+    for r in pipe.control.read().collect():
+        assert (r["pipeline_status"], r["count_match_status"]) == ("completed", "matched")
+        assert r["source_count"] == r["target_count"] > 0
+
+
+def test_run_stages_only_its_own_non_adjacent_windows(spark, tmp_path):
+    """Pending windows with completed ones between them, two of them
+    empty, are staged by one run: each stage directory holds exactly
+    the source rows of its own hour (checked with DuckDB), the skipped
+    windows get no stage directory, and every run window completes."""
+    import duckdb
+    from datetime import timedelta
+
+    pipe = _run_pipe(spark, tmp_path, "gaps", granularity="1h", runs=5)
+    pipe.populate(DAY, DAY_END)
+    run_hours = [1, 2, 5, 9, 13]  # sf0.001 has no events in hours 2 and 13
+    by_hour = {
+        r["source_query_window_start_time"].hour: r["unique_source_id"]
+        for r in pipe.control.read().collect()
+    }
+    pipe.control.update_where(
+        [sid for h, sid in by_hour.items() if h not in run_hours],
+        {"pipeline_status": "completed"},
+    )
+    result = pipe.run(DAY, DAY_END)
+    assert (result.processed, result.completed) == (5, 5)
+
+    con = duckdb.connect()
+    events = f"read_parquet('{SF_DIR}/events.parquet')"
+    for h in range(24):
+        start = DAY + timedelta(hours=h)
+        staged = os.path.join(pipe.stage_sink.root, start.strftime("%Y-%m-%d/%H-%M"))
+        if h not in run_hours:
+            assert not os.path.exists(staged), h
+            continue
+        want = con.execute(
+            f"SELECT event_id FROM {events} WHERE ts >= ? AND ts < ? ORDER BY 1",
+            [start, start + timedelta(hours=1)],
+        ).fetchall()
+        got = con.execute(
+            f"SELECT event_id FROM read_parquet('{staged}/*.parquet') ORDER BY 1"
+        ).fetchall()
+        assert got == want, h
+        assert bool(want) == (h not in (2, 13))
+    assert not [n for n in os.listdir(pipe.stage_sink.root) if n.startswith(".")]
+
+
 def test_planning_a_run_launches_no_spark_job(spark, tmp_path):
     """populate, the stale-run check and pending selection read and
     write the control table on the driver: planning a run, fresh or
@@ -392,7 +512,7 @@ def test_planning_a_run_launches_no_spark_job(spark, tmp_path):
     assert _spark_jobs(spark, lambda: plan(DAY, datetime(2024, 1, 2, 12))) == 0
     inserted, validated, pending = runs[-1]
     assert (inserted, validated, len(pending)) == (4, (0, 0), 4)
-    pipe.control.claim(pending[0]["unique_source_id"])
+    pipe.control.claim([pending[0]["unique_source_id"]])
     assert _spark_jobs(spark, lambda: plan(DAY, DAY_END)) == 0
     inserted, validated, pending = runs[-1]
     assert (inserted, validated) == (4, (1, 0))
@@ -599,3 +719,12 @@ def test_spc_gate_flags_planted_count_anomaly(spark, tmp_path):
     assert flags[anomaly_window]["out_of_control"] is True
     others = [w for w in flags if w != anomaly_window]
     assert not any(flags[w]["out_of_control"] for w in others)
+
+    # the gate's driver points are the Spark operator's
+    points = planted._spc_points()
+    assert set(points) == set(flags)
+    for w, r in flags.items():
+        got = points[w]
+        assert (got["n_points"], got["out_of_control"]) == (r["n_points"], r["out_of_control"])
+        for k in ("value", "xbar", "ucl", "lcl"):
+            assert got[k] == pytest.approx(r[k], rel=1e-12), (w, k)

@@ -451,33 +451,47 @@ def test_python_datasource_generates_on_executors(spark):
     ]
 
 
-def test_parquet_sink_observes_write_metrics(spark, tables, tmp_path):
-    """The window write captures rows/min/max ts via Observation —
-    inside the write job, no second scan — and they match an
-    independent recount of what landed."""
-    from datetime import datetime
+def test_parquet_sink_load_windows_writes_each_window(spark, tables, tmp_path):
+    """``load_windows`` writes a run's tagged windows in one job: each
+    window's directory holds exactly its rows in files of at most
+    ``max_records_per_file`` rows, with the frame's columns and not the
+    tag, and a ``_SUCCESS`` file; it replaces what the directory held;
+    an empty window gets Spark's empty file; no temp directory is left."""
+    import os
+    from datetime import datetime, timedelta
 
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from data_pipeline_001_spark.sources.base import WINDOW_INDEX
     from data_pipeline_001_spark.sources.file_connectors import (
         PartitionedParquetSink,
+        footer_row_count,
     )
 
-    sink = PartitionedParquetSink(spark, str(tmp_path / "t"))
+    sink = PartitionedParquetSink(spark, str(tmp_path / "t"), max_records_per_file=2)
     ev = tables["events"]
-    start, end = datetime(2024, 1, 1), datetime(2024, 1, 2)
-    win = ev.where(
-        (F.col("ts") >= F.lit(start)) & (F.col("ts") < F.lit(end))
+    day = datetime(2024, 1, 2)
+    bounds = [(day + timedelta(hours=h), day + timedelta(hours=h + 1)) for h in (0, 2, 4)]
+    in_window = [(F.col("ts") >= F.lit(s)) & (F.col("ts") < F.lit(e)) for s, e in bounds]
+    index = F.when(in_window[0], 0).when(in_window[1], 1).when(in_window[2], 2)
+    sink.load(ev.limit(7), *bounds[0])  # stale rows the write must replace
+    sink.load_windows(
+        ev.where(in_window[0] | in_window[1] | in_window[2]).withColumn(WINDOW_INDEX, index),
+        bounds,
     )
-    sink.load(win, start, end)
-    m = sink.last_write_metrics
-    assert m is not None
-    back = spark.read.parquet(sink._window_path(start))
-    agg = back.agg(
-        F.count(F.lit(1)), F.min("ts"), F.max("ts")
-    ).first()
-    assert m["rows"] == agg[0] > 0
-    assert m["min_ts"] == agg[1] and m["max_ts"] == agg[2]
+
+    assert not [n for n in os.listdir(sink.root) if n.startswith(".")]
+    for (start, end), cond in zip(bounds, in_window):
+        path = sink._window_path(start)
+        files = [n for n in os.listdir(path) if n.endswith(".parquet")]
+        assert "_SUCCESS" in os.listdir(path)
+        assert footer_row_count(path) == sink.count(start, end) == ev.where(cond).count()
+        for n in files:
+            meta = pq.read_metadata(os.path.join(path, n))
+            assert meta.num_rows <= 2
+            assert meta.schema.to_arrow_schema().names == ev.columns
+    assert sink.count(*bounds[1]) == 0 and sink.exists(*bounds[1])
 
 
 def test_dynamic_partition_overwrite_replaces_only_touched(
