@@ -76,6 +76,10 @@ from data_pipeline_001_spark.functions.time_fns import session_tzinfo
 PIPELINE_STATUSES = ("pending", "in_progress", "completed", "failed")
 STAGES = ("source_discovery", "source_to_stage", "stage_to_target", "audit")
 STAGE_NUMBER = {s: i + 1 for i, s in enumerate(STAGES)}
+#: ``select_pending`` selects a ``failed`` window again while its
+#: ``pipeline_retry_count`` is below this, as the R1 retry decorator
+#: tries a call three times; past it the window stays ``failed``
+FAILED_RETRY_LIMIT = 3
 
 
 def _stage_fields(stage: str) -> list[T.StructField]:
@@ -613,8 +617,17 @@ def select_pending(rows: pa.Table, limit: int) -> pa.Table:
     """W5/O1: pending-work selection — oldest window first, then most
     retried, then lowest priority value; LIMIT n
     (reference: pending_records_selector.py:20-23). Nulls sort as in
-    Spark: first in an ascending key, last in a descending one."""
-    rows = rows.filter(pc.equal(rows["pipeline_status"], "pending"))
+    Spark: first in an ascending key, last in a descending one.
+
+    A ``failed`` window (``fail_stage``: a stage raised) is selected
+    too while its retry count is below ``FAILED_RETRY_LIMIT``, so the
+    next run runs it again."""
+    status = rows["pipeline_status"]
+    retried = pc.and_kleene(
+        pc.equal(status, "failed"),
+        pc.less(rows["pipeline_retry_count"], FAILED_RETRY_LIMIT),
+    )
+    rows = rows.filter(pc.or_kleene(pc.equal(status, "pending"), retried))
     start = rows["source_query_window_start_time"]
     retries = rows["pipeline_retry_count"]
     priority = rows["pipeline_priority"]

@@ -16,12 +16,12 @@ Stage work is DataFrame transforms against pluggable Source/Sink
 connectors; control state lives in the ControlTable. A run is the unit
 of work for claiming and staging (``_stage_windows``): one control
 rewrite claims every selected window, each window's source is counted
-on its own and one rewrite records the counts, one ``source.extract``
-of the run's span, tagged with each row's window, is written by one
-``Sink.load_windows``, and one rewrite completes the stage. Spark does
-the data work only: once the source's schema is resolved, a run
-launches one Spark job, the stage write, however many windows it holds
-(a window with no rows adds one, see ``load_windows``). The loop over
+on its own and one rewrite records the counts, one
+``Source.extract_windows`` frame, each row tagged with its window, is
+written by one ``Sink.load_windows``, and one rewrite completes the
+stage. Spark does the data work only: once a ``FileSource``'s schema
+is resolved, a run launches one Spark job, the stage write, however
+many windows it holds. The loop over
 the staged windows (``run_window``) is driver-side, as in the
 reference: the target loads each staged window's Parquet files at the
 file level (``Sink.load_files``), as the reference's Snowpipe copies
@@ -45,8 +45,6 @@ window's target count is the same footer count, and the merge keys on
 
 from __future__ import annotations
 
-import functools
-import operator
 import time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -71,7 +69,7 @@ from data_pipeline_001_spark.plans.control_table import (
     utc_naive,
 )
 from data_pipeline_001_spark.sources.base import WINDOW_INDEX, Sink, Source
-from data_pipeline_001_spark.sources.file_connectors import window_dir_name, window_predicate
+from data_pipeline_001_spark.sources.file_connectors import window_dir_name
 
 
 def render_templates(config: dict, max_passes: int = 5) -> dict:
@@ -295,20 +293,36 @@ class WindowPipeline:
     def validate_in_progress(self, now: datetime | None = None) -> tuple[int, int]:
         """Returns (valid_count, reset_count). Stale rows (runtime >
         acceptable) get the selective M5 reset. The stored start times
-        are naive UTC; a naive ``now`` is taken as UTC too."""
+        are naive UTC; a naive ``now`` is taken as UTC too.
+
+        A row's acceptable runtime is its run's: the windows one rewrite
+        claimed (``_stage_windows``) share their ``pipeline_start_time``,
+        and each may run for the sum of their acceptable runtimes,
+        whatever their status now, since the run stages them all before
+        it loads and audits each in turn."""
         now = now or datetime.now(timezone.utc)
         if now.tzinfo is not None:
             now = utc_naive(now)
         rows = self._scoped_rows(
             lambda t: pc.equal(t["pipeline_status"], "in_progress")
         ).to_pylist()
+        starts = pa.array(
+            {r["pipeline_start_time"] for r in rows} - {None}, pa.timestamp("us")
+        )
+        allowed: dict[datetime, float] = dict.fromkeys(starts.to_pylist(), 0.0)
+        if allowed:
+            claimed = self._scoped_rows(
+                lambda t: pc.is_in(t["pipeline_start_time"], value_set=starts)
+            ).to_pylist()
+            for r in claimed:
+                allowed[r["pipeline_start_time"]] += self._acceptable_runtime_minutes(r)
         stale, valid = [], 0
         for r in rows:
             started = r["pipeline_start_time"]
             runtime_min = (
                 (now - started).total_seconds() / 60.0 if started else float("inf")
             )
-            if runtime_min > self._acceptable_runtime_minutes(r):
+            if runtime_min > allowed.get(started, 0.0):
                 stale.append(r["unique_source_id"])
             else:
                 valid += 1
@@ -380,18 +394,16 @@ class WindowPipeline:
         rewrite records every count with its F12 duration estimates
         (staleness reaping keys on these, so a heavy window gets a
         proportionally longer acceptable runtime). One
-        ``source.extract`` covers the run: filtered by the OR of the
-        windows' predicates, so windows that are not next to each other
-        read only their own rows, and tagged with each row's window
-        (``WINDOW_INDEX``, a ``CASE`` over the exact half-open bounds).
-        The stage sink writes it with one ``load_windows``, and one
-        rewrite completes the stage for every window. A stage-write
-        error fails every window of the run at ``source_to_stage``.
+        ``source.extract_windows`` gives the run's rows, each tagged
+        with its window (``WINDOW_INDEX``); the stage sink writes them
+        with one ``load_windows``, and one rewrite completes the stage
+        for every window. A stage-write error fails every window of the
+        run at ``source_to_stage``; the next run selects them again.
 
         Returns the staged windows' refreshed control rows, in the order
         of ``records``, and the number of windows that failed. The
         windows of one run must not overlap (``populate`` plans a
-        disjoint spine): a row goes to the first window it falls in."""
+        disjoint spine)."""
         if not records:
             return [], 0
         self.control.claim([r["unique_source_id"] for r in records])
@@ -431,24 +443,12 @@ class WindowPipeline:
                 for r in found
             )
         )
-        ts = getattr(self.source, "ts_col", "ts")
-        in_window = [window_predicate(ts, s, e) for s, e in bounds]
-        index = F.when(in_window[0], 0)
-        for i, cond in enumerate(in_window[1:], 1):
-            index = index.when(cond, i)
         try:
             for s, e in bounds:
                 if self.stage_sink.exists(s, e):
                     self.stage_sink.clean(s, e)
-            extracted = self.source.extract(
-                min(s for s, _ in bounds), max(e for _, e in bounds)
-            )
-            self.stage_sink.load_windows(
-                extracted.where(functools.reduce(operator.or_, in_window)).withColumn(
-                    WINDOW_INDEX, index
-                ),
-                bounds,
-            )
+            extracted = self.source.extract_windows(bounds)
+            self.stage_sink.load_windows(extracted, bounds)
         except Exception as exc:  # noqa: BLE001
             self.control.fail_stage(ids, "source_to_stage", str(exc))
             return [], len(records)
@@ -470,7 +470,8 @@ class WindowPipeline:
                     written_rows=written,
                 )
         self.control.complete_stage(ids, "source_to_stage", t0)
-        self._staged = dict.fromkeys(ids, extracted.schema)
+        schema = T.StructType([f for f in extracted.schema if f.name != WINDOW_INDEX])
+        self._staged = dict.fromkeys(ids, schema)
         keys = pa.array(ids, pa.string())
         refreshed = {
             r["unique_source_id"]: r
@@ -736,7 +737,8 @@ class WindowPipeline:
         one stage write) and run stages 3-4 for each staged window
         through ``run_window``, in W5 order. A discovery error fails only
         its window; a stage-write error fails every window of the run at
-        ``source_to_stage``."""
+        ``source_to_stage``. A later run selects a failed window again
+        (``select_pending``) and runs it again from discovery."""
         result = RunResult()
         self.populate(plan_start, plan_end)
         valid, reset = self.validate_in_progress(now)

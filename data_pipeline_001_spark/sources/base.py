@@ -16,15 +16,18 @@ through Spark and calls *load*; the Parquet sinks copy the files
 instead, with no Spark job (2.1 ms against 229 ms for a warm hourly
 window on 4 cores).
 
-S5 also has a run form, *load_windows*: the stage write of a run's
-windows from one extract whose rows carry ``WINDOW_INDEX``, the
-position of their window in the run. By default it calls *load* once
-per window; ``PartitionedParquetSink`` writes every window in one
-Spark job.
+S2 and S5 also have a run form. *extract_windows* gives a run's
+windows as one frame whose rows carry ``WINDOW_INDEX``, the position
+of their window in the run; by default it unions one *extract* per
+window, so a source keeps its own per-window query, while
+``FileSource`` reads the run's span once. *load_windows* is the stage
+write of that frame; by default it calls *load* once per window, while
+``PartitionedParquetSink`` writes every window in one Spark job.
 """
 
 from __future__ import annotations
 
+import functools
 from abc import ABC, abstractmethod
 from datetime import datetime
 
@@ -53,6 +56,20 @@ class Source(ABC):
     @abstractmethod
     def extract(self, start: datetime, end: datetime) -> DataFrame:
         """S2: all records in [start, end) as a DataFrame (lazy)."""
+
+    def extract_windows(self, bounds: list[tuple[datetime, datetime]]) -> DataFrame:
+        """S2 for a run: the records of every window of ``bounds`` as one
+        lazy DataFrame, each row tagged with ``WINDOW_INDEX``, its
+        window's position in ``bounds``. This default unions one
+        ``extract`` per window by column name; a column that some
+        windows lack (a schema inferred per window) is null in them."""
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            (
+                self.extract(start, end).withColumn(WINDOW_INDEX, F.lit(i))
+                for i, (start, end) in enumerate(bounds)
+            ),
+        )
 
 
 class Sink(ABC):

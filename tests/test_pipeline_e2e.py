@@ -417,8 +417,8 @@ def test_spc_gate_launches_no_spark_job(spark, tmp_path):
 def test_failed_stage_write_fails_every_window_of_the_run(spark, tmp_path):
     """A stage write that fails mid-job fails every window of the run at
     ``source_to_stage`` with the error text, leaves no temp directory
-    under the stage root, and the windows complete when run again (a
-    failed window is not pending, so each is rerun on its own)."""
+    under the stage root, and the next ``run()`` selects the failed
+    windows again and completes them."""
 
     class FlakyStage(PartitionedParquetSink):
         down = True
@@ -441,17 +441,82 @@ def test_failed_stage_write_fails_every_window_of_the_run(spark, tmp_path):
     assert not [n for n in os.listdir(pipe.stage_sink.root) if n.startswith(".")]
 
     pipe.stage_sink.down = False
-    assert [pipe.run_window(r) for r in rows] == ["completed"] * 4
+    result = pipe.run(DAY, DAY_END)
+    assert (result.processed, result.failed, result.completed) == (4, 0, 4)
     for r in pipe.control.read().collect():
         assert (r["pipeline_status"], r["count_match_status"]) == ("completed", "matched")
         assert r["source_count"] == r["target_count"] > 0
 
 
+def test_run_stages_windows_of_a_source_whose_time_column_is_not_ts(spark, tmp_path):
+    """A Source that names its time column as Elasticsearch does
+    (``@timestamp``) and has no ``ts_col`` stages a run through the
+    default ``extract_windows``, one ``extract`` per window, and every
+    window completes with its own rows."""
+    from data_pipeline_001_spark.sources.base import Source
+    from data_pipeline_001_spark.sources.file_connectors import window_predicate
+
+    events = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts").extract(DAY, DAY_END)
+
+    class FrameSource(Source):
+        def __init__(self, df):
+            self.df = df
+
+        def count(self, start, end):
+            return self.extract(start, end).count()
+
+        def extract(self, start, end):
+            return self.df.where(window_predicate("@timestamp", start, end))
+
+    pipe = _run_pipe(spark, tmp_path, "es_like", granularity="6h", runs=4)
+    pipe.source = FrameSource(events.withColumnRenamed("ts", "@timestamp"))
+    result = pipe.run(DAY, DAY_END)
+    assert (result.processed, result.completed) == (4, 4)
+    rows = pipe.control.read().collect()
+    for r in rows:
+        assert (r["pipeline_status"], r["count_match_status"]) == ("completed", "matched")
+    assert sum(r["target_count"] for r in rows) == events.count() > 0
+    staged = spark.read.option("recursiveFileLookup", "true").parquet(pipe.stage_sink.root)
+    assert "@timestamp" in staged.columns and "_window_index" not in staged.columns
+
+
+def test_stale_check_mid_run_keeps_the_runs_windows(spark, tmp_path):
+    """A concurrent stale-run check made while a run loads its windows
+    allows each of them the run's total estimate: 40 minutes in, past
+    one window's 25-minute bound, all four windows are still valid.
+    Four windows claimed together go stale after 4 x 25 minutes."""
+    from datetime import timedelta, timezone
+
+    pipe = _run_pipe(spark, tmp_path, "late", granularity="6h", runs=4)
+    checks = []
+    audit = pipe._audit
+
+    def audit_after_a_late_check(*args):
+        if not checks:
+            later = datetime.now(timezone.utc) + timedelta(minutes=40)
+            checks.append(pipe.validate_in_progress(later))
+        return audit(*args)
+
+    pipe._audit = audit_after_a_late_check
+    result = pipe.run(DAY, DAY_END)
+    assert checks == [(4, 0)]
+    assert (result.processed, result.completed) == (4, 4)
+
+    rows = pipe.control.read().collect()
+    assert {r["source_to_stage_expected_duration_minutes"] for r in rows} == {15}
+    pipe.control.claim([r["unique_source_id"] for r in rows])
+    claimed = datetime.now(timezone.utc)
+    assert pipe.validate_in_progress(claimed + timedelta(minutes=99)) == (4, 0)
+    assert pipe.validate_in_progress(claimed + timedelta(minutes=101)) == (0, 4)
+
+
 def test_run_stages_only_its_own_non_adjacent_windows(spark, tmp_path):
     """Pending windows with completed ones between them, two of them
-    empty, are staged by one run: each stage directory holds exactly
-    the source rows of its own hour (checked with DuckDB), the skipped
-    windows get no stage directory, and every run window completes."""
+    empty, are staged by one run in one Spark job (the empty windows'
+    files are written on the driver): each stage directory holds
+    exactly the source rows of its own hour (checked with DuckDB), the
+    skipped windows get no stage directory, and every run window
+    completes."""
     import duckdb
     from datetime import timedelta
 
@@ -466,8 +531,10 @@ def test_run_stages_only_its_own_non_adjacent_windows(spark, tmp_path):
         [sid for h, sid in by_hour.items() if h not in run_hours],
         {"pipeline_status": "completed"},
     )
-    result = pipe.run(DAY, DAY_END)
-    assert (result.processed, result.completed) == (5, 5)
+    pipe.source.extract(DAY, DAY_END)  # resolve the source schema
+    results = []
+    assert _spark_jobs(spark, lambda: results.append(pipe.run(DAY, DAY_END))) == 1
+    assert (results[0].processed, results[0].completed) == (5, 5)
 
     con = duckdb.connect()
     events = f"read_parquet('{SF_DIR}/events.parquet')"

@@ -456,7 +456,8 @@ def test_parquet_sink_load_windows_writes_each_window(spark, tables, tmp_path):
     window's directory holds exactly its rows in files of at most
     ``max_records_per_file`` rows, with the frame's columns and not the
     tag, and a ``_SUCCESS`` file; it replaces what the directory held;
-    an empty window gets Spark's empty file; no temp directory is left."""
+    an empty window gets an empty file with the frame's columns; no temp
+    directory is left."""
     import os
     from datetime import datetime, timedelta
 
@@ -492,6 +493,7 @@ def test_parquet_sink_load_windows_writes_each_window(spark, tables, tmp_path):
             assert meta.num_rows <= 2
             assert meta.schema.to_arrow_schema().names == ev.columns
     assert sink.count(*bounds[1]) == 0 and sink.exists(*bounds[1])
+    assert spark.read.parquet(sink._window_path(bounds[1][0])).schema == ev.schema
 
 
 def test_dynamic_partition_overwrite_replaces_only_touched(

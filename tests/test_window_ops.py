@@ -145,6 +145,26 @@ def test_select_pending_order():
     assert select_pending(tie, limit=2)["id"].to_pylist() == ["r3", "r2"]
 
 
+def test_select_pending_retries_failed_windows_under_the_limit():
+    """A ``failed`` window is selected again, in W5 order with the
+    pending ones, until it has been retried ``FAILED_RETRY_LIMIT``
+    times."""
+    from data_pipeline_001_spark.plans.control_table import FAILED_RETRY_LIMIT
+
+    start = datetime(2024, 1, 1, 3)
+    rows = pa.table(
+        {
+            "id": ["p", "f1", "f2", "f3", "c"],
+            "pipeline_status": ["pending", "failed", "failed", "failed", "completed"],
+            "source_query_window_start_time": pa.array([start] * 5, pa.timestamp("us")),
+            "pipeline_retry_count": pa.array([0, 1, 2, 3, 0], pa.int32()),
+            "pipeline_priority": [1.0] * 5,
+        }
+    )
+    assert FAILED_RETRY_LIMIT == 3
+    assert select_pending(rows, limit=9)["id"].to_pylist() == ["f2", "f1", "p"]
+
+
 def test_approx_quartiles_agree_with_exact_ntile(spark):
     """The 2-pass approx-percentile quartile path must agree with exact
     global NTILE on nearly every row (disagreement only at boundary
