@@ -30,8 +30,9 @@ def main(argv: list[str] | None = None) -> int:
         "--mode",
         choices=["loop", "batch"],
         default="loop",
-        help="loop = per-window stages (reference semantics); "
-        "batch = one-job-for-all-windows scale path",
+        help="loop = one DAG run: up to max_pipeline_runs pending windows "
+        "past the safe boundary; batch = the same run over every pending "
+        "window of the plan, printed as a per-window audit summary",
     )
     args = ap.parse_args(argv)
 
@@ -75,12 +76,16 @@ def main(argv: list[str] | None = None) -> int:
     if args.mode == "batch":
         audit = pipe.run_batch(start, end)
         rows = audit.collect()
+        # a window that did not complete has null counts
         summary = {
             "mode": "batch",
             "windows": len(rows),
-            "matched": sum(r["source_count"] == r["target_count"] for r in rows),
-            "source_rows": sum(r["source_count"] for r in rows),
-            "target_rows": sum(r["target_count"] for r in rows),
+            "matched": sum(
+                r["source_count"] is not None and r["source_count"] == r["target_count"]
+                for r in rows
+            ),
+            "source_rows": sum(r["source_count"] or 0 for r in rows),
+            "target_rows": sum(r["target_count"] or 0 for r in rows),
         }
     else:
         result = pipe.run(start, end)

@@ -212,8 +212,9 @@ def window_spine(
     generate_time_windows DROPS the incomplete final window
     (time_utils.py:207 ``if next_time > end_limit: break``), leaving
     [last_full_end, end) unplanned. Here the default CLAMPS the final
-    window to ``end`` so the spine covers the full range — run_batch's
-    "every extracted row has a control row" invariant depends on it.
+    window to ``end`` so the spine covers the full range: every source
+    row of a plan falls in a planned window, so a run over the plan's
+    windows (``run_batch``) stages all of them.
     Pass ``drop_partial_trailing=True`` for strict reference parity.
     """
     minutes = parse_granularity_minutes(granularity)

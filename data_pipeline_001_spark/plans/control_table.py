@@ -23,9 +23,9 @@ driver: its planners (populate's anti-join, gap detection W1,
 duplicate resolution W3, the stale-run check, pending selection W5)
 filter ``rows()`` with ``pyarrow.compute``, ``append_records``
 computes the F9 md5 ids with ``hashlib``, and every state transition
-(claim, stage completion, failure, reset, delete, and the batch path's
-``merge_audit_results``) is a column rewrite keyed on
-``unique_source_id``. ``update_where`` is the keyed rewrite that claim,
+(claim, stage completion, failure, reset, delete and
+``merge_audit_results``, which the pipeline does not call) is a column
+rewrite keyed on ``unique_source_id``. ``update_where`` is the keyed rewrite that claim,
 stage completion and failure share: one rewrite for a list of ids,
 with a value per id where one is given, so a run claims and stages all
 of its windows in one rewrite each. None of them starts a Spark job.
@@ -497,8 +497,9 @@ class ControlTable:
 
     def merge_audit_results(self, audit: pa.Table) -> None:
         """Columnar MERGE of per-window batch results — ONE overwrite
-        for N windows instead of N row updates (the batch-path upgrade
-        of M1+M2+A5; the reference does this row-at-a-time over
+        for N windows instead of N row updates (M1+M2+A5 for many
+        windows at once; ``WindowPipeline`` audits each window through
+        ``update_where`` instead; the reference does this row-at-a-time over
         Snowflake, main_pipeline_orchestrator.py:302-404).
 
         ``audit`` columns: unique_source_id string, source_count long,

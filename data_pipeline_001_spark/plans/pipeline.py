@@ -31,16 +31,12 @@ and write of a warm hourly window, on 4 cores) — then the audit and
 its R3 envelope run, two control rewrites per window. A ten-window run
 rewrites the control table 23 times. Every read and write of the
 control table — planning (steps 0-4), gap and duplicate repair, the
-state transitions, the SPC gate's XmR points and the batch path's
-merge — runs on the driver through Arrow. A Parquet ``FileSource``
-counts the window on the driver with ``pyarrow``, and the audit counts
-the target from its Parquet footers, both with no job. At very large
-window counts ``run_batch`` runs the same stages for the whole plan in
-four jobs: the source's schema read, one ``load_all`` write of every
-window (tagged by ``extract_all_windows``), and one grouped count of
-the rows written (a shuffle-map and a result job); each planned
-window's target count is the same footer count, and the merge keys on
-``unique_source_id`` like every other transition.
+state transitions and the SPC gate's XmR points — runs on the driver
+through Arrow. A Parquet ``FileSource`` counts the window on the
+driver with ``pyarrow``, and the audit counts the target from its
+Parquet footers, both with no job. ``run_batch`` is the same run over
+every window of a plan: no ``LIMIT`` and no safe boundary, the same
+claim, stage write, per-window audit and R3 envelope.
 """
 
 from __future__ import annotations
@@ -741,13 +737,20 @@ class WindowPipeline:
         (``select_pending``) and runs it again from discovery."""
         result = RunResult()
         self.populate(plan_start, plan_end)
-        valid, reset = self.validate_in_progress(now)
-        result.reset = reset
+        valid, result.reset = self.validate_in_progress(now)
         if valid:
             result.exited_for_concurrency = True
             return result
-        staged, failed = self._stage_windows(self.pending_records(now))
-        result.processed = result.failed = failed
+        return self._run_windows(self.pending_records(now), result)
+
+    def _run_windows(self, records: list, result: RunResult) -> RunResult:
+        """Step 5 for the selected windows ``records``, counted into
+        ``result``: stage them together (``_stage_windows``: one claim,
+        one stage write), then stages 3-4 for each staged window
+        through ``run_window``, in the order of ``records``."""
+        staged, failed = self._stage_windows(records)
+        result.processed += failed
+        result.failed += failed
         for record in staged:
             status = self.run_window(record)
             result.processed += 1
@@ -759,138 +762,45 @@ class WindowPipeline:
                 result.reset += 1
         return result
 
-    # ------------------------------------------------------------------ #
-    # scale path: all windows in ONE job (no driver loop)
-    # ------------------------------------------------------------------ #
-
-    def extract_all_windows(self, start: datetime, end: datetime) -> DataFrame:
-        """The 100 TB shape of stage 2: one distributed job that tags
-        every source row with its window — replacing the per-window
-        driver loop when window count is large.
-
-        The floor is anchored at ``start`` (floor((ts-start)/gran)·gran
-        + start), matching the start-aligned spine populate() plans —
-        an epoch-aligned floor would, whenever ``start`` is
-        off-boundary, write every row into partitions no control row
-        names, and run_batch's per-window counts (source rows by
-        ``window_ts``, target rows by the window's partition) would
-        complete every planned window as 0 = 0."""
-        df = self.source.extract(start, end)
-        ts = F.col(getattr(self.source, "ts_col", "ts"))
-        gran_s = time_fns.parse_granularity_minutes(self.config.granularity) * 60
-        # anchor as a Column so ts and start share the session timezone
-        t0 = F.unix_timestamp(F.lit(start))
-        return (
-            df.withColumn(
-                "window_ts",
-                F.timestamp_seconds(
-                    (F.floor((F.unix_timestamp(ts) - t0) / gran_s) * gran_s + t0).cast(
-                        "long"
-                    )
-                ),
-            )
-            .withColumn("window_day", F.to_date("window_ts"))
-            .withColumn("window_start", F.date_format("window_ts", "HH-mm"))
-        )
-
     def run_batch(self, plan_start: datetime, plan_end: datetime) -> DataFrame:
-        """Whole-plan batch execution — N windows in a fixed number of
-        Spark jobs, where the per-window loop launches one per window:
-        four for a day of 6 h windows with a fresh source (the source's
-        schema read, the one ``load_all`` write, and the grouped count
-        of the rows it wrote, whose shuffle-map and result stages run
-        as two jobs). The control table is planned, merged and checked
-        on the driver, and each window's target count is the sink's
-        ``count``, as in ``run_window``'s audit. Requires the target
-        sink to support ``load_all`` (DayPartitionedTableSink).
+        """``run`` over every window of the plan ``[plan_start, plan_end)``:
+        it reaps stale work and exits while valid ``in_progress`` work
+        exists (R5), plans the windows, then runs every planned window
+        that ``select_pending`` takes (pending, or failed under its retry
+        limit), with no ``LIMIT`` and no safe boundary, through the same
+        claim, stage write, and per-window load, audit and R3 envelope.
+        Completed windows are not run again. A naive plan bound is a wall
+        time in the session time zone, as ``populate`` reads it.
 
-        A naive plan bound is a wall time in the session time zone, as
-        ``populate`` reads it. Like ``run``, it first reaps stale
-        ``in_progress`` rows and, while valid ones exist (another run
-        holds windows of this pipeline), plans and loads nothing and
-        returns an empty audit frame (R5).
-
-        Audits this pipeline's control rows in the plan and returns
-        their audit DataFrame (window_start, source_count,
-        target_count) as FIRST observed; a window with no source rows
-        audits 0 = 0. Windows whose initial audit mismatched then run
-        the R3 adaptive-retry envelope, so the control table holds the
-        final per-window outcome (completed, or cleaned + reset).
-        """
+        Returns the plan's audit frame (window_start, source_count,
+        target_count), read from its control rows after the run: a
+        window with no source rows audits 0 = 0, and a window that did
+        not complete has null counts (M4 clears them). While another run
+        holds windows of this pipeline, the frame is empty and nothing
+        is planned or loaded."""
         audit_schema = "window_start timestamp, source_count long, target_count long"
-        # R5, as in ``run``: no batch while valid in_progress work exists
         valid, _ = self.validate_in_progress()
         if valid:
             return self.spark.createDataFrame([], audit_schema)
         tz = time_fns.session_tzinfo(self.spark)
-        # F.lit would read a naive bound as the process's local time
+        # utc_naive would read a naive bound as the process's local time
         plan_start, plan_end = (
             t.astimezone(tz) if t.tzinfo else t.replace(tzinfo=tz)
             for t in (plan_start, plan_end)
         )
         self.populate(plan_start, plan_end)
-        tagged = self.extract_all_windows(plan_start, plan_end)
-        # one write for every window partition (dynamic overwrite keeps
-        # re-runs idempotent per window)
-        self.target_sink.load_all(tagged)
-        # A4/A5 for the whole plan: one grouped count of the rows the
-        # write took, against each planned window's target count
-        source_counts = dict(tagged.groupBy("window_ts").count().collect())
         lo, hi = (pa.scalar(utc_naive(t), pa.timestamp("us")) for t in (plan_start, plan_end))
-        windows = collected(
-            self._scoped_rows(
-                lambda t: pc.and_(
-                    pc.greater_equal(t["source_query_window_start_time"], lo),
-                    pc.less(t["source_query_window_start_time"], hi),
-                )
-            )
+
+        def in_plan(t: pa.Table) -> pa.ChunkedArray:
+            start = t["source_query_window_start_time"]
+            return pc.and_(pc.greater_equal(start, lo), pc.less(start, hi))
+
+        planned = self._scoped_rows(in_plan)
+        self._run_windows(collected(select_pending(planned, planned.num_rows)), RunResult())
+        return self.spark.createDataFrame(
+            [
+                (r["source_query_window_start_time"], r["source_count"], r["target_count"])
+                for r in collected(self._scoped_rows(in_plan))
+            ],
+            audit_schema,
         )
-        starts = [r["source_query_window_start_time"] for r in windows]
-        source = [source_counts.get(s, 0) for s in starts]
-        target = [
-            self.target_sink.count(s, r["source_query_window_end_time"])
-            for s, r in zip(starts, windows)
-        ]
-        self.control.merge_audit_results(
-            pa.table(
-                {
-                    "unique_source_id": pa.array(
-                        [r["unique_source_id"] for r in windows], pa.string()
-                    ),
-                    "source_count": pa.array(source, pa.int64()),
-                    "target_count": pa.array(target, pa.int64()),
-                }
-            )
-        )
-        # R3 on the batch path: the columnar merge above records the
-        # FIRST observation; windows it left mismatched (async sinks
-        # may still be landing rows) get the same adaptive retry
-        # envelope as the per-window loop — phase-1 tiered recount,
-        # phase-2 improvement-driven waits, exhaustion → clean+reset.
-        # Bounded driver work: one row per MISMATCHED window only,
-        # each recount the sink's count of one window.
-        mismatched = self._scoped_rows(
-            lambda t: pc.and_(
-                pc.and_(
-                    pc.equal(t["pipeline_status"], "pending"),
-                    pc.equal(t["count_match_status"], "not_matched"),
-                ),
-                pc.is_valid(t["source_count"]),
-            )
-        )
-        for row in collected(mismatched):
-            status = self._audit(
-                row["unique_source_id"],
-                row["source_query_window_start_time"],
-                row["source_query_window_end_time"],
-                row["source_count"],
-                datetime.now(timezone.utc),
-            )
-            if status == "completed":
-                # the columnar write DID run the earlier stages; mirror
-                # the merge ok-path's stage bookkeeping for this row
-                self.control.update_where(
-                    [row["unique_source_id"]],
-                    {f"{s}_status": "completed" for s in STAGES},
-                )
-        return self.spark.createDataFrame(list(zip(starts, source, target)), audit_schema)

@@ -24,7 +24,9 @@
   2.1 ms against 229 ms for Spark's read and write, on 4 cores, and
   0.05 s against 4.0 s for a 5M-row window in five files.
   Window directories are named by the window's wall time in the
-  session time zone, the convention ``load_all`` partitions by.
+  session time zone: the window that starts at 2024-01-02 00:00 in the
+  session's zone is ``2024-01-02/00-00`` in the stage and
+  ``window_day=2024-01-02/window_start=00-00`` in the table.
 - ``MockAsyncSink``: wraps a sink and makes ``load`` lag behind
   (visible counts converge over successive ``count`` calls) to
   exercise the audit adaptive-retry semantics (R3) that exist in the
@@ -512,9 +514,9 @@ class DayPartitionedTableSink(Sink):
         self.ts_col = ts_col
 
     def _wall(self, start: datetime) -> datetime:
-        """The window's wall time in the session time zone, the one
-        ``load_all``'s partition columns carry (a naive ``start`` is
-        the process's local time, as Spark reads it)."""
+        """The window's wall time in the session time zone, which names
+        its partition (a naive ``start`` is the process's local time,
+        as Spark reads it)."""
         return start.astimezone(session_tzinfo(self.spark))
 
     def _with_partitions(self, df: DataFrame, start: datetime) -> DataFrame:
@@ -545,9 +547,10 @@ class DayPartitionedTableSink(Sink):
             super().load_files(path, schema, start, end)
 
     def load_all(self, df: DataFrame) -> None:
-        """One job for ALL windows: ``df`` already carries
-        window_day/window_start columns; dynamic overwrite replaces
-        exactly the partitions present in ``df``."""
+        """One job for every window of ``df``, which already carries
+        the window_day/window_start columns; dynamic overwrite replaces
+        exactly the partitions present in ``df``. The pipeline does not
+        call it: its target loads go through ``load_files``."""
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -586,8 +589,10 @@ class MockAsyncSink(Sink):
     Each ``count()`` of a loaded window reveals another
     ``1/reveal_steps`` of its rows, simulating Snowpipe's asynchronous
     load so the audit manager's recount/improvement-detection loop (R3)
-    has something real to converge on. ``run_window`` and ``run_batch``
-    both audit through ``count``, so both paths see the same lag.
+    has something real to converge on. A window's schedule starts at
+    zero when it is loaded (``load``, ``load_windows`` or
+    ``load_files``), and ``run_window``'s audit, which ``run`` and
+    ``run_batch`` share, sees the lag through ``count``.
     """
 
     def __init__(self, inner: Sink, reveal_steps: int = 3):
@@ -607,15 +612,6 @@ class MockAsyncSink(Sink):
     def load_files(self, path: str, schema, start: datetime, end: datetime) -> None:
         self.inner.load_files(path, schema, start, end)
         self._calls[start.isoformat()] = 0
-
-    def load_all(self, df: DataFrame) -> None:
-        """Batch-path load: delegate, then start every tagged window's
-        reveal schedule at zero (the driver-side collect is one row per
-        window and exists only in this test mock)."""
-        self.inner.load_all(df)
-        if "window_ts" in df.columns:
-            for r in df.select("window_ts").distinct().collect():
-                self._calls[r[0].isoformat()] = 0
 
     def exists(self, start: datetime, end: datetime) -> bool:
         return self.inner.exists(start, end)

@@ -10,6 +10,22 @@ SF_DIR = "/root/testdata/sf0.001"
 SF1_SOURCE = "/root/testdata/sf0.1"
 
 
+def spark_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return the number of Spark
+    jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pipeline-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pipeline job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from data_pipeline_001_spark.session import get_spark

@@ -301,8 +301,9 @@ def test_sink_paths_name_the_session_wall_time(spark, tmp_path):
     the stage and ``window_day=2024-01-02/window_start=00-00`` in the
     table, given as an instant or as the local time ``collect()``
     returns; the run's copy, the planned stage path and the audit's
-    recount of a ``load_all`` day agree. Under a New York session the
-    partition is the one ``load_all`` gives that instant."""
+    recount of a ``run_batch`` day agree. Under a New York session the
+    partition is the one Spark's ``to_date``/``date_format`` give that
+    instant."""
     pipe = _pipe(spark, tmp_path, name="paths", target=DayPartitionedTableSink)
     stage, table = pipe.stage_sink, pipe.target_sink
     pipe.populate(DAY, DAY_END)

@@ -1,11 +1,12 @@
-"""Batch (one-job-for-all-windows) pipeline path: results equivalent
-to the per-window loop, control table fully merged in one pass,
-dynamic partition overwrite keeps re-runs idempotent."""
+"""``run_batch``: ``run()`` over every window of a plan, into the
+window-partitioned target table. Its control rows and target equal a
+``run()`` of the same day; a rerun of a completed plan does nothing."""
 
 from datetime import datetime
 
 import pyarrow as pa
 import pytest
+from conftest import spark_jobs
 
 pytestmark = pytest.mark.slow  # lane 2: see pytest.ini
 from pyspark.sql import functions as F
@@ -74,9 +75,14 @@ def test_run_batch_completes_windows_with_no_rows(batch_pipe):
         assert r["pipeline_status"] == "completed", r["source_query_window_start_time"]
 
 
-def test_run_batch_idempotent_rerun(batch_pipe):
+def test_run_batch_idempotent_rerun(batch_pipe, spark):
+    """A second ``run_batch`` over a completed plan selects no window,
+    as ``run()`` does, and launches no Spark job; its audit frame reads
+    the same counts from the control rows."""
     first = {r["window_start"]: r["target_count"] for r in batch_pipe.run_batch(DAY, DAY_END).collect()}
-    second = {r["window_start"]: r["target_count"] for r in batch_pipe.run_batch(DAY, DAY_END).collect()}
+    audits = []
+    assert spark_jobs(spark, lambda: audits.append(batch_pipe.run_batch(DAY, DAY_END))) == 0
+    second = {r["window_start"]: r["target_count"] for r in audits[0].collect()}
     assert first == second
     # control table still has exactly 8 rows (no duplicate planning)
     assert batch_pipe.control.read().count() == 8
@@ -116,7 +122,7 @@ def test_run_batch_with_unaligned_plan_start(spark, tmp_path):
     ids=["distinct_names", "same_name"],
 )
 def test_shared_control_table_pipelines_are_isolated(spark, tmp_path, names):
-    """Two pipelines over ONE control table: pipeline B's batch merge
+    """Two pipelines over ONE control table: pipeline B's batch run
     and populate must not complete, reset, or re-plan pipeline A's
     rows (the reference scopes every drive-table op by the source
     descriptor, pending_records_selector.py) — also when both share a
@@ -175,10 +181,10 @@ def test_merge_audit_results_dedupes_duplicate_windows(spark, tmp_path):
 
 def test_run_batch_async_sink_retries_to_match(spark, tmp_path):
     """R3 on the batch path: an async sink whose counts lag behind
-    (Snowpipe semantics) makes the initial columnar audit mismatch on
-    every window; the adaptive envelope recounts each mismatched
-    window until the lagging loads become visible, and every control
-    row ends completed/matched — no data was recleaned or re-run."""
+    (Snowpipe semantics) makes each window's initial audit mismatch;
+    the adaptive envelope recounts each window until the lagging load
+    becomes visible, and every control row ends completed/matched — no
+    data was recleaned or re-run."""
     source = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts")
     stage = PartitionedParquetSink(spark, str(tmp_path / "stage"))
     inner = DayPartitionedTableSink(spark, str(tmp_path / "target"))
@@ -219,13 +225,11 @@ def test_run_batch_audit_mismatch_cleans_and_resets(spark, tmp_path):
     every other window completes."""
 
     class LossyBatchSink(DayPartitionedTableSink):
-        def load_all(self, df):
-            lost = (
-                (F.col("window_day") == F.lit("2024-01-02").cast("date"))
-                & (F.col("window_start") == "00-00")
-                & (F.pmod(F.xxhash64(F.col("event_id")), F.lit(2)) == 0)
-            )
-            super().load_all(df.where(~lost))
+        def load_files(self, path, schema, start, end):
+            if self._wall(start).strftime("%Y-%m-%d %H-%M") != "2024-01-02 00-00":
+                return super().load_files(path, schema, start, end)
+            lost = F.pmod(F.xxhash64(F.col("event_id")), F.lit(2)) == 0
+            self.load(self.spark.read.schema(schema).parquet(path).where(~lost), start, end)
 
     source = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts")
     stage = PartitionedParquetSink(spark, str(tmp_path / "stage"))
@@ -313,3 +317,64 @@ def test_run_batch_exits_while_a_run_holds_windows(batch_pipe):
     assert rows() == before
     root = batch_pipe.target_sink.root
     assert not os.path.exists(root) or not os.listdir(root)
+
+
+def test_run_batch_equals_a_run_of_the_same_day(spark, tmp_path):
+    """A day of hourly windows through ``run_batch`` and through one
+    ``run()`` that takes every window, each with its own control table
+    and sinks, ends in the same control rows (statuses, counts, F12
+    estimates, which stage times are set) and the same target
+    partitions, counted with DuckDB."""
+    import duckdb
+
+    from data_pipeline_001_spark.plans.control_table import STAGES
+
+    def pipe(name):
+        return WindowPipeline(
+            spark,
+            PipelineConfig(pipeline_name=name, granularity="1h", max_pipeline_runs=24),
+            FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts"),
+            PartitionedParquetSink(spark, str(tmp_path / f"{name}_stage")),
+            DayPartitionedTableSink(spark, str(tmp_path / f"{name}_target")),
+            ControlTable(spark, str(tmp_path / f"{name}_control")),
+        )
+
+    day_end = datetime(2024, 1, 3)
+    batch, loop = pipe("batch"), pipe("loop")
+    batch.run_batch(DAY, day_end)
+    assert loop.run(DAY, day_end).processed == 24
+
+    cols = [
+        "pipeline_status", "count_match_status", "completed_stage_number",
+        "source_count", "target_count",
+        *(f"{s}_status" for s in STAGES),
+        *(f"{s}_expected_duration_minutes" for s in STAGES[1:]),
+    ]
+
+    def outcome(p):
+        return {
+            r["source_query_window_start_time"]: (
+                [r[c] for c in cols]
+                + [r[f"{s}_{t}_time"] is not None for s in STAGES for t in ("start", "end")]
+            )
+            for r in p.control.read().collect()
+        }
+
+    got, want = outcome(batch), outcome(loop)
+    assert len(got) == 24
+    assert got == want
+    assert {v[0] for v in got.values()} == {"completed"}
+    assert all(v[-8:] == [True] * 8 for v in got.values())
+
+    con = duckdb.connect()
+
+    def partitions(p):
+        return dict(
+            con.execute(
+                "SELECT window_day || ' ' || window_start, count(*) FROM read_parquet("
+                f"'{p.target_sink.root}/*/*/*.parquet', hive_partitioning = true) GROUP BY 1"
+            ).fetchall()
+        )
+
+    assert partitions(batch) == partitions(loop)
+    assert sum(partitions(batch).values()) == batch.source.count(DAY, day_end) > 0

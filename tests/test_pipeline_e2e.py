@@ -4,10 +4,10 @@ verify drive-table transitions + idempotence + backfill + stale reset
 + the mock-async audit retry (R3)."""
 
 import os
-import uuid
 from datetime import datetime
 
 import pytest
+from conftest import spark_jobs
 
 pytestmark = pytest.mark.slow  # lane 2: see pytest.ini
 from pyspark.sql import functions as F
@@ -326,20 +326,6 @@ def test_audit_mismatch_resets_pipeline(spark, tmp_path):
     assert not stage.exists(DAY, datetime(2024, 1, 2, 6))
 
 
-def _spark_jobs(spark, fn):
-    """Run ``fn`` under a fresh job group; return the number of Spark
-    jobs it launched."""
-    sc = spark.sparkContext
-    group = f"pipeline-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "pipeline job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_warm_window_launches_only_count_and_write_jobs(spark, tmp_path):
     """Once the first window has resolved the source schema, a window's
     only Spark job is the stage write: the Parquet source counts on the
@@ -356,11 +342,11 @@ def test_warm_window_launches_only_count_and_write_jobs(spark, tmp_path):
     assert pipe.run_window(first) == "completed"
     s, e = first["source_query_window_start_time"], first["source_query_window_end_time"]
 
-    assert _spark_jobs(spark, lambda: source.extract(s, e).schema) == 0
-    assert _spark_jobs(spark, lambda: stage.count(s, e)) == 0
-    assert _spark_jobs(spark, lambda: target.count(s, e)) == 0
-    assert _spark_jobs(spark, lambda: source.count(s, e)) == 0
-    assert _spark_jobs(spark, lambda: pipe.run_window(second)) == 1
+    assert spark_jobs(spark, lambda: source.extract(s, e).schema) == 0
+    assert spark_jobs(spark, lambda: stage.count(s, e)) == 0
+    assert spark_jobs(spark, lambda: target.count(s, e)) == 0
+    assert spark_jobs(spark, lambda: source.count(s, e)) == 0
+    assert spark_jobs(spark, lambda: pipe.run_window(second)) == 1
     r = [
         x
         for x in control.read().collect()
@@ -395,7 +381,7 @@ def test_warm_run_stages_ten_windows_in_one_spark_job(spark, tmp_path):
     pipe.populate(DAY, end)
     assert pipe.run_window(pipe.pending_records()[0]) == "completed"
     results = []
-    assert _spark_jobs(spark, lambda: results.append(pipe.run(DAY, end))) == 1
+    assert spark_jobs(spark, lambda: results.append(pipe.run(DAY, end))) == 1
     assert (results[0].processed, results[0].completed) == (10, 10)
     rows = pipe.control.read().collect()
     assert len(rows) == 11
@@ -411,7 +397,7 @@ def test_spc_gate_launches_no_spark_job(spark, tmp_path):
     pipe.populate(DAY, DAY_END)
     first, second = pipe.pending_records()[:2]
     assert pipe.run_window(first) == "completed"
-    assert _spark_jobs(spark, lambda: pipe.run_window(second)) == 1
+    assert spark_jobs(spark, lambda: pipe.run_window(second)) == 1
 
 
 def test_failed_stage_write_fails_every_window_of_the_run(spark, tmp_path):
@@ -448,11 +434,13 @@ def test_failed_stage_write_fails_every_window_of_the_run(spark, tmp_path):
         assert r["source_count"] == r["target_count"] > 0
 
 
-def test_run_stages_windows_of_a_source_whose_time_column_is_not_ts(spark, tmp_path):
+@pytest.mark.parametrize("method", ["run", "run_batch"])
+def test_run_stages_windows_of_a_source_whose_time_column_is_not_ts(spark, tmp_path, method):
     """A Source that names its time column as Elasticsearch does
-    (``@timestamp``) and has no ``ts_col`` stages a run through the
-    default ``extract_windows``, one ``extract`` per window, and every
-    window completes with its own rows."""
+    (``@timestamp``) and has no ``ts_col`` stages a run, or a
+    ``run_batch`` day, through the default ``extract_windows``, one
+    ``extract`` per window, and every window completes with its own
+    rows."""
     from data_pipeline_001_spark.sources.base import Source
     from data_pipeline_001_spark.sources.file_connectors import window_predicate
 
@@ -470,9 +458,9 @@ def test_run_stages_windows_of_a_source_whose_time_column_is_not_ts(spark, tmp_p
 
     pipe = _run_pipe(spark, tmp_path, "es_like", granularity="6h", runs=4)
     pipe.source = FrameSource(events.withColumnRenamed("ts", "@timestamp"))
-    result = pipe.run(DAY, DAY_END)
-    assert (result.processed, result.completed) == (4, 4)
+    getattr(pipe, method)(DAY, DAY_END)
     rows = pipe.control.read().collect()
+    assert len(rows) == 4
     for r in rows:
         assert (r["pipeline_status"], r["count_match_status"]) == ("completed", "matched")
     assert sum(r["target_count"] for r in rows) == events.count() > 0
@@ -533,7 +521,7 @@ def test_run_stages_only_its_own_non_adjacent_windows(spark, tmp_path):
     )
     pipe.source.extract(DAY, DAY_END)  # resolve the source schema
     results = []
-    assert _spark_jobs(spark, lambda: results.append(pipe.run(DAY, DAY_END))) == 1
+    assert spark_jobs(spark, lambda: results.append(pipe.run(DAY, DAY_END))) == 1
     assert (results[0].processed, results[0].completed) == (5, 5)
 
     con = duckdb.connect()
@@ -576,11 +564,11 @@ def test_planning_a_run_launches_no_spark_job(spark, tmp_path):
             (pipe.populate(start, end), pipe.validate_in_progress(), pipe.pending_records())
         )
 
-    assert _spark_jobs(spark, lambda: plan(DAY, datetime(2024, 1, 2, 12))) == 0
+    assert spark_jobs(spark, lambda: plan(DAY, datetime(2024, 1, 2, 12))) == 0
     inserted, validated, pending = runs[-1]
     assert (inserted, validated, len(pending)) == (4, (0, 0), 4)
     pipe.control.claim([pending[0]["unique_source_id"]])
-    assert _spark_jobs(spark, lambda: plan(DAY, DAY_END)) == 0
+    assert spark_jobs(spark, lambda: plan(DAY, DAY_END)) == 0
     inserted, validated, pending = runs[-1]
     assert (inserted, validated) == (4, (1, 0))
     assert [r["source_query_window_start_time"].hour for r in pending] == [3, 6, 9, 12]
@@ -597,7 +585,7 @@ def test_gap_and_duplicate_repair_launch_no_spark_job(pipe, spark):
     )
     pipe.control.delete_records([rows[2]["unique_source_id"]])
     filled = []
-    assert _spark_jobs(spark, lambda: filled.append(pipe.fill_gaps())) == 0
+    assert spark_jobs(spark, lambda: filled.append(pipe.fill_gaps())) == 0
     assert filled == [1]
     pipe.control.append_records(
         [
@@ -609,17 +597,17 @@ def test_gap_and_duplicate_repair_launch_no_spark_job(pipe, spark):
         ]
     )
     removed = []
-    assert _spark_jobs(spark, lambda: removed.append(pipe.resolve_duplicate_windows())) == 0
+    assert spark_jobs(spark, lambda: removed.append(pipe.resolve_duplicate_windows())) == 0
     assert removed == [1]
     assert pipe.control.read().count() == 4
 
 
 def test_run_batch_spark_jobs(spark, tmp_path):
-    """A day of run_batch launches four Spark jobs: the source's schema
-    read, the target's ``load_all`` write, and the grouped count of the
-    rows written (its shuffle-map and result stages run as two jobs).
-    Each window's target count sums its partition's Parquet footers, and
-    the control table is read and rewritten on the driver."""
+    """A day of run_batch launches two Spark jobs: the fresh source's
+    schema read and the run's one stage write. The source counts each
+    window on the driver, the target copies the staged files, each
+    window's target count sums its partition's Parquet footers, and the
+    control table is read and rewritten on the driver."""
     pipe = WindowPipeline(
         spark,
         PipelineConfig(pipeline_name="batch_jobs", granularity="6h"),
@@ -628,7 +616,7 @@ def test_run_batch_spark_jobs(spark, tmp_path):
         DayPartitionedTableSink(spark, str(tmp_path / "target")),
         ControlTable(spark, str(tmp_path / "control")),
     )
-    assert _spark_jobs(spark, lambda: pipe.run_batch(DAY, DAY_END)) == 4
+    assert spark_jobs(spark, lambda: pipe.run_batch(DAY, DAY_END)) == 2
     rows = pipe.control.read().collect()
     assert len(rows) == 4
     assert {(r["pipeline_status"], r["count_match_status"]) for r in rows} == {
@@ -637,10 +625,11 @@ def test_run_batch_spark_jobs(spark, tmp_path):
 
 
 def test_table_mixes_copied_windows_and_load_all_days(spark, tmp_path):
-    """Windows ``run_window`` loads as file copies and a day ``run_batch``
-    writes with ``load_all`` share one ``DayPartitionedTableSink``:
-    ``read_all()`` shows ``window_day``/``window_start`` for both, and
-    each window's partition holds its source rows."""
+    """A day ``run_batch`` loads and the next day's windows ``run()``
+    loads share one ``DayPartitionedTableSink``, both as file copies of
+    the staged windows: ``read_all()`` shows ``window_day``/
+    ``window_start`` for both days, and each window's partition holds
+    its source rows."""
     from datetime import timedelta
 
     source = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts")
