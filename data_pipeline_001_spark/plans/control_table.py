@@ -28,7 +28,9 @@ computes the F9 md5 ids with ``hashlib``, and every state transition
 rewrite keyed on ``unique_source_id``. ``update_where`` is the keyed rewrite that claim,
 stage completion and failure share: one rewrite for a list of ids,
 with a value per id where one is given, so a run claims and stages all
-of its windows in one rewrite each. None of them starts a Spark job.
+of its windows in one rewrite each, and a stage's transition can carry
+an earlier stage's ``stage_completion``, so a window's audit records
+its target load in the same rewrite. None of them starts a Spark job.
 ``read()`` hands Spark a DataFrame for ``audit_spc_flags`` and outside
 readers.
 
@@ -49,10 +51,12 @@ writer that holds one batch at a time (peak driver Python RSS at most
 on 4 cores: ~8 ms at 10 rows, ~0.23 s at 100k, 2.0 s at 1M, 6.0 s at
 3M and 18.5 s at 9M rows (the Spark read-modify-write it replaced:
 ~0.58 s at 10 rows, 2.7 s, 8.7 s, 15.7 s and 40 s, with a 3-5 GB
-driver JVM from 1M rows up). At ~2 s per million rows and 2.3
-rewrites per window (23 for a ten-window run), one table keeps pace
-with 1000 hourly pipelines only up to about a million rows; past that,
-use one table per pipeline or per period.
+driver JVM from 1M rows up). A run rewrites the table 3 + N times
+for N windows (13 for a ten-window run). At ~2 s per million rows, one
+table shared by 1000 hourly pipelines keeps pace up to about 1.4M rows
+when each run takes ten windows (1.3 rewrites per window), and up to
+about 450k rows when each takes one (4 rewrites); past that, use one
+table per pipeline or per period.
 """
 
 from __future__ import annotations
@@ -169,6 +173,26 @@ def _utcnow() -> datetime:
     """The one clock of every transition time: now, as an aware UTC
     instant (``_assign`` stores it as naive UTC)."""
     return datetime.now(timezone.utc)
+
+
+def stage_completion(stage: str, started: datetime, ended: datetime) -> dict[str, object]:
+    """The assignments that record ``stage`` completed from ``started``
+    to ``ended`` (a naive time is local time, as Spark reads it); the
+    last stage completes the pipeline too."""
+    started, ended = started.astimezone(timezone.utc), ended.astimezone(timezone.utc)
+    assign: dict[str, object] = {
+        f"{stage}_status": "completed",
+        f"{stage}_start_time": started,
+        f"{stage}_end_time": ended,
+        f"{stage}_actual_duration_minutes": max(
+            int((ended - started).total_seconds() // 60), 0
+        ),
+        "completed_stage_number": STAGE_NUMBER[stage],
+    }
+    if stage == STAGES[-1]:
+        assign["pipeline_status"] = "completed"
+        assign["pipeline_end_time"] = ended
+    return assign
 
 
 def default_record(
@@ -397,32 +421,27 @@ class ControlTable:
     ) -> None:
         """M2: single-update stage completion
         (source_discovery_manager.py:111-152 et al.) of every window of
-        ``ids``; an ``extra`` value may be a list of one value per id.
-        A naive ``started`` is local time, as Spark reads it."""
-        now = _utcnow()
-        started = started.astimezone(timezone.utc)
-        assign: dict[str, object] = {
-            f"{stage}_status": "completed",
-            f"{stage}_start_time": started,
-            f"{stage}_end_time": now,
-            f"{stage}_actual_duration_minutes": max(
-                int((now - started).total_seconds() // 60), 0
-            ),
-            "completed_stage_number": STAGE_NUMBER[stage],
-        }
-        if stage == STAGES[-1]:
-            assign["pipeline_status"] = "completed"
-            assign["pipeline_end_time"] = now
-        assign.update(extra or {})
-        self.update_where(ids, assign)
+        ``ids``, ending now. ``extra`` sets other columns in the same
+        rewrite, such as an earlier stage's ``stage_completion``; a
+        value may be a list of one value per id, and ``stage``'s own
+        columns win over it."""
+        self.update_where(ids, {**(extra or {}), **stage_completion(stage, started, _utcnow())})
 
-    def fail_stage(self, ids: list[str], stage: str, error: str) -> None:
+    def fail_stage(
+        self,
+        ids: list[str],
+        stage: str,
+        error: str,
+        extra: dict[str, object] | None = None,
+    ) -> None:
         """M3: fail/reset one stage, retry_count+1
         (source_discovery_manager.py:154-175; record_status_updater.py:102-123),
-        for every window of ``ids``."""
+        for every window of ``ids``. ``extra`` sets other columns in the
+        same rewrite, as in ``complete_stage``."""
         self.update_where(
             ids,
             {
+                **(extra or {}),
                 f"{stage}_status": "pending",
                 f"{stage}_start_time": None,
                 f"{stage}_end_time": None,

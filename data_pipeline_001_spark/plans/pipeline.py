@@ -28,8 +28,10 @@ file level (``Sink.load_files``), as the reference's Snowpipe copies
 the staged S3 files into the target table — the Parquet sinks copy the
 files into place with no job (2.1 ms against 229 ms for Spark's read
 and write of a warm hourly window, on 4 cores) — then the audit and
-its R3 envelope run, two control rewrites per window. A ten-window run
-rewrites the control table 23 times. Every read and write of the
+its R3 envelope run. The audit's last transition records the load's
+times too, so a window whose audit matches at once costs one control
+rewrite, and a ten-window run rewrites the control table 13 times
+(3 + N for N windows). Every read and write of the
 control table — planning (steps 0-4), gap and duplicate repair, the
 state transitions and the SPC gate's XmR points — runs on the driver
 through Arrow. A Parquet ``FileSource`` counts the window on the
@@ -62,6 +64,7 @@ from data_pipeline_001_spark.plans.control_table import (
     pct_difference,
     select_pending,
     spark_local,
+    stage_completion,
     utc_naive,
 )
 from data_pipeline_001_spark.sources.base import WINDOW_INDEX, Sink, Source
@@ -481,7 +484,9 @@ class WindowPipeline:
         """Stages 3-4 for one control row that the latest stage write
         staged (``run`` passes each window's refreshed row): the target
         loads the staged files, then the audit, its R3 envelope and the
-        optional SPC gate. Any other row, such as a pending one, is
+        optional SPC gate. The load's times are written by the audit's
+        last transition, so a window whose audit matches at once costs
+        one control rewrite. Any other row, such as a pending one, is
         first staged as a run of one window, through the same
         ``_stage_windows`` (one Spark job). Returns the final status:
         'completed' | 'failed' | 'reset'."""
@@ -495,7 +500,7 @@ class WindowPipeline:
         start = record["source_query_window_start_time"]
         end = record["source_query_window_end_time"]
 
-        stage = "stage_to_target"
+        loaded = None
         try:
             # Stage 3 — stage → target (S6/S7/S5): the target loads
             # the staged window's files (one directory, written with
@@ -509,12 +514,10 @@ class WindowPipeline:
                 start,
                 end,
             )
-            self.control.complete_stage([sid], "stage_to_target", t0)
+            loaded = stage_completion("stage_to_target", t0, datetime.now(timezone.utc))
 
             # Stage 4 — audit (A4 recount, A5 reconciliation, R3 retry)
-            stage = "audit"
-            t0 = datetime.now(timezone.utc)
-            status = self._audit(sid, start, end, record["source_count"], t0)
+            status = self._audit(sid, start, end, record["source_count"], loaded)
             # Stage 4b (optional) — post-audit SPC gate: the window's
             # audited count joins the pipeline's metrics series (the
             # control table itself) and is checked against the XmR
@@ -539,8 +542,10 @@ class WindowPipeline:
             return status
         except Exception as exc:  # noqa: BLE001 — reference records any stage error
             # fail the stage that actually raised (reference keeps other
-            # stages' state untouched: record_status_updater.py:102-123)
-            self.control.fail_stage([sid], stage, str(exc))
+            # stages' state untouched: record_status_updater.py:102-123);
+            # an audit error records the completed load with it
+            stage = "stage_to_target" if loaded is None else "audit"
+            self.control.fail_stage([sid], stage, str(exc), extra=loaded)
             return "failed"
 
     def audit_spc_flags(self) -> DataFrame:
@@ -615,9 +620,13 @@ class WindowPipeline:
         if seconds > 0 and self.config.audit_wait_scale > 0:
             time.sleep(seconds * self.config.audit_wait_scale)
 
-    def _audit(self, sid, start, end, src_count, t0) -> str:
+    def _audit(self, sid, start, end, src_count, loaded: dict) -> str:
         """A5 + R3: the reference's full two-phase adaptive envelope
-        (audit_manager.py:123-383):
+        (audit_manager.py:123-383), after the target load whose
+        ``stage_completion`` is ``loaded``: ``done`` writes it with the
+        audit's result, in one rewrite. A first mismatch writes it
+        before the first wait, so a window that waits for a lagging sink
+        shows as loaded.
 
         Phase 1 — initial count; mismatch → tiered base attempts from
         |pct| (2–6), one base wait, recount. Match → done; no
@@ -637,6 +646,7 @@ class WindowPipeline:
 
         tol = self.config.tolerance_pct
         base_wait = self.config.audit_base_wait_s
+        t0 = datetime.now(timezone.utc)
 
         def done(tgt: int) -> str:
             self.control.complete_stage(
@@ -644,6 +654,7 @@ class WindowPipeline:
                 "audit",
                 t0,
                 extra={
+                    **loaded,
                     "target_count": tgt,
                     "count_difference": tgt - src_count,
                     "count_difference_percentage": pct_difference(src_count, tgt),
@@ -675,6 +686,7 @@ class WindowPipeline:
             initial_pct=f"{initial_pct:.2f}%",
             base_retry_attempts=base_attempts,
         )
+        self.control.update_where([sid], loaded)
         self._sleep(base_wait)
         first = self.target_sink.count(start, end)
         if abs(pct_difference(src_count, first)) <= tol:

@@ -20,7 +20,8 @@ S2 and S5 also have a run form. *extract_windows* gives a run's
 windows as one frame whose rows carry ``WINDOW_INDEX``, the position
 of their window in the run; by default it unions one *extract* per
 window, so a source keeps its own per-window query, while
-``FileSource`` reads the run's span once. *load_windows* is the stage
+``FileSource`` reads its files once, filtered and tagged by SQL
+strings of the windows' bounds. *load_windows* is the stage
 write of that frame; by default it calls *load* once per window, while
 ``PartitionedParquetSink`` writes every window in one Spark job.
 """

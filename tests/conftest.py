@@ -26,6 +26,23 @@ def spark_jobs(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@pytest.fixture()
+def control_rewrites(monkeypatch):
+    """A list that gets one entry (the table's path) per control-table
+    rewrite (``ControlTable._overwrite``) while the test runs."""
+    from data_pipeline_001_spark.plans.control_table import ControlTable
+
+    calls = []
+    overwrite = ControlTable._overwrite
+
+    def counted(self, tables):
+        calls.append(self.path)
+        return overwrite(self, tables)
+
+    monkeypatch.setattr(ControlTable, "_overwrite", counted)
+    return calls
+
+
 @pytest.fixture(scope="session")
 def spark():
     from data_pipeline_001_spark.session import get_spark

@@ -30,6 +30,7 @@ from data_pipeline_001_spark.sources.file_connectors import (
     DayPartitionedTableSink,
     FileSource,
     PartitionedParquetSink,
+    _lit_micros,
     window_dir_name,
     window_predicate,
 )
@@ -434,6 +435,19 @@ def test_driver_count_nanoseconds(spark, tmp_path):
     _assert_driver_counts(FileSource(spark, os.path.dirname(path)))
 
 
+def test_nanosecond_column_named_like_elasticsearch_extracts(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column whose name is no SQL identifier
+    (``@timestamp``) is read, extracted and counted like ``ts``."""
+    root = tmp_path / "at"
+    root.mkdir()
+    values = pa.array([v * 1000 for v in _events()], pa.timestamp("ns"))
+    pq.write_table(pa.table({"@timestamp": values}), str(root / "part-0.parquet"))
+    src = FileSource(spark, str(root), ts_col="@timestamp")
+    _assert_driver_counts(src)
+    start, end = WINDOWS[1]
+    assert src.extract(start, end).count() == src.count(start, end) > 0
+
+
 @pytest.mark.parametrize("unit,tz", [("us", "UTC"), ("ms", "America/New_York"), ("ns", "UTC")])
 def test_driver_count_time_zone_aware_column(spark, tmp_path, unit, tz):
     values = pa.array([v * 1000 for v in _events()], pa.timestamp("ns", tz=tz))
@@ -526,6 +540,56 @@ def test_time_zone_free_column_read_as_ntz_counts_in_spark(spark, tmp_path):
         assert src._driver_count(start, end) is None  # the resolved schema says NTZ
     finally:
         spark.conf.set(key, previous)
+
+
+@pytest.mark.parametrize("aware", [False, True], ids=["naive", "aware"])
+@pytest.mark.parametrize("picked", [slice(None), slice(None, None, 2)], ids=["adjacent", "apart"])
+def test_extract_windows_tags_equal_a_union_of_extracts(spark, tmp_path, aware, picked):
+    """``extract_windows``' one filter and ``CASE`` tag give each window
+    the rows its own ``extract`` gives, rows on and a microsecond either
+    side of every bound included."""
+    from functools import reduce
+
+    from data_pipeline_001_spark.sources.base import WINDOW_INDEX
+
+    path = str(tmp_path / "tags" / "part-0.parquet")
+    _write(path, pa.array(_events(), pa.timestamp("us")), row_group_size=64)
+    src = FileSource(spark, os.path.dirname(path))
+    bounds = WINDOWS[picked]
+    if aware:
+        ny = timezone(timedelta(hours=-5))
+        bounds = [(s.astimezone(timezone.utc), e.astimezone(ny)) for s, e in bounds]
+    union = reduce(
+        lambda a, b: a.unionAll(b),
+        [src.extract(s, e).withColumn(WINDOW_INDEX, F.lit(i)) for i, (s, e) in enumerate(bounds)],
+    )
+
+    def tagged(df):
+        return sorted(tuple(r) for r in df.select("ts", WINDOW_INDEX).collect())
+
+    got = tagged(src.extract_windows(bounds))
+    assert got == tagged(union)
+    assert {i for _, i in got} == set(range(len(bounds)))
+
+
+def test_window_bounds_are_the_instants_lit_gives(spark):
+    """``_lit_micros`` is the instant ``F.lit`` gives a naive (local
+    time, a DST change included) or an aware datetime, and the SQL
+    predicate quotes its column name."""
+    values = [
+        datetime(2024, 1, 2, 6, 0, 0, 1),
+        datetime(2024, 3, 10, 2, 30),
+        datetime(2024, 11, 3, 1, 30, 0, 999999),
+        datetime(1969, 12, 31, 23, 59, 59, 500000),
+        datetime(2024, 1, 2, 6, tzinfo=timezone.utc),
+        datetime(2024, 7, 1, 12, 0, 0, 250, tzinfo=timezone(timedelta(hours=5, minutes=30))),
+    ]
+    row = spark.range(1).select(*(F.unix_micros(F.lit(v)) for v in values)).first()
+    assert [_lit_micros(v) for v in values] == list(row)
+
+    start, end = WINDOWS[1]
+    df = spark.createDataFrame([(start - timedelta(microseconds=1),), (start,), (end,)], ["t`s"])
+    assert df.where(window_predicate("t`s", start, end)).count() == 1
 
 
 @pytest.mark.slow

@@ -378,3 +378,24 @@ def test_run_batch_equals_a_run_of_the_same_day(spark, tmp_path):
 
     assert partitions(batch) == partitions(loop)
     assert sum(partitions(batch).values()) == batch.source.count(DAY, day_end) > 0
+
+
+def test_run_batch_day_rewrites_the_control_table_once_per_window(
+    spark, tmp_path, control_rewrites
+):
+    """A ``run_batch`` day of N = 24 hourly windows appends its plan,
+    then rewrites the control table 3 + N times: the claim, the
+    discovery counts and the stage completion once each, then each
+    window's audit, which also records its load."""
+    pipe = WindowPipeline(
+        spark,
+        PipelineConfig(pipeline_name="rewrites", granularity="1h"),
+        FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts"),
+        PartitionedParquetSink(spark, str(tmp_path / "stage")),
+        DayPartitionedTableSink(spark, str(tmp_path / "target")),
+        ControlTable(spark, str(tmp_path / "control")),
+    )
+    audit = pipe.run_batch(DAY, datetime(2024, 1, 3)).collect()
+    assert len(audit) == 24
+    assert all(r["source_count"] == r["target_count"] for r in audit)
+    assert len(control_rewrites) == 1 + 3 + 24

@@ -12,7 +12,7 @@ from conftest import spark_jobs
 pytestmark = pytest.mark.slow  # lane 2: see pytest.ini
 from pyspark.sql import functions as F
 
-from data_pipeline_001_spark.plans.control_table import ControlTable
+from data_pipeline_001_spark.plans.control_table import STAGES, ControlTable
 from data_pipeline_001_spark.plans.pipeline import PipelineConfig, WindowPipeline
 from data_pipeline_001_spark.sources.file_connectors import (
     DayPartitionedTableSink,
@@ -237,6 +237,76 @@ def test_stage_failure_attributed_to_failing_stage(spark, tmp_path):
     assert "target sink down" in r["pipeline_error_details"]
 
 
+def test_completed_window_records_its_load_before_its_audit(pipe):
+    """The audit's one completing rewrite records the target load too:
+    every stage is completed, and the load ends before the audit
+    starts."""
+    assert pipe.run(DAY, DAY_END).completed == 4
+    for r in pipe.control.read().collect():
+        for stage in STAGES:
+            assert r[f"{stage}_status"] == "completed", stage
+        assert r["completed_stage_number"] == 4
+        assert (
+            r["stage_to_target_start_time"]
+            <= r["stage_to_target_end_time"]
+            <= r["audit_start_time"]
+        )
+
+
+def test_audit_error_fails_the_audit_after_the_load_in_one_rewrite(
+    spark, tmp_path, control_rewrites
+):
+    """A target whose ``count`` raises fails the audit; the same rewrite
+    records the completed load, so the row shows stage 3 done and the
+    audit failed."""
+
+    class UncountableTarget(PartitionedParquetSink):
+        def count(self, start, end):
+            raise RuntimeError("target count down")
+
+    pipe = WindowPipeline(
+        spark,
+        PipelineConfig(pipeline_name="uncountable", granularity="6h", max_pipeline_runs=1),
+        FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts"),
+        PartitionedParquetSink(spark, str(tmp_path / "stage")),
+        UncountableTarget(spark, str(tmp_path / "target")),
+        ControlTable(spark, str(tmp_path / "control")),
+    )
+    pipe.populate(DAY, datetime(2024, 1, 2, 6))
+    (record,), _ = pipe._stage_windows(pipe.pending_records())
+    control_rewrites.clear()
+    assert pipe.run_window(record) == "failed"
+    assert len(control_rewrites) == 1
+    (r,) = pipe.control.read().collect()
+    assert r["stage_to_target_status"] == "completed"
+    assert r["stage_to_target_end_time"] is not None
+    assert r["completed_stage_number"] == 3
+    assert (r["audit_status"], r["audit_start_time"]) == ("pending", None)
+    assert r["pipeline_status"] == "failed"
+    assert "target count down" in r["pipeline_error_details"]
+
+
+def test_window_waiting_for_a_lagging_sink_shows_as_loaded(spark, tmp_path):
+    """On a first audit mismatch the load is recorded before the first
+    wait, so a window that waits for an asynchronous sink never shows
+    as unloaded."""
+    pipe = WindowPipeline(
+        spark,
+        PipelineConfig(pipeline_name="lagging", granularity="6h", max_pipeline_runs=1),
+        FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts"),
+        PartitionedParquetSink(spark, str(tmp_path / "stage")),
+        MockAsyncSink(PartitionedParquetSink(spark, str(tmp_path / "target")), reveal_steps=3),
+        ControlTable(spark, str(tmp_path / "control")),
+    )
+    seen = []
+    pipe._sleep = lambda seconds: seen.append(
+        pipe.control.read().collect()[0]["stage_to_target_status"]
+    )
+    pipe.populate(DAY, datetime(2024, 1, 2, 6))
+    assert pipe.run_window(pipe.pending_records()[0]) == "completed"
+    assert seen and seen[0] == "completed"
+
+
 def test_concurrency_guard_exits(pipe):
     pipe.populate(DAY, DAY_END)
     sid = pipe.control.read().collect()[0]["unique_source_id"]
@@ -370,10 +440,12 @@ def _run_pipe(spark, tmp_path, name, granularity="2h", runs=10, stage=Partitione
     )
 
 
-def test_warm_run_stages_ten_windows_in_one_spark_job(spark, tmp_path):
+def test_warm_run_stages_ten_windows_in_one_spark_job(spark, tmp_path, control_rewrites):
     """Once the source schema is resolved, a ten-window ``run()``
-    launches one Spark job, its stage write, and every window completes
-    and matches."""
+    launches one Spark job, its stage write, and rewrites the control
+    table 13 times: the claim, the discovery counts and the stage
+    completion once each, then one audit per window, which also records
+    the window's load. Every window completes and matches."""
     from datetime import timedelta
 
     pipe = _run_pipe(spark, tmp_path, "run_jobs")
@@ -381,7 +453,9 @@ def test_warm_run_stages_ten_windows_in_one_spark_job(spark, tmp_path):
     pipe.populate(DAY, end)
     assert pipe.run_window(pipe.pending_records()[0]) == "completed"
     results = []
+    control_rewrites.clear()
     assert spark_jobs(spark, lambda: results.append(pipe.run(DAY, end))) == 1
+    assert len(control_rewrites) == 13
     assert (results[0].processed, results[0].completed) == (10, 10)
     rows = pipe.control.read().collect()
     assert len(rows) == 11
